@@ -316,8 +316,9 @@ def flagship_at_scale(spark, n_turns: int = 20_000_000, repeats: int = 3) -> dic
         build_enricher,
         enrich_and_route,
     )
+    from logstash_filter_jdbc_static_spark.sources.transcripts import synth_transcripts
 
-    t = synth_transcripts(spark, n_turns, n_convs=max(n_turns // 200, 1))
+    t = synth_transcripts(spark, n_turns)
     enricher = build_enricher(spark)
     # Steady-state protocol: JIT tiering / GC heap ramp makes each of the
     # first few full-scale runs faster than the last (measured ~25%
@@ -361,43 +362,6 @@ def flagship_at_scale(spark, n_turns: int = 20_000_000, repeats: int = 3) -> dic
     }
 
 
-def synth_transcripts(spark, n_turns: int, n_convs: int):
-    """Deterministic on-the-fly transcript synth (no window/shuffle: the
-    scaling bench must measure the pipeline, not the generator)."""
-    from pyspark.sql import functions as F
-
-    # 4x tasks per core: smooths stragglers on a noisy shared host and
-    # mirrors the real-cluster guidance of 2-4 tasks per executor core
-    n_parts = 4 * int(spark.sparkContext.defaultParallelism)
-    df = spark.range(0, n_turns, numPartitions=n_parts)
-    conv = F.col("id") / F.lit(max(n_turns // n_convs, 1))
-    return df.select(
-        F.concat(F.lit("conv-"), F.lpad(conv.cast("long").cast("string"), 7, "0")).alias("conv_id"),
-        (F.col("id") % (max(n_turns // n_convs, 1))).cast("int").alias("turn_idx"),
-        F.element_at(
-            F.array(F.lit("user"), F.lit("assistant"), F.lit("tool"), F.lit("system")),
-            (F.col("id") % 4 + 1).cast("int"),
-        ).alias("role"),
-        F.when(F.col("id") % 20 == 7, F.lit("status=degraded detail=none"))
-        .otherwise(
-            F.concat(
-                F.lit("call tool="),
-                F.when(F.col("id") % 7 == 3, F.lit("tool_ghost")).otherwise(
-                    F.concat(F.lit("tool_"), (F.col("id") % 6).cast("string"))
-                ),
-                F.lit(" from_ip=10."),
-                (F.col("id") % 4 + 1).cast("string"),
-                F.lit(".1.1 type=batch"),
-            )
-        )
-        .alias("text"),
-        F.when(F.col("id") % 7 == 3, F.lit("tool_ghost"))
-        .otherwise(F.concat(F.lit("tool_"), (F.col("id") % 6).cast("string")))
-        .alias("tool"),
-        F.timestamp_seconds(F.lit(1704067200) + F.col("id") % 86400).alias("ts"),
-    )
-
-
 def scale_one(cpus: int, n_turns: int) -> dict:
     """One timed run of the full pipeline at a given parallelism (fresh
     JVM — invoked as a subprocess so levels can't contaminate each
@@ -412,11 +376,12 @@ def scale_one(cpus: int, n_turns: int) -> dict:
         enrich_and_route,
     )
     from logstash_filter_jdbc_static_spark.session import get_spark
+    from logstash_filter_jdbc_static_spark.sources.transcripts import synth_transcripts
 
     spark = get_spark(
         app_name=f"scaling-{cpus}", master=f"local[{cpus}]", shuffle_partitions=cpus
     )
-    t = synth_transcripts(spark, n_turns, n_convs=max(n_turns // 200, 1))
+    t = synth_transcripts(spark, n_turns)
     enricher = build_enricher(spark)
     # warm-up (codegen + broadcast) on a small slice
     force(sink_counts(enrich_and_route(t.limit(100_000), enricher)))

@@ -18,12 +18,20 @@ generated turns.
 The job splits work into ``--batches`` resumable units by
 ``hash(conv_id) % batches`` — every turn of a conversation lands in the
 same batch, so per-conversation turn ordering never crosses a resume
-boundary. Each batch is written with an idempotent dynamic-partition
-overwrite and logged to the lineage table; a re-run after a crash
-processes only the batches missing from the lineage log (the
-reference's reload counter generalized, single_load_runner.rb:13,23).
+boundary. A run writes every batch still missing from the lineage log
+in ONE pass over the input: one dynamic-partition overwrite fans the
+rows out to their ``batch=<k>/route=<r>`` directories, replacing those
+partitions' files and leaving completed batches untouched; the stats
+pass over the written sinks then logs each written batch to the lineage
+table (the reference's reload counter generalized,
+single_load_runner.rb:13,23). A fresh run and a resume are the same
+path: a resume only filters the input to the pending batches, so it
+reads the input once however many batches it re-runs. The cost of the
+single pass is its granularity: a crash during a run — fresh or resume
+— re-runs every batch that run had pending, since none is logged until
+the whole write commits.
 
-Sinks land under ``<output>/routed/route=<hit|miss|malformed>/batch=<k>``
+Sinks land under ``<output>/routed/batch=<k>/route=<hit|miss|malformed>``
 plus an aggregate table ``<output>/sink_counts`` — the per-sink
 ``groupBy(route, role, tool, conv_bucket).count()`` correctness oracle.
 
@@ -63,6 +71,10 @@ from logstash_filter_jdbc_static_spark.plans.pipeline import (  # noqa: E402
     build_enricher,
     enrich_and_route,
     routed_projection,
+)
+from logstash_filter_jdbc_static_spark.sources.transcripts import (  # noqa: E402
+    derive_transcripts,
+    synth_transcripts,
 )
 
 
@@ -142,7 +154,6 @@ def submit_session(app_name: str = "jdbc-static-enrich") -> SparkSession:
         "spark.sql.adaptive.enabled": "true",
         "spark.sql.adaptive.skewJoin.enabled": "true",
         "spark.sql.session.timeZone": "UTC",
-        "spark.sql.sources.partitionOverwriteMode": "dynamic",
         # Sink codec: measured 40% smaller routed sinks than snappy at
         # equal wall-time on the 20M-turn bench — at 100 TB that is
         # storage + every downstream scan. Overridable via --conf.
@@ -157,10 +168,6 @@ def submit_session(app_name: str = "jdbc-static-enrich") -> SparkSession:
         try:
             if not submitted.contains(k):
                 spark.conf.set(k, v)
-            # partitionOverwriteMode is runtime-settable and required for
-            # idempotent resume — always enforce it.
-            if k == "spark.sql.sources.partitionOverwriteMode":
-                spark.conf.set(k, v)
         except Exception:
             pass
     return spark
@@ -169,8 +176,7 @@ def submit_session(app_name: str = "jdbc-static-enrich") -> SparkSession:
 def load_input(spark: SparkSession, input_arg: str) -> DataFrame:
     """Resolve --input to a transcript DataFrame (see module docstring)."""
     if input_arg.startswith("synth:"):
-        n = int(input_arg.split(":", 1)[1])
-        return _synth(spark, n)
+        return synth_transcripts(spark, int(input_arg.split(":", 1)[1]))
     events_path = input_arg.rstrip("/") + "/events.parquet"
     # Hadoop FS existence check: works for local paths AND cluster URIs
     # (hdfs://, s3a://) — os.path.exists would only see the driver's
@@ -178,10 +184,6 @@ def load_input(spark: SparkSession, input_arg: str) -> DataFrame:
     jpath = spark._jvm.org.apache.hadoop.fs.Path(events_path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     if fs.exists(jpath):
-        from logstash_filter_jdbc_static_spark.sources.transcripts import (
-            derive_transcripts,
-        )
-
         return derive_transcripts(spark.read.parquet(events_path))
     df = spark.read.parquet(input_arg)
     missing = [c for c in TRANSCRIPT_COLS if c not in df.columns]
@@ -191,41 +193,6 @@ def load_input(spark: SparkSession, input_arg: str) -> DataFrame:
             f"expected {TRANSCRIPT_COLS} (BASELINE.json input_hint)"
         )
     return df.select(*TRANSCRIPT_COLS)
-
-
-def _synth(spark: SparkSession, n_turns: int) -> DataFrame:
-    """Deterministic generated transcripts (same shape as bench.py)."""
-    n_parts = 4 * int(spark.sparkContext.defaultParallelism)
-    turns_per_conv = 200
-    df = spark.range(0, n_turns, numPartitions=n_parts)
-    return df.select(
-        F.concat(
-            F.lit("conv-"),
-            F.lpad((F.col("id") / turns_per_conv).cast("long").cast("string"), 7, "0"),
-        ).alias("conv_id"),
-        (F.col("id") % turns_per_conv).cast("int").alias("turn_idx"),
-        F.element_at(
-            F.array(F.lit("user"), F.lit("assistant"), F.lit("tool"), F.lit("system")),
-            (F.col("id") % 4 + 1).cast("int"),
-        ).alias("role"),
-        F.when(F.col("id") % 20 == 7, F.lit("status=degraded detail=none"))
-        .otherwise(
-            F.concat(
-                F.lit("call tool="),
-                F.when(F.col("id") % 7 == 3, F.lit("tool_ghost")).otherwise(
-                    F.concat(F.lit("tool_"), (F.col("id") % 6).cast("string"))
-                ),
-                F.lit(" from_ip=10."),
-                (F.col("id") % 4 + 1).cast("string"),
-                F.lit(".1.1 type=batch"),
-            )
-        )
-        .alias("text"),
-        F.when(F.col("id") % 7 == 3, F.lit("tool_ghost"))
-        .otherwise(F.concat(F.lit("tool_"), (F.col("id") % 6).cast("string")))
-        .alias("tool"),
-        F.timestamp_seconds(F.lit(1704067200) + F.col("id") % 86400).alias("ts"),
-    )
 
 
 def configure_format(spark: SparkSession, table_format: str) -> str:
@@ -272,7 +239,8 @@ def run_job(
     import shutil as _shutil
 
     fmt = configure_format(spark, table_format)
-    # Required for idempotent per-batch overwrite (resume contract).
+    # Required so the routed overwrite replaces only the batch partitions
+    # it writes, never completed ones (resume contract).
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     t0 = time.time()
     transcripts = load_input(spark, input_arg)
@@ -326,69 +294,31 @@ def run_job(
 
     # Batch = hash(conv_id) % batches: conversation-atomic resume units.
     batch_col = F.pmod(F.xxhash64("conv_id"), F.lit(batches)).cast("int")
-    with_batch = transcripts.withColumn("batch", batch_col)
-
     routed_path = os.path.join(output, "routed")
     pending = [b for b in range(batches) if f"batch={b}" not in done]
-    processed: list[str] = []
-
-    def _mark_all(batch_ids: list[int], elapsed_s: float,
-                  by_batch: dict[int, int]) -> None:
-        """Fresh-path marking from the shared stats pass (no extra scan)."""
-        for b in batch_ids:
-            lineage.mark_done(
-                f"batch={b}", by_batch.get(b, 0),
-                metrics={"elapsed_s": round(elapsed_s, 3)},
-            )
-            processed.append(f"batch={b}")
-
-    def _mark_one(b: int, elapsed_s: float) -> None:
-        """Resume-path marking: a partition-pruned count of exactly the
-        batch just written (not a rescan of the whole output)."""
-        n = (
-            spark.read.format(fmt)
-            .load(routed_path)
-            .filter(F.col("batch") == b)
-            .count()
+    if pending:
+        # ONE pass over the input writes every pending batch at once
+        # (dynamic partitioning fans the rows out; completed batches'
+        # partitions are not touched). A resume filters to the pending
+        # batches before parse/enrich; a fresh run reads the input
+        # unfiltered (a filter passing every row would only add a hash per
+        # row). No repartition: a pre-write shuffle of the full
+        # fact table would be the single most expensive operation in the
+        # job at scale.
+        rows = (
+            transcripts
+            if len(pending) == batches
+            else transcripts.filter(batch_col.isin(pending))
         )
-        lineage.mark_done(
-            f"batch={b}", n, metrics={"elapsed_s": round(elapsed_s, 3)}
-        )
-        processed.append(f"batch={b}")
-
-    if len(pending) == batches:
-        # Fresh run: ONE pass over the input writes every batch at once
-        # (dynamic partitioning fans the rows out) — per-batch scans here
-        # would read the full 100 TB input once PER batch. A crash before
-        # the write commits leaves nothing marked done; the rerun takes
-        # this same path and the overwrite is idempotent. No repartition:
-        # a pre-write shuffle of the full fact table would be the single
-        # most expensive operation in the job at scale.
-        routed = enrich_and_route(with_batch.drop("batch"), enricher, parser)
-        out = project(routed).withColumn("batch", batch_col)
+        routed = enrich_and_route(rows, enricher, parser)
         (
-            out.write.mode("overwrite")
+            project(routed).withColumn("batch", batch_col)
+            .write.mode("overwrite")
             .partitionBy("batch", "route")
             .format(fmt)
             .save(routed_path)
         )
-        fresh_elapsed = time.time() - t0
-    else:
-        # Resume: scan only the missing batches (partition-pruned by the
-        # batch filter before parse/enrich), idempotent per-batch
-        # dynamic-partition overwrite.
-        for b in pending:
-            t_batch = time.time()
-            rows = with_batch.filter(F.col("batch") == b)
-            routed = enrich_and_route(rows, enricher, parser)
-            out = project(routed).withColumn("batch", F.lit(b))
-            (
-                out.write.mode("overwrite")
-                .partitionBy("batch", "route")
-                .format(fmt)
-                .save(routed_path)
-            )
-            _mark_one(b, time.time() - t_batch)
+        write_s = time.time() - t0
 
     # ONE stats pass over the written sinks covers every downstream
     # number: per-(batch, route, role, tool, conv_bucket) counts collapse
@@ -414,14 +344,20 @@ def run_job(
     counts.write.mode("overwrite").format(fmt).save(
         os.path.join(output, "sink_counts")
     )
-    if len(pending) == batches:
+    # Lineage marks come from this same pass, after the write committed:
+    # each written batch's count is exactly what is on disk for it.
+    if pending:
         by_batch = {
             r["batch"]: r["n"]
             for r in stats_df.groupBy("batch")
             .agg(F.sum("n_turns").alias("n"))
             .collect()
         }
-        _mark_all(pending, fresh_elapsed, by_batch)
+        for b in pending:
+            lineage.mark_done(
+                f"batch={b}", by_batch.get(b, 0),
+                metrics={"elapsed_s": round(write_s, 3)},
+            )
     route_totals = {
         r["route"]: r["n"]
         for r in stats_df.groupBy("route").agg(F.sum("n_turns").alias("n")).collect()
@@ -443,8 +379,8 @@ def run_job(
         "output": output,
         "format": fmt,
         "batches_total": batches,
-        "batches_processed": len(processed),
-        "batches_skipped": batches - len(processed),
+        "batches_processed": len(pending),
+        "batches_skipped": batches - len(pending),
         "rows_routed": n_rows,
         "route_totals": route_totals,
         "elapsed_s": round(time.time() - t0, 3),

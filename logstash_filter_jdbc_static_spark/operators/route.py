@@ -7,10 +7,11 @@ Tag semantics from the reference drive the routing (SURVEY 2C):
 untagged => hit sink. Precedence failure > default > hit
 (a row that both failed one lookup and defaulted another is malformed).
 
-Physically: one ``route`` label column computed with when/otherwise, then
-either per-route filtered writes (three scans share the same cached stage
-under AQE) or a single partitionBy("route") write — the latter is the
-scale path (one pass, one shuffle-free dynamic-partition write).
+Physically: one ``route`` label column computed with when/otherwise; the
+sinks are the partitions of that column. ``job.run_job`` writes them in
+one pass with ``partitionBy("batch", "route")`` (one shuffle-free
+dynamic-partition write, no per-sink rescan) and streaming's
+``foreachBatch`` appends the same way.
 """
 
 from __future__ import annotations
@@ -50,28 +51,3 @@ def route_label(
 
 def with_route(df: DataFrame, **kwargs) -> DataFrame:
     return df.withColumn(ROUTE_COL, route_label(**kwargs))
-
-
-def write_fanout(
-    df: DataFrame,
-    base_path: str,
-    file_format: str = "parquet",
-    mode: str = "overwrite",
-    extra_partition_cols: list[str] | None = None,
-) -> dict[str, str]:
-    """Single-pass fan-out write: dynamic partitioning on the route label
-    (plus optional time/conv buckets). One job, no per-sink rescan.
-
-    Returns sink name -> path.
-    """
-    part_cols = [ROUTE_COL, *(extra_partition_cols or [])]
-    (
-        df.write.mode(mode)
-        .partitionBy(*part_cols)
-        .format(file_format)
-        .save(base_path)
-    )
-    return {
-        r: f"{base_path}/{ROUTE_COL}={r}"
-        for r in (ROUTE_HIT, ROUTE_MISS, ROUTE_MALFORMED)
-    }

@@ -1,12 +1,12 @@
-"""Checkpoint / resume + lineage metrics (north_rule).
+"""Checkpoint / resume lineage (north_rule).
 
 Generalizes A14's reload counter (single_load_runner.rb:13,23,33-35) to a
-per-partition lineage table: each pipeline run writes, per processed
-input partition, a row (partition_id, run_id, reload_count, n_rows,
-completed_at). Resume = anti-join pending partitions against completed
-lineage, then idempotent overwrite of exactly those output partitions
-(dynamic partitionOverwriteMode) — re-running a partition replaces its
-files instead of duplicating them.
+per-partition lineage table: each completed output partition gets a row
+(partition, run_id, reload_count, n_rows, completed_at). ``job.run_job``
+is its one writer: a run re-processes exactly the batches without a
+``done`` row, in one idempotent dynamic-partition overwrite, and marks
+them from its stats pass over the written sinks — re-running a partition
+replaces its files instead of duplicating them.
 """
 
 from __future__ import annotations
@@ -16,8 +16,6 @@ import os
 import time
 import uuid
 from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, SparkSession, functions as F
 
 
 @dataclass
@@ -54,37 +52,3 @@ class LineageLog:
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         with open(self.path, "a") as fh:
             fh.write(json.dumps(rec) + "\n")
-
-
-def run_partitioned(
-    spark: SparkSession,
-    partitions: list[str],
-    load_partition,  # (partition) -> DataFrame
-    process,  # (DataFrame) -> DataFrame
-    out_path: str,
-    lineage: LineageLog,
-    partition_col: str = "batch_id",
-    reload_count: int = 0,
-) -> list[str]:
-    """Process only partitions not yet in the lineage log; write each with
-    an idempotent per-partition overwrite. Returns partitions processed.
-
-    Crash/resume contract: a partition is either fully written + logged,
-    or will be re-processed (the overwrite makes the re-run idempotent).
-    """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    done = lineage.completed_partitions()
-    processed = []
-    for p in partitions:
-        if p in done:
-            continue
-        df = process(load_partition(p)).withColumn(partition_col, F.lit(p))
-        (
-            df.write.mode("overwrite")
-            .partitionBy(partition_col)
-            .parquet(out_path)
-        )
-        n = spark.read.parquet(out_path).filter(F.col(partition_col) == p).count()
-        lineage.mark_done(p, n, reload_count)
-        processed.append(p)
-    return processed

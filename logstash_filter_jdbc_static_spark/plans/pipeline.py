@@ -60,11 +60,19 @@ def enrich_and_route(
     enricher: LookupEnricher,
     parser: GrokParser | None = None,
 ) -> DataFrame:
-    """parse -> enrich -> tags -> route, no aggregation."""
+    """parse -> enrich -> tags -> route, no aggregation. Routing reads
+    the tags the enricher's lookups were configured to add, so a config
+    with its own ``tag_on_failure`` / ``tag_on_default_use`` routes the
+    same as one with the reference defaults."""
     parser = parser or GrokParser(TRANSCRIPT_GROK, required=["from_ip"])
     parsed = parser.apply(transcripts)
     enriched = enricher.apply(parsed)
-    return with_route(enriched)
+    lookups = enricher.spec.lookups
+    return with_route(
+        enriched,
+        failure_tags=list(dict.fromkeys(t for lk in lookups for t in lk.tag_on_failure)),
+        default_tags=list(dict.fromkeys(t for lk in lookups for t in lk.tag_on_default_use)),
+    )
 
 
 def run_pipeline(

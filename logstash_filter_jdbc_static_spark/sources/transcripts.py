@@ -192,6 +192,46 @@ def load_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _TRANSCRIPT_CACHE[key]
 
 
+def synth_transcripts(spark: SparkSession, n_turns: int) -> DataFrame:
+    """Deterministic generated transcripts of ``n_turns`` turns, 200 per
+    conversation, with the same routing mix as the derived table (for
+    ``job.py --input synth:N`` and the scaling bench). No window or
+    shuffle: a scaling run must measure the pipeline, not the generator."""
+    # 4x tasks per core: smooths stragglers on a noisy shared host and
+    # mirrors the real-cluster guidance of 2-4 tasks per executor core
+    n_parts = 4 * int(spark.sparkContext.defaultParallelism)
+    turns_per_conv = 200
+    df = spark.range(0, n_turns, numPartitions=n_parts)
+    return df.select(
+        F.concat(
+            F.lit("conv-"),
+            F.lpad((F.col("id") / turns_per_conv).cast("long").cast("string"), 7, "0"),
+        ).alias("conv_id"),
+        (F.col("id") % turns_per_conv).cast("int").alias("turn_idx"),
+        F.element_at(
+            F.array(F.lit("user"), F.lit("assistant"), F.lit("tool"), F.lit("system")),
+            (F.col("id") % 4 + 1).cast("int"),
+        ).alias("role"),
+        F.when(F.col("id") % 20 == 7, F.lit("status=degraded detail=none"))
+        .otherwise(
+            F.concat(
+                F.lit("call tool="),
+                F.when(F.col("id") % 7 == 3, F.lit("tool_ghost")).otherwise(
+                    F.concat(F.lit("tool_"), (F.col("id") % 6).cast("string"))
+                ),
+                F.lit(" from_ip=10."),
+                (F.col("id") % 4 + 1).cast("string"),
+                F.lit(".1.1 type=batch"),
+            )
+        )
+        .alias("text"),
+        F.when(F.col("id") % 7 == 3, F.lit("tool_ghost"))
+        .otherwise(F.concat(F.lit("tool_"), (F.col("id") % 6).cast("string")))
+        .alias("tool"),
+        F.timestamp_seconds(F.lit(1704067200) + F.col("id") % 86400).alias("ts"),
+    )
+
+
 def with_ctes(*ctes: str, body: str) -> str:
     """Assemble a WITH query for the DuckDB oracle."""
     return "WITH " + ",\n".join(c.strip() for c in ctes) + "\n" + body

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import subprocess
 import sys
@@ -140,3 +141,68 @@ class TestSparkSubmit:
         os.remove(os.path.join(out_dir, "_job_config.json"))
         with pytest.raises(SystemExit, match="_job_config.json is missing"):
             run_job(spark, "/root/testdata/sf0.001", out_dir, batches=3)
+
+
+def _parquet_files(routed: str, batch: int) -> dict[str, int]:
+    """relative path -> mtime (ns) of every data file of one batch."""
+    base = os.path.join(routed, f"batch={batch}")
+    return {
+        os.path.relpath(os.path.join(d, f), routed): os.stat(os.path.join(d, f)).st_mtime_ns
+        for d, _, names in os.walk(base)
+        for f in names
+        if f.endswith(".parquet")
+    }
+
+
+def _write_ids(files) -> set[str]:
+    """Write-job UUIDs embedded in Spark's part-<task>-<uuid> file names."""
+    return {re.search(r"part-\d+-([0-9a-f-]{36})", f).group(1) for f in files}
+
+
+class TestMultiBatchResume:
+    def test_missing_batches_rewritten_in_one_pass(self, spark, sf_dir, tmp_path):
+        """Two of three batches lost from the lineage: one resume re-runs
+        both in a single write, leaves the completed batch's files alone
+        and logs exactly what it put on disk."""
+        out_dir = str(tmp_path / "out")
+        run_job(spark, sf_dir, out_dir, batches=3)
+        routed = os.path.join(out_dir, "routed")
+        lineage = os.path.join(out_dir, "_lineage.jsonl")
+        with open(lineage) as fh:
+            done = fh.read().splitlines()
+        assert [json.loads(l)["partition"] for l in done] == [
+            "batch=0", "batch=1", "batch=2"
+        ]
+        kept = _parquet_files(routed, 0)
+        assert kept
+        with open(lineage, "w") as fh:
+            fh.write(done[0] + "\n")
+
+        summary = run_job(spark, sf_dir, out_dir, batches=3)
+        assert summary["batches_processed"] == 2
+        assert summary["batches_skipped"] == 1
+        # The completed batch was not rewritten.
+        assert _parquet_files(routed, 0) == kept
+        # Both missing batches came from ONE write job.
+        rerun_ids = _write_ids(
+            list(_parquet_files(routed, 1)) + list(_parquet_files(routed, 2))
+        )
+        assert len(rerun_ids) == 1
+        assert rerun_ids.isdisjoint(_write_ids(kept))
+        # Lineage n_rows of each re-run batch == its on-disk count.
+        on_disk = {
+            r["batch"]: r["count"]
+            for r in spark.read.parquet(routed).groupBy("batch").count().collect()
+        }
+        with open(lineage) as fh:
+            recs = [json.loads(l) for l in fh.read().splitlines()]
+        rerun = {
+            r["partition"]: r["n_rows"] for r in recs
+            if r["run_id"] == summary["run_id"]
+        }
+        assert rerun == {"batch=1": on_disk[1], "batch=2": on_disk[2]}
+        # No duplicate rows after the resume.
+        assert summary["rows_routed"] == 1000
+        assert summary["route_totals"] == {"hit": 650, "miss": 300, "malformed": 50}
+        out = spark.read.parquet(routed)
+        assert out.count() == out.select("conv_id", "turn_idx").distinct().count() == 1000

@@ -7,12 +7,18 @@ from __future__ import annotations
 import duckdb
 import pytest
 
+from logstash_filter_jdbc_static_spark.operators.processor import LookupEnricher
 from logstash_filter_jdbc_static_spark.plans.pipeline import (
+    enrich_and_route,
     routed_projection,
     run_pipeline,
 )
 from logstash_filter_jdbc_static_spark.queries import ORACLES
-from logstash_filter_jdbc_static_spark.sources.transcripts import load_transcripts
+from logstash_filter_jdbc_static_spark.sources.transcripts import (
+    SERVERS_SCHEMA,
+    load_transcripts,
+)
+from logstash_filter_jdbc_static_spark.spec import PipelineSpec
 
 
 @pytest.fixture(scope="module")
@@ -73,15 +79,34 @@ class TestOracleParity:
         assert got == exp
 
 
-class TestFanOutWrite:
-    def test_single_pass_partitioned_sinks(self, spark, routed_and_counts, tmp_path):
-        from logstash_filter_jdbc_static_spark.operators.route import write_fanout
-
-        routed, _ = routed_and_counts
-        sinks = write_fanout(routed.drop("server", "toolinfo", "tags"),
-                             str(tmp_path / "sinks"))
-        assert set(sinks) == {"hit", "miss", "malformed"}
-        hit = spark.read.parquet(sinks["hit"])
-        assert hit.count() == 650
-        total = spark.read.parquet(str(tmp_path / "sinks")).count()
-        assert total == 1000
+class TestConfiguredTagRouting:
+    def test_custom_tags_drive_routes(self, spark):
+        """A config's own tag_on_failure / tag_on_default_use decide the
+        route, not the reference's default tag names."""
+        spec = PipelineSpec.from_json({
+            "local_lookups": [{
+                "id": "server",
+                "query": "SELECT name FROM servers WHERE ip = :ip",
+                "parameters": {"ip": "from_ip"},
+                "default_hash": {"name": "unknown"},
+            }],
+            "tag_on_failure": ["_bad"],
+            "tag_on_default_use": ["_dflt"],
+        })
+        dims = {"servers": spark.createDataFrame(
+            [("10.1.1.1", "web-1", "L1")], SERVERS_SCHEMA)}
+        facts = spark.createDataFrame(
+            [
+                ("c1", 0, "call from_ip=10.1.1.1"),  # hit
+                ("c1", 1, "call from_ip=10.9.9.9"),  # miss -> default_hash
+                ("c1", 2, "status=degraded"),  # no from_ip -> failure
+            ],
+            "conv_id string, turn_idx int, text string",
+        )
+        rows = enrich_and_route(facts, LookupEnricher(spec, dims)).collect()
+        got = {r["turn_idx"]: (list(r["tags"]), r["route"]) for r in rows}
+        assert got == {
+            0: ([], "hit"),
+            1: (["_dflt"], "miss"),
+            2: (["_bad"], "malformed"),
+        }

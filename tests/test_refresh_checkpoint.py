@@ -1,14 +1,10 @@
 """Reload semantics (≅ jdbc_static_spec.rb:141-158, invoked directly per
-SURVEY §7.5) + max_rows guard + checkpoint/resume lineage."""
+SURVEY §7.5) + max_rows guard + reload error handling. Checkpoint/resume
+lineage is tested through the job itself in test_job_submit.py."""
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import functions as F
-
 from logstash_filter_jdbc_static_spark.operators.processor import LookupEnricher
-from logstash_filter_jdbc_static_spark.plans.checkpoint import LineageLog, run_partitioned
 from logstash_filter_jdbc_static_spark.plans.refresh import DimensionStore
 from logstash_filter_jdbc_static_spark.sources.transcripts import SERVERS_SCHEMA
 from logstash_filter_jdbc_static_spark.spec import (
@@ -96,31 +92,6 @@ class TestReload:
         store.snapshots["keepme"] = spark.createDataFrame([("x",)], obj.schema)
         store.initial_load()
         assert store.dims()["keepme"].count() == 1  # not clobbered
-
-
-class TestCheckpointResume:
-    def test_resume_skips_completed_partitions(self, spark, tmp_path):
-        lineage = LineageLog(str(tmp_path / "lineage.jsonl"))
-        out = str(tmp_path / "out")
-        calls = []
-
-        def load(p):
-            calls.append(p)
-            return spark.range(5).withColumn("v", F.col("id") * 2)
-
-        def process(df):
-            return df.filter(F.col("id") < 3)
-
-        done = run_partitioned(spark, ["p1", "p2"], load, process, out, lineage)
-        assert done == ["p1", "p2"]
-        # resume: nothing reprocessed
-        lineage2 = LineageLog(str(tmp_path / "lineage.jsonl"))
-        done2 = run_partitioned(spark, ["p1", "p2", "p3"], load, process, out, lineage2)
-        assert done2 == ["p3"]
-        assert calls == ["p1", "p2", "p3"]
-        df = spark.read.parquet(out)
-        assert df.count() == 9  # 3 rows x 3 partitions, no duplicates
-        assert os.path.exists(lineage.path)
 
 
 class TestReloadErrorSwallow:
