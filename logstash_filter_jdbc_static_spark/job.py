@@ -344,26 +344,26 @@ def run_job(
     counts.write.mode("overwrite").format(fmt).save(
         os.path.join(output, "sink_counts")
     )
-    # Lineage marks come from this same pass, after the write committed:
-    # each written batch's count is exactly what is on disk for it.
-    if pending:
-        by_batch = {
-            r["batch"]: r["n"]
-            for r in stats_df.groupBy("batch")
-            .agg(F.sum("n_turns").alias("n"))
-            .collect()
-        }
-        for b in pending:
-            lineage.mark_done(
-                f"batch={b}", by_batch.get(b, 0),
-                metrics={"elapsed_s": round(write_s, 3)},
-            )
-    route_totals = {
-        r["route"]: r["n"]
-        for r in stats_df.groupBy("route").agg(F.sum("n_turns").alias("n")).collect()
-    }
+    # ONE collect of the per-(batch, route) sums (<= batches x 3 rows)
+    # gives both driver-side summaries.
+    by_batch: dict[int, int] = {}
+    route_totals: dict[str, int] = {}
+    for r in (
+        stats_df.groupBy("batch", "route")
+        .agg(F.sum("n_turns").alias("n"))
+        .collect()
+    ):
+        by_batch[r["batch"]] = by_batch.get(r["batch"], 0) + r["n"]
+        route_totals[r["route"]] = route_totals.get(r["route"], 0) + r["n"]
     n_rows = sum(route_totals.values())
     stats_df.unpersist()
+    # Lineage marks come from this same pass, after the write committed:
+    # each written batch's count is exactly what is on disk for it.
+    for b in pending:
+        lineage.mark_done(
+            f"batch={b}", by_batch.get(b, 0),
+            metrics={"elapsed_s": round(write_s, 3)},
+        )
     compacted = {}
     if compact:
         if fmt != "parquet":

@@ -6425,6 +6425,25 @@ class CompiledLookup:
 
     # ---- physical strategies ----------------------------------------
     def _grouped_dim(self) -> tuple[DataFrame, list[str]]:
+        """Equi path: the key-grouped dim, pinned on first use — the
+        reference builds its lookup-column index once per load
+        (db_object.rb:19) and every event probes it until the next
+        reload. A CompiledLookup is built per dim snapshot, so the pin
+        never outlives its snapshot; the blocks are freed with it.
+
+        The checkpoint is lazy: under AQE the first apply runs only the
+        grouping's shuffle-map stage and the first action over the
+        lookup materializes the grouped blocks, so a one-shot query pays
+        no extra job; every later apply reads the pinned frame instead
+        of shuffling and regrouping the whole dim again."""
+        if not hasattr(self, "_grouped_cache"):
+            grouped, key_names = self._build_grouped_dim()
+            self._grouped_cache = (
+                grouped.localCheckpoint(eager=False), key_names
+            )
+        return self._grouped_cache
+
+    def _build_grouped_dim(self) -> tuple[DataFrame, list[str]]:
         """Equi path: dim grouped by key -> one array<struct> per key.
         Static predicates of any op pre-filter the dim (the single
         conjunction guaranteed by is_pure_equi)."""
@@ -6513,7 +6532,11 @@ class CompiledLookup:
         broadcast vs shuffle map-back — one extra pass over ``fact``'s
         lineage per apply(). Callers looping apply() over an expensive
         uncached fact should either cache the fact or pin the strategy
-        explicitly."""
+        explicitly. (c) The first apply of an equi lookup runs the dim
+        grouping's shuffle stage and pins the grouped dim
+        (``_grouped_dim``); later applies of the same compiled lookup run
+        no job. The inline path's literal dim array is likewise collected
+        once, on the first apply."""
         params = self._param_cols(fact.schema)
         valid = self._validity(params)
         sid = self.spec.id
@@ -6784,7 +6807,13 @@ class CompiledLookup:
         return joined.withColumnRenamed("__payload", "__raw_payload").drop(*drop_cols)
 
     def _dim_literal_array(self) -> Column:
-        """Inline the (small) dim as a literal array<struct> expression."""
+        """Inline the (small) dim as a literal array<struct> expression,
+        collected once per compiled snapshot (like ``_grouped_dim``)."""
+        if not hasattr(self, "_literal_array_cache"):
+            self._literal_array_cache = self._build_dim_literal_array()
+        return self._literal_array_cache
+
+    def _build_dim_literal_array(self) -> Column:
         rows = self.dim_df.collect()
         structs = []
         dim_fields = [(f.name, f.dataType) for f in self.dim_df.schema.fields]
@@ -6910,8 +6939,18 @@ class CompiledLookup:
             c = _native_agg(
                 func, None if col is None else field_of(col), star
             )
-            out.append(c.cast(t).alias(alias))
+            out.append(self._with_agg_empty(c, alias).cast(t).alias(alias))
         return out
+
+    def _with_agg_empty(self, agg: Column, alias: str) -> Column:
+        """A projected-subquery carrier (``max(__psq{n})``) over an empty
+        match set still yields the subquery's snapshot literal — SQL
+        evaluates the subquery over zero rows; over a non-empty set
+        max() already equals that constant, so coalesce is exact."""
+        for a, v in self.query.agg_empty:
+            if a == alias and v is not None:
+                return F.coalesce(agg, F.lit(v))
+        return agg
 
     def _agg_payload_from_array(self, matched: Column) -> Column:
         """The whole-match-set aggregate payload (no GROUP BY): one
@@ -6965,7 +7004,7 @@ class CompiledLookup:
                         F.aggregate(vals, F.lit(0.0), _summer("double"))
                         / F.size(vals)
                     )
-            cols.append(c.cast(t).alias(alias))
+            cols.append(self._with_agg_empty(c, alias).cast(t).alias(alias))
         return cols
 
     def _group_payload_from_array(self, matched: Column) -> Column:

@@ -193,12 +193,19 @@ class TestJoinGoldenE2E:
         spec = PipelineSpec(
             lookups=[{"id": "geo", "query": _GEO_Q, "parameters": {"k": "nkey"}}]
         )
-        out = LookupEnricher(
+        enr = LookupEnricher(
             spec, {"nation": nation, "region": region}, inline_threshold=0
-        ).apply(fact)
+        )
+        out = enr.apply(fact)
         plan = out._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("BroadcastHashJoin") == 2  # dim⋈dim + fact⋈dim
+        # fact⋈dim probes the key-grouped dim pinned on the first apply;
+        # dim⋈dim runs inside that grouping, once per snapshot
+        assert plan.count("BroadcastHashJoin") == 1
         assert "SortMergeJoin" not in plan
+        grouped, _ = enr.compiled[0]._build_grouped_dim()
+        dim_plan = grouped._jdf.queryExecution().executedPlan().toString()
+        assert dim_plan.count("BroadcastHashJoin") == 1
+        assert "SortMergeJoin" not in dim_plan
 
 
 class TestJoinRowOracle:

@@ -682,6 +682,18 @@ class TestGlobalAggregate:
         assert got["t1"] == [(2, 1)]     # (n, mn) — written order
         assert got["t0"] == [(0, 1)]
 
+    def test_literal_carried_through_non_equi_empty_set(self, spark, kw):
+        # a theta predicate takes the inline / map-probe path, whose
+        # aggregate over an empty match set is computed, not substituted
+        got = self._run(
+            spark,
+            "SELECT count(*) AS n, (SELECT max(price) FROM plans) AS mx "
+            "FROM plans WHERE tool <> :tool AND price > 9",
+            kw,
+        )
+        assert got["t1"] == [(0, 10)]   # the one price > 9 row is t1's
+        assert got["t0"] == [(1, 10)]
+
     def test_union_branches_each_carry_their_literal(self, spark, kw):
         got = self._run(
             spark,

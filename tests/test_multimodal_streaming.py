@@ -81,6 +81,42 @@ class TestStreaming:
         q2.awaitTermination(120)
         assert spark.read.parquet(sink).count() == n1 == 1000
 
+    def test_default_path_builds_enricher_once(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
+        """Without a refresh seam the dims are static: one enricher
+        serves every micro-batch of the query, and the sink holds the
+        same per-route counts as the batch path over the same files."""
+        from logstash_filter_jdbc_static_spark.plans.pipeline import (
+            build_enricher,
+            enrich_and_route,
+        )
+        from logstash_filter_jdbc_static_spark.streaming import stream_pipeline
+
+        src = str(tmp_path / "src4")
+        sink = str(tmp_path / "sink4")
+        ckpt = str(tmp_path / "ckpt4")
+        # 10 files at the default 8 files per trigger: two micro-batches
+        load_transcripts(spark, sf_dir).repartition(10).write.parquet(src)
+        calls = {"n": 0}
+
+        def counting_build_enricher(*args, **kwargs):
+            calls["n"] += 1
+            return build_enricher(*args, **kwargs)
+
+        monkeypatch.setattr(
+            stream_pipeline, "build_enricher", counting_build_enricher
+        )
+        q = start_pipeline_stream(spark, src, sink, ckpt)
+        q.awaitTermination(120)
+        out = spark.read.parquet(sink)
+        assert out.select("batch_id").distinct().count() >= 2
+        assert calls["n"] == 1
+        got = {r["route"]: r["count"] for r in out.groupBy("route").count().collect()}
+        batch = enrich_and_route(spark.read.parquet(src), build_enricher(spark))
+        want = {r["route"]: r["count"] for r in batch.groupBy("route").count().collect()}
+        assert got == want
+
     def test_scheduled_refresh_seam_sees_reloaded_dim(self, spark, sf_dir, tmp_path):
         """loader_schedule drives a background reload between micro-batch
         runs; the second stream run enriches with the RELOADED snapshot

@@ -624,3 +624,158 @@ class TestUnionLookupPlan:
             assert s.startswith("tool#"), (s, plan)
             for fact_col in ("conv_id", "turn_idx", "t#"):
                 assert fact_col not in s, (s, plan)
+
+
+class TestSnapshotPin:
+    """A compiled lookup prepares its dim side once per snapshot: the
+    equi path's key-grouped dim is pinned on the first apply and the
+    inline path's literal dim array is collected once, so every later
+    apply (each streaming micro-batch until the next reload) only probes.
+    """
+
+    @staticmethod
+    def _jobs(spark) -> int:
+        return len(spark.sparkContext.statusTracker().getJobIdsForGroup(None))
+
+    @staticmethod
+    def _parsed_fact(spark):
+        from logstash_filter_jdbc_static_spark.operators.parse import GrokParser
+        from logstash_filter_jdbc_static_spark.plans.pipeline import (
+            TRANSCRIPT_GROK,
+        )
+
+        rows = [
+            ("c1", 0, "user", "call from_ip=10.1.1.1", "tool_0"),
+            ("c1", 1, "tool", "call from_ip=10.9.9.9", "tool_ghost"),
+            ("c2", 0, "assistant", "no address here", "tool_1"),
+        ]
+        fact = spark.createDataFrame(
+            rows, "conv_id string, turn_idx int, role string, text string, tool string"
+        )
+        return GrokParser(TRANSCRIPT_GROK, required=["from_ip"]).apply(fact)
+
+    def test_second_equi_apply_reads_pinned_grouping(self, spark):
+        from logstash_filter_jdbc_static_spark.plans.pipeline import build_enricher
+
+        enricher = build_enricher(spark)
+        fact = self._parsed_fact(spark)
+        first = enricher.apply(fact)
+        want = sorted(
+            (r["conv_id"], r["turn_idx"], str(r["server"]), str(r["toolinfo"]))
+            for r in first.collect()
+        )
+        before = self._jobs(spark)
+        second = enricher.apply(fact)
+        assert self._jobs(spark) == before, "second apply ran a Spark job"
+        plan = _plan(second, "simple")
+        assert plan.count("BroadcastHashJoin") == 2, plan
+        # the fact here never shuffles, so any hash exchange would be a
+        # dim regrouping
+        assert not re.search(r"(?<!Broadcast)Exchange hashpartitioning", plan), plan
+        got = sorted(
+            (r["conv_id"], r["turn_idx"], str(r["server"]), str(r["toolinfo"]))
+            for r in second.collect()
+        )
+        assert got == want
+
+    def test_pin_is_per_snapshot(self, spark):
+        from logstash_filter_jdbc_static_spark.operators.processor import (
+            LookupEnricher,
+        )
+        from logstash_filter_jdbc_static_spark.plans.refresh import DimensionStore
+        from logstash_filter_jdbc_static_spark.sources.transcripts import (
+            SERVERS_SCHEMA,
+        )
+        from logstash_filter_jdbc_static_spark.spec import (
+            LoaderSpec,
+            LocalDbObject,
+            PipelineSpec,
+        )
+
+        calls = {"n": 0}
+
+        def fetch():
+            calls["n"] += 1
+            return spark.createDataFrame(
+                [("10.1.1.1", f"v{calls['n']}", "L")], SERVERS_SCHEMA
+            )
+
+        store = DimensionStore(
+            spark,
+            [LocalDbObject({"name": "servers",
+                            "columns": [["ip", "varchar(64)"],
+                                        ["name", "varchar(64)"],
+                                        ["location", "varchar(64)"]]})],
+            [(LoaderSpec({"local_table": "servers", "query": "q"}), fetch)],
+        )
+        spec = PipelineSpec(
+            lookups=[
+                {
+                    "id": "server",
+                    "query": "SELECT name FROM servers WHERE ip = :ip",
+                    "parameters": {"ip": "from_ip"},
+                }
+            ]
+        )
+        fact = self._parsed_fact(spark)
+
+        def names(enricher):
+            return {
+                r["server"][0]["name"]
+                for r in enricher.apply(fact).collect()
+                if r["server"]
+            }
+
+        store.initial_load()
+        a = LookupEnricher(spec, store.dims())
+        assert names(a) == {"v1"}
+        store.refresh()
+        b = LookupEnricher(spec, store.dims())
+        assert [names(a), names(b), names(a), names(b)] == [
+            {"v1"}, {"v2"}, {"v1"}, {"v2"},
+        ]
+        # both snapshots are served from pins, not by regrouping
+        for enricher in (a, b):
+            plan = _plan(enricher.apply(fact), "simple")
+            assert not re.search(
+                r"(?<!Broadcast)Exchange hashpartitioning", plan
+            ), plan
+
+    def test_second_inline_apply_runs_no_job(self, spark):
+        from pyspark.sql import functions as F
+
+        from logstash_filter_jdbc_static_spark.operators.lookup import (
+            DEFAULT_INLINE_THRESHOLD,
+        )
+        from logstash_filter_jdbc_static_spark.operators.processor import (
+            LookupEnricher,
+        )
+        from logstash_filter_jdbc_static_spark.spec import PipelineSpec
+
+        n_dim = 50
+        assert n_dim < DEFAULT_INLINE_THRESHOLD
+        dim = spark.range(n_dim).select(
+            F.col("id").cast("string").alias("ip"),
+            F.concat(F.lit("s"), F.col("id").cast("string")).alias("name"),
+        )
+        spec = PipelineSpec(
+            lookups=[
+                {
+                    "id": "server",
+                    "query": "SELECT name FROM servers WHERE ip LIKE :pat",
+                    "parameters": {"pat": "%{tool}%"},
+                }
+            ]
+        )
+        fact = spark.range(100).select(
+            F.lit("c").alias("conv_id"),
+            F.col("id").cast("int").alias("turn_idx"),
+            F.col("id").cast("string").alias("tool"),
+        )
+        enr = LookupEnricher(spec, {"servers": dim}, dim_rows={"servers": n_dim})
+        first = enr.apply(fact)
+        before = self._jobs(spark)
+        second = enr.apply(fact)
+        assert self._jobs(spark) == before, "second inline apply ran a Spark job"
+        assert "Join" not in _plan(second, "simple")
+        assert sorted(map(str, first.collect())) == sorted(map(str, second.collect()))

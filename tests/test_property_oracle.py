@@ -910,8 +910,10 @@ def test_setops_and_derived_match_row_at_a_time_oracle(
     def norm(payload):
         if payload is None:
             return None
+        # key=repr: a field may hold NULL in one row and a value in
+        # another, which plain tuple comparison cannot order
         return sorted(
-            tuple(sorted(d.items())) for d in payload
+            (tuple(sorted(d.items())) for d in payload), key=repr
         )
 
     got = {
