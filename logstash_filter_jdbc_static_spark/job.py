@@ -93,7 +93,11 @@ def build_configured_pipeline(spark: SparkSession, pipeline):
     from logstash_filter_jdbc_static_spark.sources.jdbc import make_fetcher
     from logstash_filter_jdbc_static_spark.spec import PipelineSpec
 
-    cfg = pipeline if isinstance(pipeline, dict) else _json.load(open(pipeline))
+    if isinstance(pipeline, dict):
+        cfg = pipeline
+    else:
+        with open(pipeline) as f:
+            cfg = _json.load(f)
     spec = PipelineSpec.from_json(cfg)
     store = DimensionStore(
         spark,
@@ -101,10 +105,9 @@ def build_configured_pipeline(spark: SparkSession, pipeline):
         [(ld, make_fetcher(spark, ld)) for ld in spec.loaders],
     )
     store.initial_load()
-    dims, dim_rows = store.dims_and_rows()
-    # engine knobs (spec.inline_threshold / spec.pattern_strategy) are
-    # inherited by LookupEnricher from the spec itself
-    enricher = LookupEnricher(spec, dims, dim_rows=dim_rows)
+    # the engine knob (spec.pattern_strategy) is inherited by
+    # LookupEnricher from the spec itself
+    enricher = LookupEnricher(spec, store.dims())
     parser = GrokParser(
         cfg.get("grok", TRANSCRIPT_GROK),
         required=cfg.get("grok_required", ["from_ip"]),
@@ -270,7 +273,8 @@ def run_job(
     # rows) and report wrong counts with exit code 0. Refuse instead.
     cfg_path = os.path.join(output, "_job_config.json")
     if done and os.path.exists(cfg_path):
-        prior = json.load(open(cfg_path))
+        with open(cfg_path) as f:
+            prior = json.load(f)
         if prior.get("batches") != batches:
             raise SystemExit(
                 f"resume with --batches {batches} but {cfg_path} records "

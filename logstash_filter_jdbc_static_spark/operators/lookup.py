@@ -25,12 +25,10 @@ Spark-first physical design (NOT a port of the Derby execution path):
   LEFT-joined with an explicit ``F.broadcast`` hint.  The fact side never
   shuffles, never fans out, and needs no regroup — this is the 100 TB
   path.  The dim-side groupBy is bounded by ``max_rows`` (loader.rb:73).
-- **Pattern/theta lookups** (``WHERE k LIKE :p``, other non-equi ops):
-  if the dim is small (<= ``inline_threshold`` rows) the whole dimension
-  is inlined as a literal array-of-structs expression and the lookup
-  becomes ``F.filter(dim_array, r -> predicate)`` — a pure projection
-  inside whole-stage codegen, zero joins, zero shuffles.  Larger dims
-  are probed per DISTINCT parameter tuple: the slim tuple projection is
+- **Pattern/theta lookups** (``WHERE k LIKE :p``, other non-equi ops),
+  whatever the dim's size, are probed per DISTINCT parameter tuple —
+  one prepared-statement path, as the reference runs every lookup
+  against its Derby table (lookup.rb:131-156): the slim tuple projection is
   ``distinct()``-ed (the only shuffle, a few small columns), theta-joined
   once against the broadcast dim, aggregated into a tuple->payload map,
   and the map is broadcast back onto the untouched fact with a null-safe
@@ -42,13 +40,14 @@ Spark-first physical design (NOT a port of the Derby execution path):
   table scan is; ``pattern_strategy="shuffle_map"`` covers the
   adversarial near-unique-tuple case (map too big to broadcast) by
   joining the map back on its shuffle keys instead, and ``"auto"``
-  chooses via an approx-distinct pre-flight over the tuple projection.
+  chooses by an exact ``count()`` of the ``localCheckpoint``-ed distinct
+  tuple frame, which the probe then reuses.
 - **WHERE surface** (round 3): the reference hands lookup SQL verbatim
   to Derby (lookup.rb:131-147), so ``parse_lookup_query`` accepts the
   full single-table predicate grammar — comparison ops, ``[NOT] LIKE``
   / ``IN`` / ``BETWEEN``, ``IS [NOT] NULL``, AND/OR/parens, optional
   ``func(col)`` lhs wrappers and table-qualified columns — normalized
-  to OR-of-conjunctions and compiled onto the same three paths (exact
+  to OR-of-conjunctions and compiled onto the same two paths (exact
   grammar + physical mapping: COVERAGE.md §2B), plus the result-shape
   tail — ``SELECT DISTINCT``, ``ORDER BY`` (Derby null-largest
   semantics, sort keys need not be projected), ``LIMIT`` / ``FETCH
@@ -69,12 +68,11 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from logstash_filter_jdbc_static_spark.operators import sqlexpr
 from logstash_filter_jdbc_static_spark.spec import (
+    PATTERN_STRATEGIES,
     LookupSpec,
     ValidationError,
     is_sprintf,
 )
-
-DEFAULT_INLINE_THRESHOLD = 1024
 
 _FIELD_REF_RE = re.compile(r"\[([^\]]+)\]")
 _SPRINTF_SPLIT_RE = re.compile(r"(%\{[^}]+\})")
@@ -5759,8 +5757,8 @@ def build_join_dim(
 ) -> tuple[DataFrame, ParsedQuery]:
     """Pre-join a multi-table lookup's dimension tables into ONE derived
     dimension DataFrame and rewrite the query onto flat column names, so
-    the single-table compile machinery (broadcast-hash / inline literal
-    / map-probe) applies unchanged.
+    the single-table compile machinery (broadcast-hash / map-probe)
+    applies unchanged.
 
     Scale shape: the join runs once per refresh snapshot over dim-sized
     inputs — the per-event cost model is identical to a single dim
@@ -6065,9 +6063,6 @@ class CompiledLookup:
         self,
         spec: LookupSpec,
         dim_df: DataFrame,
-        inline_threshold: int = DEFAULT_INLINE_THRESHOLD,
-        row_key: list[str] = ("conv_id", "turn_idx"),
-        dim_rows: int | None = None,
         pattern_strategy: str = "broadcast_map",
         parsed_query: ParsedQuery | None = None,
     ):
@@ -6114,19 +6109,12 @@ class CompiledLookup:
                 dim_df = dim_df.withColumn(cname, sqlexpr.compile_expr(ast))
                 names.add(cname)
         self.dim_df = dim_df
-        self.inline_threshold = inline_threshold
-        self.row_key = list(row_key)
-        if pattern_strategy not in ("broadcast_map", "shuffle_map", "auto"):
+        if pattern_strategy not in PATTERN_STRATEGIES:
             raise ValidationError(
                 [f"lookup '{spec.id}': unknown pattern_strategy "
-                 f"{pattern_strategy!r} (broadcast_map | shuffle_map | auto)"]
+                 f"{pattern_strategy!r} ({' | '.join(PATTERN_STRATEGIES)})"]
             )
         self.pattern_strategy = pattern_strategy
-        if dim_rows is not None:
-            # The A2 guard (fetch_with_guard) already counted the pinned
-            # snapshot; reuse it instead of re-firing an eager count()
-            # during plan construction.
-            self._dim_count_cache = dim_rows
         # Resolve projection against the dim schema.
         dim_fields = {f.name: f.dataType for f in dim_df.schema.fields}
         if self.query.aggregates or self.query.group_by:
@@ -6406,9 +6394,9 @@ class CompiledLookup:
     def _dnf_condition(self, lhs_for, rhs_for, indexed=None) -> Column:
         """OR over disjuncts of AND over predicates. ``lhs_for(p)`` and
         ``rhs_for(flat_idx, p) -> list[Column]`` supply the operands, so
-        the same normalized WHERE drives the dim filter, the inline
-        array filter, the map-probe join condition, and (via
-        ``indexed``) the HAVING payload filter."""
+        the same normalized WHERE drives the dim filter, the map-probe
+        join condition, and (via ``indexed``) the HAVING payload
+        filter."""
         parts: list[Column] = []
         for d in (self._indexed_disjuncts() if indexed is None else indexed):
             c: Column | None = None
@@ -6524,19 +6512,18 @@ class CompiledLookup:
     def apply(self, fact: DataFrame) -> DataFrame:
         """Enrich ``fact`` with this lookup's target + status columns.
 
-        Laziness contract: plan construction is lazy EXCEPT (a) the
-        inline-threshold dim count (a one-off over the small pinned dim
-        snapshot, cached) and (b) ``pattern_strategy="auto"`` on the
-        map-probe path, which eagerly materializes the slim distinct
-        parameter-tuple frame (localCheckpoint + exact count) to decide
-        broadcast vs shuffle map-back — one extra pass over ``fact``'s
-        lineage per apply(). Callers looping apply() over an expensive
-        uncached fact should either cache the fact or pin the strategy
-        explicitly. (c) The first apply of an equi lookup runs the dim
-        grouping's shuffle stage and pins the grouped dim
-        (``_grouped_dim``); later applies of the same compiled lookup run
-        no job. The inline path's literal dim array is likewise collected
-        once, on the first apply."""
+        Laziness contract: plan construction is lazy EXCEPT (a)
+        ``pattern_strategy="auto"`` on the map-probe path, which eagerly
+        materializes the slim distinct parameter-tuple frame
+        (localCheckpoint + exact count) to decide broadcast vs shuffle
+        map-back — one extra pass over ``fact``'s lineage per apply().
+        A THETA-parameterized subquery (``_ThetaParamFrame.build``)
+        materializes its per-tuple frame the same way under every
+        strategy. Callers looping apply() over an expensive uncached fact should
+        either cache the fact or pin the strategy explicitly. (b) The
+        first apply of an equi lookup runs the dim grouping's shuffle
+        stage and pins the grouped dim (``_grouped_dim``); later applies
+        of the same compiled lookup run no job."""
         params = self._param_cols(fact.schema)
         valid = self._validity(params)
         sid = self.spec.id
@@ -6714,13 +6701,6 @@ class CompiledLookup:
             fact, params, drops = self._attach_param_subs(fact, params)
         if self.query.is_pure_equi:
             out = self._apply_equi(fact, params)
-        elif (
-            self.inline_threshold > 0
-            and self._dim_count() <= self.inline_threshold
-        ):
-            # threshold 0 pins the map-probe path WITHOUT paying the
-            # eager dim count the comparison would otherwise need
-            out = self._apply_inline(fact, params)
         else:
             out = self._apply_bnlj(fact, params)
         if self.query.psq_params:
@@ -6768,11 +6748,6 @@ class CompiledLookup:
             ),
         )
 
-    def _dim_count(self) -> int:
-        if not hasattr(self, "_dim_count_cache"):
-            self._dim_count_cache = self.dim_df.count()
-        return self._dim_count_cache
-
     def _apply_equi(self, fact: DataFrame, params: dict[str, BoundParam]) -> DataFrame:
         """Broadcast hash equi-join against the key-grouped dim — the
         index-backed point lookup (db_object.rb:19) done set-at-a-time."""
@@ -6805,31 +6780,6 @@ class CompiledLookup:
         drop_cols = [f"__k{i}" for i, p in enumerate(preds) if not p.is_static]
         drop_cols += [c for c in with_keys.columns if c.startswith(f"__fk_{self.spec.id}_")]
         return joined.withColumnRenamed("__payload", "__raw_payload").drop(*drop_cols)
-
-    def _dim_literal_array(self) -> Column:
-        """Inline the (small) dim as a literal array<struct> expression,
-        collected once per compiled snapshot (like ``_grouped_dim``)."""
-        if not hasattr(self, "_literal_array_cache"):
-            self._literal_array_cache = self._build_dim_literal_array()
-        return self._literal_array_cache
-
-    def _build_dim_literal_array(self) -> Column:
-        rows = self.dim_df.collect()
-        structs = []
-        dim_fields = [(f.name, f.dataType) for f in self.dim_df.schema.fields]
-        for r in rows:
-            structs.append(
-                F.struct(
-                    *[F.lit(r[n]).cast(dt).alias(n) for n, dt in dim_fields]
-                )
-            )
-        if not structs:
-            return F.array().cast(
-                T.ArrayType(T.StructType(
-                    [T.StructField(n, dt, True) for n, dt in dim_fields]
-                ))
-            )
-        return F.array(*structs)
 
     def _project_struct(self, row: Column) -> Column:
         return F.struct(
@@ -6952,91 +6902,6 @@ class CompiledLookup:
                 return F.coalesce(agg, F.lit(v))
         return agg
 
-    def _agg_payload_from_array(self, matched: Column) -> Column:
-        """The whole-match-set aggregate payload (no GROUP BY): one
-        struct of `_agg_fields_from_array` in a 1-element array."""
-        return F.array(F.struct(*self._agg_fields_from_array(matched)))
-
-    def _agg_fields_from_array(self, matched: Column) -> list[Column]:
-        """The aggregates as array expressions over a (sub)set of the
-        inline path's filtered literal dim array — still one codegen'd
-        projection, no join. SQL null semantics: aggregates skip NULL
-        inputs; sum/avg/min/max over zero non-null values are NULL;
-        count never is."""
-        cols: list[Column] = []
-        for func, col, alias in self.query.aggregates:
-            t = self._agg_result_type(func, col)
-            if func == "count" and col is None:
-                c = F.size(matched)
-            else:
-                # factory closures: PySpark infers HOF lambda arity from
-                # the signature, so loop variables must NOT be bound via
-                # default args (a 2-parameter transform lambda would
-                # receive the element INDEX as its second argument)
-                def _getter(cname):
-                    return lambda r: r.getField(cname)
-
-                def _summer(ty):
-                    return lambda acc, x: acc + x.cast(ty)
-
-                vals = F.filter(
-                    F.transform(matched, _getter(col)),
-                    lambda x: x.isNotNull(),
-                )
-                if func in ("sum_distinct", "avg_distinct"):
-                    # round-5 final: fold over the DISTINCT multiset
-                    vals = F.array_distinct(vals)
-                    func = "sum" if func == "sum_distinct" else "avg"
-                if func == "count":
-                    c = F.size(vals)
-                elif func == "count_distinct":
-                    c = F.size(F.array_distinct(vals))
-                elif func == "min":
-                    c = F.array_min(vals)
-                elif func == "max":
-                    c = F.array_max(vals)
-                elif func == "sum":
-                    c = F.when(F.size(vals) == 0, F.lit(None).cast(t)).otherwise(
-                        F.aggregate(vals, F.lit(0).cast(t), _summer(t))
-                    )
-                else:  # avg
-                    c = F.when(F.size(vals) == 0, F.lit(None).cast(t)).otherwise(
-                        F.aggregate(vals, F.lit(0.0), _summer("double"))
-                        / F.size(vals)
-                    )
-            cols.append(self._with_agg_empty(c, alias).cast(t).alias(alias))
-        return cols
-
-    def _group_payload_from_array(self, matched: Column) -> Column:
-        """GROUP BY payload on the inline path: one struct per distinct
-        group-key tuple among the matched rows (projected keys in
-        SELECT order, then the aggregates computed over that group's
-        subset). O(groups x matched) — bounded by inline_threshold^2 in
-        the worst case, tiny in practice."""
-        gb = list(self.query.group_by)
-
-        def key_of(r: Column) -> Column:
-            return F.struct(*[r.getField(c).alias(c) for c in gb])
-
-        keys_arr = F.array_distinct(F.transform(matched, key_of))
-
-        def row_for(k: Column) -> Column:
-            def same_group(r: Column) -> Column:
-                cond = F.lit(True)
-                for c in gb:
-                    cond = cond & r.getField(c).eqNullSafe(k.getField(c))
-                return cond
-
-            sub = F.filter(matched, same_group)
-            fields = [
-                k.getField(src).alias(alias)
-                for src, alias in (self.query.projection or [])
-            ]
-            fields += self._agg_fields_from_array(sub)
-            return F.struct(*fields)
-
-        return F.sort_array(F.transform(keys_arr, row_for))
-
     def _having_element_condition(self, params: dict[str, BoundParam]):
         """Element-predicate for the HAVING filter over the aggregated
         payload rows: the same DNF machinery as the WHERE compile, with
@@ -7139,133 +7004,8 @@ class CompiledLookup:
         ]
         return F.array(F.struct(*cols))
 
-    def _apply_inline(self, fact: DataFrame, params: dict[str, BoundParam]) -> DataFrame:
-        """Small-dim theta lookup as a pure projection: filter a literal
-        array-of-structs — no join, no shuffle, stays in codegen.
-
-        Every predicate rhs is staged into a column FIRST: non-lambda
-        subtrees inside higher-order-function lambdas are re-evaluated
-        per array element, so an inlined Sprintfier/LIKE-regex derivation
-        would otherwise run dim_count times per row (the same trap as the
-        19x shingle slowdown fixed in dedup.py). LIKE patterns are
-        compiled to their anchored regex once per row here, leaving only
-        the rlike probe per dim element."""
-        sid = self.spec.id
-        staged = fact
-        tmp: list[str] = []
-        # Staged columns are keyed by (placeholder, needs-LIKE-regex), NOT
-        # by flat predicate index: DNF normalization duplicates a
-        # conjoined predicate into every disjunct, and staging per
-        # occurrence would evaluate the sprintf/regex derivation once per
-        # duplicate instead of once per placeholder.
-        stage_cache: dict[tuple[str, bool], str] = {}
-        rhs_map: dict[int, list[Column | None]] = {}
-        # column terms (static dim-side comparands, ``a = b + 1``) are
-        # left as None placeholders: their operand is the ARRAY ELEMENT's
-        # field, only in scope inside the filter lambda below
-        col_terms: dict[int, dict[int, str]] = {}
-        # mixed dim+param expressions (``a = b + :k``) likewise resolve
-        # their dim fields per element; their params are staged raw here
-        mixed_terms: dict[int, dict[int, object]] = {}
-        for f, p in self._flat_indexed():
-            rhs: list[Column | None] = []
-            for j, t in enumerate(p.terms):
-                if t.kind == "literal":
-                    lit = F.lit(t.value)
-                    # literal LIKE patterns compile here (constant-folded)
-                    rhs.append(_like_regex(lit, p.like_escape) if p.op in _LIKE_OPS else lit)
-                elif t.kind == "column":
-                    col_terms.setdefault(f, {})[j] = t.value
-                    rhs.append(None)
-                elif t.kind == "mixed_expr":
-                    # stage each referenced param ONCE (raw — the LIKE
-                    # rewrite, if any, applies to the whole evaluated
-                    # expression per element); the cache key is shared
-                    # with plain-param equality staging
-                    for n in sqlexpr.params_of(t.value):
-                        key = (n, False)
-                        if key not in stage_cache:
-                            c = f"__pv_{sid}_{len(stage_cache)}"
-                            staged = staged.withColumn(c, params[n].value)
-                            stage_cache[key] = c
-                            tmp.append(c)
-                    mixed_terms.setdefault(f, {})[j] = t.value
-                    rhs.append(None)
-                elif t.kind == "param_expr":
-                    # fact-side param expression: staged per occurrence
-                    # (cheap arithmetic over already-bound columns; the
-                    # dim-element re-eval trap the staging exists for
-                    # still cannot bite — it's a column, not a lambda
-                    # subtree)
-                    val = sqlexpr.compile_expr(
-                        sqlexpr.subst_params(
-                            t.value, lambda n: params[n].value
-                        )
-                    )
-                    if p.op in _LIKE_OPS:
-                        val = _like_regex(val, p.like_escape)
-                    c = f"__pv_{sid}_pe_{f}_{j}"
-                    staged = staged.withColumn(c, val)
-                    tmp.append(c)
-                    rhs.append(F.col(c))
-                else:
-                    key = (t.value, p.op in _LIKE_OPS)
-                    c = stage_cache.get(key)
-                    if c is None:
-                        val = params[t.value].value
-                        if p.op in _LIKE_OPS:
-                            val = _like_regex(val, p.like_escape)
-                        c = f"__pv_{sid}_{len(stage_cache)}"
-                        staged = staged.withColumn(c, val)
-                        stage_cache[key] = c
-                        tmp.append(c)
-                    rhs.append(F.col(c))
-            rhs_map[f] = rhs
-        arr = self._dim_literal_array()
-
-        def rhs_for_element(r):
-            def fn(f: int, p: _Predicate) -> list[Column]:
-                if f not in col_terms and f not in mixed_terms:
-                    return rhs_map[f]
-                out = list(rhs_map[f])
-                for j, name in col_terms.get(f, {}).items():
-                    c = r.getField(name)
-                    # a column LIKE pattern derives its regex per
-                    # element — dim-sized work inside the inline array
-                    out[j] = _like_regex(c, p.like_escape) if p.op in _LIKE_OPS else c
-                for j, ast in mixed_terms.get(f, {}).items():
-                    # mixed dim+param expression: staged param columns
-                    # substitute in, dim fields read off THIS element
-                    c = sqlexpr.compile_expr(
-                        sqlexpr.subst_columns(
-                            sqlexpr.subst_params(
-                                ast,
-                                lambda n: F.col(stage_cache[(n, False)]),
-                            ),
-                            r.getField,
-                        )
-                    )
-                    out[j] = _like_regex(c, p.like_escape) if p.op in _LIKE_OPS else c
-                return out
-            return fn
-
-        matched = F.filter(
-            arr,
-            lambda r: self._where_condition(
-                lambda p: _apply_lhs_func(p, r.getField(p.dim_column)),
-                rhs_for_element(r),
-            ),
-        )
-        if self.query.group_by:
-            payload = self._group_payload_from_array(matched)
-        elif self.query.aggregates:
-            payload = self._agg_payload_from_array(matched)
-        else:
-            payload = self._assemble_payload(matched)
-        return staged.withColumn("__raw_payload", payload).drop(*tmp)
-
     def _apply_bnlj(self, fact: DataFrame, params: dict[str, BoundParam]) -> DataFrame:
-        """Large-dim theta lookup, probed per DISTINCT parameter tuple.
+        """Theta lookup, probed per DISTINCT parameter tuple.
 
         The naive shape — BNLJ every fact row against the dim, then
         regroup the fan-out — shuffles the whole fact (every column) on
@@ -7293,9 +7033,10 @@ class CompiledLookup:
         Only broadcast_map keeps the fact fully shuffle-free.
 
         ``pattern_strategy="auto"`` resolves between the two at plan
-        build with one narrow approx-distinct pre-flight over the tuple
-        projection (the cardinality guard for sprintf-over-free-text
-        configs whose near-unique tuples would outgrow the broadcast)."""
+        build: it ``localCheckpoint``-s the slim distinct tuple frame,
+        takes its exact ``count()`` and probes the checkpointed frame
+        (the cardinality guard for sprintf-over-free-text configs whose
+        near-unique tuples would outgrow the broadcast)."""
         sid = self.spec.id
         with_keys = fact
         # One staged column per DISTINCT placeholder (ordered by first
@@ -7479,9 +7220,7 @@ class CompiledLookup:
                 # distinct frame once (localCheckpoint truncates the
                 # upstream fact lineage) and count it exactly; the probe
                 # below reuses the checkpointed frame, so the fact is
-                # scanned once to build the tuples instead of twice (the
-                # old approx pre-flight re-ran the whole — possibly
-                # expensive, uncached — fact lineage a second time).
+                # scanned once to build the tuples, not twice.
                 # NOTE this makes plan construction eager for "auto":
                 # documented in apply()'s contract.
                 tuples = tuples.localCheckpoint(eager=True)
@@ -7614,9 +7353,6 @@ class CompiledUnionLookup:
         self,
         spec: LookupSpec,
         dims: dict[str, DataFrame],
-        inline_threshold: int = DEFAULT_INLINE_THRESHOLD,
-        row_key: list[str] = ("conv_id", "turn_idx"),
-        dim_rows: dict[str, int] | None = None,
         pattern_strategy: str = "broadcast_map",
     ):
         spec.raise_if_invalid()
@@ -7726,7 +7462,6 @@ class CompiledUnionLookup:
                 parsed, dim_df = resolve_subqueries_with_dim(
                     parsed, dims, dim_df
                 )
-                lk_rows = None
             else:
                 if parsed.table not in dims:
                     raise ValidationError(
@@ -7737,14 +7472,10 @@ class CompiledUnionLookup:
                 parsed, dim_df = resolve_subqueries_with_dim(
                     parsed, dims, dim_df
                 )
-                lk_rows = (dim_rows or {}).get(parsed.table)
             self.branches.append(
                 CompiledLookup(
                     spec,
                     dim_df,
-                    inline_threshold,
-                    row_key,
-                    dim_rows=lk_rows,
                     pattern_strategy=pattern_strategy,
                     parsed_query=parsed,
                 )

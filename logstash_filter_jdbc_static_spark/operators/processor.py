@@ -15,10 +15,7 @@ import logging
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from logstash_filter_jdbc_static_spark.operators.lookup import (
-    DEFAULT_INLINE_THRESHOLD,
-    CompiledLookup,
-)
+from logstash_filter_jdbc_static_spark.operators.lookup import CompiledLookup
 from logstash_filter_jdbc_static_spark.spec import PipelineSpec, ValidationError
 
 MATCHED_COL = "matched"
@@ -64,25 +61,22 @@ def _check_index_coverage(spec: PipelineSpec, compiled: "list[CompiledLookup]") 
 
 class LookupEnricher:
     """Compiles every lookup in a PipelineSpec against its dimension
-    DataFrame and applies them as one chained transformation."""
+    DataFrame and applies them as one chained transformation.
+
+    ``dim_rows`` is accepted and ignored: no plan choice reads a row
+    count any more, but existing callers still pass it."""
 
     def __init__(
         self,
         spec: PipelineSpec,
         dims: dict[str, DataFrame],
-        inline_threshold: int | None = None,
-        row_key: tuple[str, ...] = ("conv_id", "turn_idx"),
         dim_rows: dict[str, int] | None = None,
         pattern_strategy: str | None = None,
     ):
-        # Engine knobs resolve: explicit argument > spec's engine config
-        # > built-in default — so EVERY construction site (batch job,
-        # streaming refresh seam, direct Python callers) inherits a
+        # The engine knob resolves: explicit argument > spec's engine
+        # config > built-in default — so EVERY construction site (batch
+        # job, streaming refresh seam, direct Python callers) inherits a
         # config's engine block without each caller re-plumbing it.
-        if inline_threshold is None:
-            inline_threshold = getattr(spec, "inline_threshold", None)
-        if inline_threshold is None:
-            inline_threshold = DEFAULT_INLINE_THRESHOLD
         if pattern_strategy is None:
             pattern_strategy = getattr(spec, "pattern_strategy", None)
         if pattern_strategy is None:
@@ -124,12 +118,7 @@ class LookupEnricher:
                 # default machinery across branches
                 self.compiled.append(
                     CompiledUnionLookup(
-                        lk,
-                        lk_dims,
-                        inline_threshold,
-                        row_key,
-                        dim_rows=dim_rows,
-                        pattern_strategy=pattern_strategy,
+                        lk, lk_dims, pattern_strategy=pattern_strategy
                     )
                 )
                 continue
@@ -149,7 +138,6 @@ class LookupEnricher:
                 parsed, dim_df = resolve_subqueries_with_dim(
                     parsed, lk_dims, dim_df
                 )
-                lk_dim_rows = None  # derived dim: A2 count not applicable
             else:
                 if parsed.table not in lk_dims:
                     raise ValidationError(
@@ -160,17 +148,10 @@ class LookupEnricher:
                 parsed, dim_df = resolve_subqueries_with_dim(
                     parsed, lk_dims, dim_df
                 )
-                # the correlated-aggregate join is keyed by groupBy
-                # output (unique key tuples), so the dim ROW COUNT is
-                # preserved and the A2 guard's cached count stays valid
-                lk_dim_rows = (dim_rows or {}).get(parsed.table)
             self.compiled.append(
                 CompiledLookup(
                     lk,
                     dim_df,
-                    inline_threshold,
-                    row_key,
-                    dim_rows=lk_dim_rows,
                     pattern_strategy=pattern_strategy,
                     parsed_query=parsed,
                 )

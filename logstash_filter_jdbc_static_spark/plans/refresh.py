@@ -52,9 +52,8 @@ def fetch_with_guard(fetch: Callable[[], DataFrame], loader: LoaderSpec,
 def fetch_with_guard_counted(
     fetch: Callable[[], DataFrame], loader: LoaderSpec, spark: SparkSession
 ) -> tuple[DataFrame, int]:
-    """fetch_with_guard plus the guard's own row count, so downstream
-    plan choices (inline vs map-probe lookup strategy) can reuse it
-    instead of re-firing an eager count() at compile time."""
+    """fetch_with_guard plus the guard's own row count (the
+    ``rows_loaded`` bookkeeping in ``DimensionStore.row_counts``)."""
     pinned = fetch().limit(loader.max_rows + 1).localCheckpoint(eager=True)
     n = pinned.count()
     if n == 0 or n > loader.max_rows:
@@ -82,8 +81,7 @@ class DimensionStore:
         # One attribute holds (snapshots, row_counts); readers take BOTH
         # from a single GIL-atomic read via dims_and_rows(), so a
         # background refresh can never pair a new snapshot with a stale
-        # count (which could flip a large dim onto the inline-collect
-        # lookup path). Writers build new dicts and swap once.
+        # count. Writers build new dicts and swap once.
         self._state: tuple[dict[str, DataFrame], dict[str, int]] = ({}, {})
         self.reload_count = 0
         self.last_load_ts: float | None = None
@@ -179,16 +177,10 @@ class DimensionStore:
         )
 
     def dims_and_rows(self) -> tuple[dict[str, DataFrame], dict[str, int]]:
-        """(snapshots, guard row counts) from ONE atomic state read —
-        the accessor concurrent readers (per-micro-batch enricher
-        builds) must use so counts always describe the same snapshots."""
+        """(snapshots, guard row counts) from ONE atomic state read, so
+        the counts always describe the same snapshots."""
         snaps, counts = self._state
         return dict(snaps), dict(counts)
 
     def dims(self) -> dict[str, DataFrame]:
         return self.dims_and_rows()[0]
-
-    def dim_rows(self) -> dict[str, int]:
-        """Snapshot row counts from the A2 guard — free plan-choice input
-        for LookupEnricher(dim_rows=...)."""
-        return self.dims_and_rows()[1]

@@ -26,8 +26,9 @@ from logstash_filter_jdbc_static_spark.spec import PipelineSpec
 # 1. Conjunctive multi-key lookup: `WHERE tool = :tool AND ip LIKE :ip`
 #    — one lookup, mixed equi + pattern predicate (lookup_spec.rb:191-192
 #    exercises the two-LIKE conjunction; docs/index.asciidoc:122 the
-#    two-equi one). Physical path: inline literal-array filter (dim is
-#    8 rows), zero joins, zero shuffles.
+#    two-equi one). Physical path: per-distinct-tuple map-probe
+#    against the broadcast 8-row dim; only the slim tuple projection
+#    shuffles.
 # ------------------------------------------------------------------
 
 HOST_ROWS = [

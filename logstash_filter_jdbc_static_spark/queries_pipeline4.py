@@ -620,10 +620,8 @@ def documents_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------------
 # 12. Large-dim theta lookup, oracle-gated: the per-distinct-tuple
 #     map-probe path (_apply_bnlj) against a >1024-row dimension (the
-#     customer table; inline_threshold=0 pins the physical path at any
-#     sf). The other gated LIKE lookups use small dims and take the
-#     inline literal-array path — this closes the driver-gate gap on
-#     the remaining physical strategy.
+#     customer table), where the other gated LIKE lookups probe small
+#     dims.
 # ------------------------------------------------------------------
 
 
@@ -657,7 +655,7 @@ def lookup_like_large_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     dim = load_table_split(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    enricher = LookupEnricher(spec, {"customer": dim}, inline_threshold=0)
+    enricher = LookupEnricher(spec, {"customer": dim})
     out = enricher.apply(t)
     return out.select(
         "conv_id",

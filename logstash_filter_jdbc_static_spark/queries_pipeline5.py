@@ -4,12 +4,12 @@
 The reference hands lookup SQL verbatim to Derby (lookup.rb:131-147), so
 disjunctions, IN-lists, BETWEEN ranges and NULL tests are all legal
 configs there; parse_lookup_query now compiles them (DNF) onto the same
-three physical paths. Each query below pins one new shape end-to-end:
+two physical paths. Each query below pins one new shape end-to-end:
 
-1. ``lookup_in_list``       — IN (:param, 'literal') fan-out, inline path
-2. ``lookup_or_disjunction``— equality OR pattern-LIKE, inline path
+1. ``lookup_in_list``       — IN (:param, 'literal') fan-out, map-probe path
+2. ``lookup_or_disjunction``— equality OR pattern-LIKE, map-probe path
 3. ``lookup_between``       — BETWEEN :lo AND :hi + static numeric/null
-                              predicates, map-probe path at sf>=0.01
+                              predicates, map-probe path
 4. ``lookup_shuffle_map``   — the shuffle_map map-back strategy under the
                               driver gate (round-2 verdict #4), with a
                               conversation-derived high-cardinality tuple
@@ -175,8 +175,7 @@ def lookup_or_disjunction(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 3. BETWEEN range lookup with static guards: a 3-key window over the
 #    customer dim, plus a literal numeric comparison and an IS NOT NULL
 #    — both static predicates ride the probe condition (dim-side), the
-#    bound range drives the per-distinct-tuple map-probe (the dim
-#    outgrows inline_threshold at sf >= 0.01).
+#    bound range drives the per-distinct-tuple map-probe.
 # ------------------------------------------------------------------
 
 
@@ -276,7 +275,7 @@ def lookup_shuffle_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dim = load_table_split(spark, sf_dir, "customer").select("c_custkey", "c_name")
     enricher = LookupEnricher(
-        spec, {"customer": dim}, inline_threshold=0, pattern_strategy="shuffle_map"
+        spec, {"customer": dim}, pattern_strategy="shuffle_map"
     )
     out = enricher.apply(t)
     return out.select(

@@ -102,7 +102,7 @@ def lookup_order_limit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2. SELECT DISTINCT lookup: patterns spanning several dim rows that
 #    share a tool must yield each tool ONCE, in ORDER BY order (Derby
 #    enforces DISTINCT's ORDER BY keys to be selected — so does the
-#    parser). Theta path (LIKE): inline literal-array filter with
+#    parser). Theta path (LIKE): per-distinct-tuple map-probe with
 #    array_distinct on the assembled payload.
 # ------------------------------------------------------------------
 

@@ -9,8 +9,8 @@ the plan it was.
 ``lookup_arith`` — ``WHERE price * qty >= :lim AND tool = :tool`` with
 the arithmetic also projected (``price * qty AS total``): a mixed
 range+equi probe whose computed column is evaluated ONCE on the 7-row
-dim, never per fact row. Physical path: inline literal-array filter
-(dim under threshold), fact side exchange-free.
+dim, never per fact row. Physical path: per-distinct-tuple map-probe
+with a broadcast map-back, so the fact side never shuffles.
 
 ``lookup_case_projection`` — ``COALESCE``/``CASE`` projections on a
 pure-equi lookup: the computed payload fields ride the key-grouped

@@ -27,6 +27,9 @@ from logstash_filter_jdbc_static_spark.schema import columns_to_struct
 DEFAULT_TAG_ON_FAILURE = ["_jdbcstaticfailure"]
 DEFAULT_TAG_ON_DEFAULT_USE = ["_jdbcstaticdefaultsused"]
 DEFAULT_MAX_ROWS = 1_000_000  # loader.rb:73
+# How a theta lookup's tuple->payload map joins back onto the fact
+# (operators/lookup.py::CompiledLookup._apply_bnlj).
+PATTERN_STRATEGIES = ("broadcast_map", "shuffle_map", "auto")
 
 _SPRINTF_RE = re.compile(r"%\{([^}]+)\}")
 # :named placeholders in lookup SQL (lookup.rb's Sequel named-param style).
@@ -284,36 +287,27 @@ class PipelineSpec:
         # (jdbc_static.rb:189-204's runner choice).
         # Engine tuning surface (Spark-side knobs with no reference
         # counterpart — the reference's Derby engine has no equivalent
-        # choices): inline_threshold (inline literal-array vs map-probe
-        # crossover for theta lookups) and pattern_strategy
-        # (broadcast_map | shuffle_map map-back). Validated here so a
-        # bad --pipeline config fails at register time like everything
+        # choices): pattern_strategy (broadcast_map | shuffle_map | auto
+        # map-back for theta lookups). Validated here so a bad
+        # --pipeline config fails at register time like everything
         # else.
         if engine is not None and not isinstance(engine, dict):
             errors.append("The 'engine' option must be a Hash")
             engine = {}
         engine = dict(engine or {})
-        self.inline_threshold = engine.pop("inline_threshold", None)
-        if self.inline_threshold is not None and (
-            isinstance(self.inline_threshold, bool)
-            or not isinstance(self.inline_threshold, int)
-            or self.inline_threshold < 0
-        ):
-            errors.append(
-                "The 'engine.inline_threshold' option must be a non-negative integer"
-            )
         self.pattern_strategy = engine.pop("pattern_strategy", None)
-        if self.pattern_strategy is not None and self.pattern_strategy not in (
-            "broadcast_map", "shuffle_map", "auto",
+        if (
+            self.pattern_strategy is not None
+            and self.pattern_strategy not in PATTERN_STRATEGIES
         ):
             errors.append(
                 "The 'engine.pattern_strategy' option must be one of "
-                "'broadcast_map', 'shuffle_map', 'auto'"
+                + ", ".join(f"'{v}'" for v in PATTERN_STRATEGIES)
             )
         if engine:
             errors.append(
                 f"Unknown engine option(s): {sorted(engine)} "
-                "(supported: inline_threshold, pattern_strategy)"
+                "(supported: pattern_strategy)"
             )
         self.loader_schedule = loader_schedule
         if loader_schedule is not None:

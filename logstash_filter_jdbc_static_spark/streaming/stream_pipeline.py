@@ -121,13 +121,9 @@ def scheduled_refresh_seam(store, spec):
     state: dict = {"gen": None, "enricher": None}
 
     def refresh_dims() -> LookupEnricher:
-        # ONE atomic state read: dims() + dim_rows() separately could
-        # pair a new snapshot with a stale count across a background
-        # swap and mis-pick the inline-collect path for a large dim.
         gen = store.reload_count
         if state["enricher"] is None or gen != state["gen"]:
-            dims, rows = store.dims_and_rows()
-            state["enricher"] = LookupEnricher(spec, dims, dim_rows=rows)
+            state["enricher"] = LookupEnricher(spec, store.dims())
             # re-read: a swap may have landed between the gen read and
             # the snapshot read — next batch rebuilds against it
             state["gen"] = gen

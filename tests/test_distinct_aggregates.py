@@ -4,9 +4,8 @@ hands lookup SQL verbatim to Derby (lookup.rb:131-147), which accepts
 Compile: ``sum_distinct`` -> F.sum_distinct; ``avg(DISTINCT x)`` =
 sum(DISTINCT x)/count(DISTINCT x) (the distinct multiset's mean —
 long/long division is double, matching avg's type for integral
-inputs); MIN/MAX(DISTINCT) parse to plain min/max (a SQL no-op). The
-inline array path folds over F.array_distinct. Every golden
-cross-checks the row oracle on all three physical paths."""
+inputs); MIN/MAX(DISTINCT) parse to plain min/max (a SQL no-op). Every golden
+cross-checks the row oracle on both map-back strategies."""
 
 from __future__ import annotations
 
@@ -27,11 +26,7 @@ PLANS = [
 ]
 SCHEMA = "tool: string, plan: string, price: int, qty: int"
 
-ENGINES = [
-    {},
-    {"inline_threshold": 0, "pattern_strategy": "broadcast_map"},
-    {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-]
+ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
 
 
 def _dims(spark):

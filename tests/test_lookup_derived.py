@@ -32,11 +32,7 @@ ROWS = [
 ]
 CATS = [("basic", "core"), ("pro", "paid")]
 
-ENGINES = [
-    {},
-    {"inline_threshold": 0, "pattern_strategy": "broadcast_map"},
-    {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-]
+ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
 
 
 def _dims(spark):

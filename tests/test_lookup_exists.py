@@ -36,11 +36,7 @@ PLAN_SCHEMA = T.StructType(
     ]
 )
 
-ENGINES = [
-    {},
-    {"inline_threshold": 0},
-    {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-]
+ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
 
 
 class TestParser:

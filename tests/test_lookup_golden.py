@@ -292,8 +292,7 @@ class TestMultiRowFanIn:
 
 class TestConjunctiveLike:
     """lookup_spec.rb:191-192: WHERE ip LIKE ? AND os LIKE ? (theta
-    conjunction) — exercised on both physical paths: inline filtered
-    literal array and broadcast-NLJ + regroup (inline_threshold=0)."""
+    conjunction) on the per-distinct-tuple map-probe path."""
 
     def _spec(self):
         return PipelineSpec(
@@ -314,7 +313,7 @@ class TestConjunctiveLike:
             SERVERS_SCHEMA,
         )
 
-    def test_inline_path(self, spark):
+    def test_single_turn_match(self, spark):
         from logstash_filter_jdbc_static_spark.operators.processor import (
             LookupEnricher as LE,
         )
@@ -328,9 +327,7 @@ class TestConjunctiveLike:
             LookupEnricher as LE,
         )
 
-        enricher = LE(
-            self._spec(), {"servers": self._dim(spark)}, inline_threshold=0
-        )
+        enricher = LE(self._spec(), {"servers": self._dim(spark)})
         out = enricher.apply(
             fact(spark, [("c1", 1, "10.%", "LDN%"), ("c1", 2, "9.%", "X%")])
         )

@@ -193,9 +193,7 @@ class TestJoinGoldenE2E:
         spec = PipelineSpec(
             lookups=[{"id": "geo", "query": _GEO_Q, "parameters": {"k": "nkey"}}]
         )
-        enr = LookupEnricher(
-            spec, {"nation": nation, "region": region}, inline_threshold=0
-        )
+        enr = LookupEnricher(spec, {"nation": nation, "region": region})
         out = enr.apply(fact)
         plan = out._jdf.queryExecution().executedPlan().toString()
         # fact⋈dim probes the key-grouped dim pinned on the first apply;
@@ -442,8 +440,7 @@ class TestJoinExpressions:
         }
 
     @pytest.mark.parametrize(
-        "kw", [{}, {"inline_threshold": 0},
-               {"inline_threshold": 0, "pattern_strategy": "shuffle_map"}]
+        "kw", [{}, {"pattern_strategy": "shuffle_map"}]
     )
     def test_expression_projection_and_predicate(self, spark, kw):
         got = self._run(
@@ -524,8 +521,7 @@ class TestJoinExpressions:
         assert got == exp
 
     @pytest.mark.parametrize(
-        "kw", [{}, {"inline_threshold": 0},
-               {"inline_threshold": 0, "pattern_strategy": "shuffle_map"}]
+        "kw", [{}, {"pattern_strategy": "shuffle_map"}]
     )
     def test_mixed_dim_param_expression_across_relations(self, spark, kw):
         # round-5 latest: a mixed dim+param rhs whose dim columns span
@@ -619,8 +615,7 @@ class TestOnLiterals:
             )
 
     @pytest.mark.parametrize(
-        "kw", [{}, {"inline_threshold": 0},
-               {"inline_threshold": 0, "pattern_strategy": "shuffle_map"}]
+        "kw", [{}, {"pattern_strategy": "shuffle_map"}]
     )
     def test_left_join_on_literal_keeps_unmatched_rows(self, spark, kw):
         # ON ... AND b.band <> 'low': low-band prices (2) and

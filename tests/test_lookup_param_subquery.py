@@ -25,11 +25,7 @@ PLANS = [
 ]
 SCHEMA = "tool: string, plan: string, price: int, qty: int"
 
-ENGINES = [
-    {},
-    {"inline_threshold": 0, "pattern_strategy": "broadcast_map"},
-    {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-]
+ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
 
 
 def _dims(spark):

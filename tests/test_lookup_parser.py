@@ -220,12 +220,9 @@ def _enrich(spark, query, facts, **kw):
     }
 
 
-# Each case on BOTH theta paths (inline literal-array and map-probe)
-PATH_KWARGS = [
-    {},  # inline (4-row dim < threshold)
-    {"inline_threshold": 0},  # map-probe, broadcast map-back
-    {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-]
+# Each case on BOTH map-back strategies of the theta map-probe path
+# (equi cases take the broadcast-hash path under either)
+PATH_KWARGS = [{}, {"pattern_strategy": "shuffle_map"}]
 
 
 @pytest.mark.parametrize("kw", PATH_KWARGS)
@@ -366,9 +363,7 @@ class TestAutoPatternStrategy:
             ]
         )
         dim = spark.createDataFrame(DIM_ROWS, DIM_SCHEMA)
-        enr = LookupEnricher(
-            spec, {"dim": dim}, inline_threshold=0, pattern_strategy="auto"
-        )
+        enr = LookupEnricher(spec, {"dim": dim}, pattern_strategy="auto")
         out = enr.apply(self._facts(spark, 20))
         assert out.count() == 20  # resolves + runs without error
 
@@ -386,9 +381,7 @@ class TestAutoPatternStrategy:
             ]
         )
         dim = spark.createDataFrame(DIM_ROWS, DIM_SCHEMA)
-        enr = LookupEnricher(
-            spec, {"dim": dim}, inline_threshold=0, pattern_strategy="auto"
-        )
+        enr = LookupEnricher(spec, {"dim": dim}, pattern_strategy="auto")
         cl = enr.compiled[0]
         # 50 facts carry 50 distinct k values > patched limit of 5
         assert cl._resolve_pattern_strategy(50) == "shuffle_map"
@@ -523,11 +516,11 @@ class TestSingleTableAlias:
         assert got == {1: ["row-a1"], 2: []}
 
 
-class TestInlineStagingDedup:
-    def test_repeated_param_staged_once(self, spark):
+class TestProbeTupleDedup:
+    def test_repeated_param_keyed_once(self, spark):
         """DNF normalization duplicates conjoined predicates into every
-        disjunct; the staged __pv derivation columns must be keyed by
-        (placeholder, derivation), not per occurrence (round-3 review)."""
+        disjunct; the map-probe's parameter tuple must carry one column
+        per placeholder, not one per occurrence (round-3 review)."""
         import re as _re
 
         spec = PipelineSpec(
@@ -548,10 +541,9 @@ class TestInlineStagingDedup:
         )
         out = LookupEnricher(spec, {"dim": dim}).apply(fact)
         plan = out._jdf.queryExecution().analyzed().toString()
-        staged = set(_re.findall(r"__pv_hit_\d+", plan))
-        # one per distinct (param, derivation): (k, raw) + (k, LIKE-regex)
-        # — NOT one per flat predicate occurrence (which would be 4 here)
-        assert len(staged) == 2, staged
+        # one tuple column for :k — NOT one per flat predicate
+        # occurrence (which would be 4 here)
+        assert set(_re.findall(r"__mk_hit_\d+", plan)) == {"__mk_hit_0"}
         (row,) = out.collect()
         assert [x["name"] for x in row["hit"]] == ["row-a1"]
 
@@ -753,14 +745,7 @@ def _order_enrich(spark, query, **kw):
     }
 
 
-@pytest.mark.parametrize(
-    "kw",
-    [
-        {},  # equi path (ordered _grouped_dim branch) / inline for theta
-        {"inline_threshold": 0},
-        {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-    ],
-)
+@pytest.mark.parametrize("kw", PATH_KWARGS)
 class TestOrderByLimitGolden:
     def test_equi_order_desc_nulls_first_limit(self, spark, kw):
         # Derby result order: NULL is the LARGEST value, so num DESC
@@ -815,14 +800,7 @@ class TestSelectDistinct:
         assert not parse_lookup_query("SELECT tool FROM hosts").distinct
 
 
-@pytest.mark.parametrize(
-    "kw",
-    [
-        {},
-        {"inline_threshold": 0},
-        {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-    ],
-)
+@pytest.mark.parametrize("kw", PATH_KWARGS)
 class TestSelectDistinctGolden:
     DIM = [
         ("t0", "10.1.1.1"),
@@ -931,14 +909,7 @@ class TestAggregateParser:
             LookupEnricher(spec, {"dim": dim})
 
 
-@pytest.mark.parametrize(
-    "kw",
-    [
-        {},
-        {"inline_threshold": 0},
-        {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-    ],
-)
+@pytest.mark.parametrize("kw", PATH_KWARGS)
 class TestAggregateGolden:
     DIM = [
         ("t0", 3, "10.1.1.1"),
@@ -1047,14 +1018,7 @@ class TestOffsetAndCountDistinct:
         with pytest.raises(ValidationError):
             parse_lookup_query(bad)
 
-    @pytest.mark.parametrize(
-        "kw",
-        [
-            {},
-            {"inline_threshold": 0},
-            {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-        ],
-    )
+    @pytest.mark.parametrize("kw", PATH_KWARGS)
     def test_golden_offset_and_count_distinct(self, spark, kw):
         dim = spark.createDataFrame(
             [("t0", "a"), ("t0", "b"), ("t0", "c"), ("t0", "d"), ("t0", "a"),
@@ -1116,13 +1080,7 @@ class TestOffsetReviewRegressions:
                 "SELECT name FROM t ORDER BY name OFFSET 1 ROWS LIMIT 2 OFFSET 5"
             )
 
-    @pytest.mark.parametrize(
-        "kw",
-        [
-            {},
-            {"inline_threshold": 0},
-        ],
-    )
+    @pytest.mark.parametrize("kw", PATH_KWARGS)
     def test_offset_past_matches_fires_default(self, spark, kw):
         """An OFFSET that empties a non-empty match set must fire
         default_hash + tag (Derby returns the post-offset result set,
@@ -1210,14 +1168,7 @@ class TestGroupByParser:
             LookupEnricher(spec, {"dim": dim})
 
 
-@pytest.mark.parametrize(
-    "kw",
-    [
-        {},
-        {"inline_threshold": 0},
-        {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-    ],
-)
+@pytest.mark.parametrize("kw", PATH_KWARGS)
 class TestGroupByGolden:
     DIM = [
         ("t0", "x", 1),
@@ -1315,14 +1266,7 @@ class TestHavingParser:
             parse_lookup_query(bad)
 
 
-@pytest.mark.parametrize(
-    "kw",
-    [
-        {},
-        {"inline_threshold": 0},
-        {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-    ],
-)
+@pytest.mark.parametrize("kw", PATH_KWARGS)
 class TestHavingGolden:
     def test_having_filters_groups_and_default_fires(self, spark, kw):
         dim = spark.createDataFrame(
@@ -1510,7 +1454,7 @@ class TestHavingReviewRegressions:
             [("c", 1, "t%", 1), ("c", 2, "t%", 2), ("c", 3, "q%", 1)],
             "conv_id string, turn_idx int, t string, min int",
         )
-        out = LookupEnricher(spec, {"hosts": dim}, inline_threshold=0).apply(fact)
+        out = LookupEnricher(spec, {"hosts": dim}).apply(fact)
         plan = out._jdf.queryExecution().analyzed().toString()
         assert "__fk_hit_0" in plan
         assert "__fk_hit_1" not in plan, "HAVING param leaked into the probe tuple"
@@ -1647,14 +1591,7 @@ class TestLikeEscape:
             assert got[ip] == exp, (query, ip, got[ip], exp)
         return got
 
-    @pytest.mark.parametrize(
-        "kw",
-        [
-            {},
-            {"inline_threshold": 0, "pattern_strategy": "broadcast_map"},
-            {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-        ],
-    )
+    @pytest.mark.parametrize("kw", PATH_KWARGS)
     def test_escaped_wildcards_match_literally(self, spark, kw):
         # %!%% ESCAPE ! == contains a literal percent
         got = self._run(

@@ -49,11 +49,7 @@ PLAN_ROWS = [
     ("t4", "trial", 1),
 ]
 
-ENGINES = [
-    {},
-    {"inline_threshold": 0, "pattern_strategy": "broadcast_map"},
-    {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-]
+ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
 
 
 class TestParser:
@@ -683,7 +679,7 @@ class TestGlobalAggregate:
         assert got["t0"] == [(0, 1)]
 
     def test_literal_carried_through_non_equi_empty_set(self, spark, kw):
-        # a theta predicate takes the inline / map-probe path, whose
+        # a theta predicate takes the map-probe path, whose
         # aggregate over an empty match set is computed, not substituted
         got = self._run(
             spark,

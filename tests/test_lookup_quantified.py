@@ -32,11 +32,7 @@ PLANS = [("t1", "basic", 10), ("t1", "pro", 7), ("t1", None, 4),
          ("t2", "gold", 99), ("t3", "x", None)]
 REF = [("t1", 8), ("t2", 5), ("t3", None)]
 
-ENGINES = [
-    {},
-    {"inline_threshold": 0},
-    {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-]
+ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
 
 
 class TestParser:

@@ -50,11 +50,7 @@ PLAN_ROWS = [
     ("t3", 8, 8),
 ]
 
-ENGINES = [
-    {},
-    {"inline_threshold": 0, "pattern_strategy": "broadcast_map"},
-    {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-]
+ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
 
 
 class TestParseColumnRhs:

@@ -27,11 +27,7 @@ PLANS = [
 ]
 SCHEMA = "tool: string, plan: string, price: int, qty: int"
 
-ENGINES = [
-    {},
-    {"inline_threshold": 0, "pattern_strategy": "broadcast_map"},
-    {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-]
+ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
 
 # events carry a numeric threshold and a LIKE pattern alongside the
 # tool key; the NULL-threshold and NULL-tool rows pin SQL's

@@ -39,11 +39,7 @@ DIM = "ip string, name string"
 S1 = [("k1", "v1"), ("k2", "k2"), ("k1", "v2")]
 S2 = [("k1", "w1"), ("k3", "v1"), ("k1", "v1")]
 
-ENGINES = [
-    {},
-    {"inline_threshold": 0, "pattern_strategy": "broadcast_map"},
-    {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-]
+ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
 
 
 class TestSplitter:

@@ -17,6 +17,45 @@ def _plan(df, mode="formatted") -> str:
     return df._jdf.queryExecution().explainString(jmode)
 
 
+def _node_col(line: str) -> int:
+    return len(line) - len(line.lstrip(" :+-"))
+
+
+def _hash_exchange_keys(plan: str) -> list[list[str]]:
+    """Key columns (expression ids stripped) of every non-broadcast hash
+    exchange in a simple-mode plan, skipping the subtrees of cached
+    relations: a cached input's own staging shuffle is paid once per
+    session, not per lookup."""
+    kept: list[str] = []
+    cache_col = None
+    for line in plan.splitlines():
+        if cache_col is not None and _node_col(line) > cache_col:
+            continue
+        cache_col = _node_col(line) if "InMemoryRelation" in line else None
+        kept.append(line)
+    sigs = re.findall(
+        r"(?<!Broadcast)Exchange hashpartitioning\(([^)]*)\)", "\n".join(kept)
+    )
+    # the last argument is the partition count
+    return [[k.split("#")[0] for k in sig.split(", ")[:-1]] for sig in sigs]
+
+
+def _assert_map_probe(plan: str, sid: str, fact_cols: tuple[str, ...]) -> None:
+    """The theta map-probe shape: the one shuffle is the distinct() over
+    the slim ``__mk_*`` parameter-tuple columns, the probe is a single
+    broadcast nested-loop join, and the map returns by broadcast hash
+    join — no fact column is ever a shuffle key."""
+    exchanges = _hash_exchange_keys(plan)
+    assert len(exchanges) == 1, (exchanges, plan)
+    (keys,) = exchanges
+    assert keys and all(k.startswith(f"__mk_{sid}_") for k in keys), keys
+    assert not set(fact_cols) & set(keys), keys
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "EvalPython" not in plan, plan
+
+
 @pytest.fixture(scope="module")
 def counts_plan(spark, sf_dir):
     t = load_transcripts(spark, sf_dir)
@@ -114,43 +153,21 @@ class TestThetaLookupMapProbe:
             F.current_timestamp().alias("ts"),
         )
         enr = LookupEnricher(
-            spec,
-            {"servers": dim},
-            dim_rows={"servers": 3000},
-            pattern_strategy=pattern_strategy,
+            spec, {"servers": dim}, pattern_strategy=pattern_strategy
         )
         return enr.apply(fact)
 
     def test_fact_never_shuffles_only_slim_tuple_exchange(self, spark):
         plan = _plan(self._enriched(spark), "simple")
-        sigs = re.findall(
-            r"(?<!Broadcast)Exchange hashpartitioning\(([^)]*)\)", plan
-        )
-        assert len(set(sigs)) == 1, (sigs, plan)
-        # the one shuffle carries ONLY the derived tuple column
-        assert sigs[0].startswith("__mk_server_"), sigs
-        for fact_col in ("conv_id", "turn_idx", "text", "ts"):
-            assert fact_col not in sigs[0], sigs
-        # map-back is a broadcast hash join; fan-out-regroup artifacts gone
-        assert "BroadcastHashJoin" in plan
-        assert plan.count("BroadcastNestedLoopJoin") == 1  # tuple-probe only
+        _assert_map_probe(plan, "server", ("conv_id", "turn_idx", "text", "ts"))
+        # fan-out-regroup artifacts gone
         assert "first(" not in plan
 
-    def test_no_eager_count_with_known_dim_rows(self, spark):
-        """Plan construction with dim_rows supplied must not trigger jobs
-        (round-1 flagged _dim_count() firing during compilation)."""
-        sc = spark.sparkContext
-        tracker = sc.statusTracker()
-        before = tracker.getJobIdsForGroup(None)
-        self._enriched(spark)  # build plan only — no action
-        after = tracker.getJobIdsForGroup(None)
-        assert len(after) == len(before), "lookup compilation ran a Spark job"
-
-    def test_threshold_zero_skips_count_without_dim_rows(self, spark):
-        """inline_threshold=0 pins the map-probe path; the threshold
-        comparison must short-circuit so no eager dim count() fires even
-        when no dim_rows hint is supplied (lookup_like_large_dim's
-        shape, which runs per bench invocation)."""
+    def test_small_dim_like_apply_runs_no_job(self, spark):
+        """A LIKE lookup over a small dim, built without a row-count
+        hint, compiles and applies (twice, as a micro-batch loop would)
+        without a single Spark job: no eager dim count() or collect()
+        decides its physical path."""
         from pyspark.sql import functions as F
 
         from logstash_filter_jdbc_static_spark.operators.processor import (
@@ -178,10 +195,13 @@ class TestThetaLookupMapProbe:
         )
         tracker = spark.sparkContext.statusTracker()
         before = tracker.getJobIdsForGroup(None)
-        enr = LookupEnricher(spec, {"servers": dim}, inline_threshold=0)
-        enr.apply(fact)  # plan construction only
+        enr = LookupEnricher(spec, {"servers": dim})
+        first = enr.apply(fact)  # plan construction only
+        second = enr.apply(fact)
         after = tracker.getJobIdsForGroup(None)
-        assert len(after) == len(before), "threshold-0 lookup ran a Spark job"
+        assert len(after) == len(before), "small-dim lookup ran a Spark job"
+        _assert_map_probe(_plan(first, "simple"), "server", ("conv_id", "turn_idx"))
+        assert sorted(map(str, first.collect())) == sorted(map(str, second.collect()))
 
     def test_shuffle_map_strategy_still_correct(self, spark):
         out_b = {
@@ -292,27 +312,24 @@ class TestRelationalPushdown:
 
 class TestWidenedLookupPlans:
     """Round-3 widened WHERE shapes must not degrade the physical story:
-    IN/OR against small dims stay a pure inline projection (ZERO joins,
-    no fact exchange beyond the shared transcript staging), and a
-    param-bound BETWEEN on the map-probe path keeps the fact
-    exchange-free (only the slim tuple distinct() shuffles)."""
+    IN/OR against small dims and a param-bound BETWEEN all take the
+    map-probe path with the fact exchange-free (only the slim tuple
+    distinct() shuffles, beyond the shared transcript staging)."""
 
-    def test_in_and_or_shapes_compile_to_inline_zero_join(self, spark, sf_dir):
+    def test_in_and_or_shapes_compile_to_map_probe(self, spark, sf_dir):
         from logstash_filter_jdbc_static_spark.queries_pipeline5 import (
             lookup_in_list,
             lookup_or_disjunction,
         )
 
-        reg = {
-            "lookup_in_list": lookup_in_list,
-            "lookup_or_disjunction": lookup_or_disjunction,
-        }
-        for name in ("lookup_in_list", "lookup_or_disjunction"):
-            plan = _plan(reg[name](spark, sf_dir), "simple")
-            assert plan.count("BroadcastHashJoin") == 0, (name, plan)
-            assert "SortMergeJoin" not in plan, name
-            assert "NestedLoop" not in plan, name
-            assert "EvalPython" not in plan, name
+        for query, sid in (
+            (lookup_in_list, "toolhits"),
+            (lookup_or_disjunction, "server"),
+        ):
+            plan = _plan(query(spark, sf_dir), "simple")
+            _assert_map_probe(
+                plan, sid, ("conv_id", "turn_idx", "text", "tool", "from_ip")
+            )
 
     def test_between_map_probe_keeps_fact_exchange_free(self, spark):
         from pyspark.sql import functions as F
@@ -342,29 +359,18 @@ class TestWidenedLookupPlans:
             (F.col("id") % 40 * 100).alias("lo"),
             (F.col("id") % 40 * 100 + 3).alias("hi"),
         )
-        enr = LookupEnricher(
-            spec, {"dim": dim}, inline_threshold=0, dim_rows={"dim": 5000}
-        )
+        enr = LookupEnricher(spec, {"dim": dim})
         plan = _plan(enr.apply(fact), "simple")
-        sigs = set(
-            re.findall(r"(?<!Broadcast)Exchange hashpartitioning\(([^)]*)\)", plan)
-        )
-        assert len(sigs) == 1, (sigs, plan)
-        (sig,) = sigs
-        assert sig.startswith("__mk_rng_"), sig
-        for fact_col in ("conv_id", "turn_idx"):
-            assert fact_col not in sig
-        assert "BroadcastHashJoin" in plan  # map-back
-        assert plan.count("BroadcastNestedLoopJoin") == 1  # tuple probe only
+        _assert_map_probe(plan, "rng", ("conv_id", "turn_idx", "lo", "hi"))
 
 
 class TestResultShapePlans:
     """ORDER BY / LIMIT / DISTINCT / aggregate lookups must keep the
     physical story: the equi path stays ONE broadcast hash join with all
-    sorting/aggregation on the dim side (once per snapshot), and the
-    inline theta path stays a zero-join projection."""
+    sorting/aggregation on the dim side (once per snapshot), and a theta
+    lookup keeps the fact exchange-free on the map-probe path."""
 
-    def _plan_for(self, spark, query, theta=False):
+    def _plan_for(self, spark, query):
         from pyspark.sql import functions as F
 
         from logstash_filter_jdbc_static_spark.operators.processor import (
@@ -414,14 +420,12 @@ class TestResultShapePlans:
         fact_side = plan.split("BroadcastHashJoin")[0]
         assert "HashAggregate" not in fact_side, plan
 
-    def test_inline_distinct_order_is_zero_join(self, spark):
+    def test_theta_distinct_order_is_map_probe(self, spark):
         plan = self._plan_for(
             spark,
             "SELECT DISTINCT ip FROM hosts WHERE ip LIKE :t ORDER BY ip",
         )
-        assert "Join" not in plan, plan
-        assert "Exchange" not in plan.replace("BroadcastExchange", ""), plan
-        assert "EvalPython" not in plan
+        _assert_map_probe(plan, "hit", ("conv_id", "turn_idx", "t"))
 
 
 class TestExprLookupPlans:
@@ -628,9 +632,9 @@ class TestUnionLookupPlan:
 
 class TestSnapshotPin:
     """A compiled lookup prepares its dim side once per snapshot: the
-    equi path's key-grouped dim is pinned on the first apply and the
-    inline path's literal dim array is collected once, so every later
-    apply (each streaming micro-batch until the next reload) only probes.
+    equi path's key-grouped dim is pinned on the first apply, so every
+    later apply (each streaming micro-batch until the next reload) only
+    probes.
     """
 
     @staticmethod
@@ -740,42 +744,3 @@ class TestSnapshotPin:
             assert not re.search(
                 r"(?<!Broadcast)Exchange hashpartitioning", plan
             ), plan
-
-    def test_second_inline_apply_runs_no_job(self, spark):
-        from pyspark.sql import functions as F
-
-        from logstash_filter_jdbc_static_spark.operators.lookup import (
-            DEFAULT_INLINE_THRESHOLD,
-        )
-        from logstash_filter_jdbc_static_spark.operators.processor import (
-            LookupEnricher,
-        )
-        from logstash_filter_jdbc_static_spark.spec import PipelineSpec
-
-        n_dim = 50
-        assert n_dim < DEFAULT_INLINE_THRESHOLD
-        dim = spark.range(n_dim).select(
-            F.col("id").cast("string").alias("ip"),
-            F.concat(F.lit("s"), F.col("id").cast("string")).alias("name"),
-        )
-        spec = PipelineSpec(
-            lookups=[
-                {
-                    "id": "server",
-                    "query": "SELECT name FROM servers WHERE ip LIKE :pat",
-                    "parameters": {"pat": "%{tool}%"},
-                }
-            ]
-        )
-        fact = spark.range(100).select(
-            F.lit("c").alias("conv_id"),
-            F.col("id").cast("int").alias("turn_idx"),
-            F.col("id").cast("string").alias("tool"),
-        )
-        enr = LookupEnricher(spec, {"servers": dim}, dim_rows={"servers": n_dim})
-        first = enr.apply(fact)
-        before = self._jobs(spark)
-        second = enr.apply(fact)
-        assert self._jobs(spark) == before, "second inline apply ran a Spark job"
-        assert "Join" not in _plan(second, "simple")
-        assert sorted(map(str, first.collect())) == sorted(map(str, second.collect()))

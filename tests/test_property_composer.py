@@ -81,11 +81,7 @@ JOINTS = [
 
 TAG_ROWS = [("k0", "hot"), ("k1", "hot"), ("k1", "cold"), ("k3", "x")]
 
-ENGINES = [
-    {},
-    {"inline_threshold": 0, "pattern_strategy": "broadcast_map"},
-    {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-]
+ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
 
 
 @st.composite

@@ -42,12 +42,9 @@ dim_rows = st.lists(
 use_default = st.booleans()
 use_prepared = st.booleans()
 use_like = st.booleans()
-# inline_threshold=0 pins non-equi lookups onto the map-probe path
-# (otherwise the tiny dims always take the inline literal-array path),
-# and both map-back strategies must agree with the oracle.
-engine_cfg = st.sampled_from(
-    [None, (0, "broadcast_map"), (0, "shuffle_map")]
-)
+# Both map-back strategies of the non-equi map-probe path must agree
+# with the oracle.
+engine_cfg = st.sampled_from(["broadcast_map", "shuffle_map"])
 
 
 @pytest.mark.slow
@@ -78,10 +75,9 @@ def test_spark_matches_row_at_a_time_oracle(
     fact_df = spark.createDataFrame(fact_data, FACT_SCHEMA)
     dim_df = spark.createDataFrame(dims, DIM_SCHEMA)
 
-    kw = {}
-    if engine is not None:
-        kw = {"inline_threshold": engine[0], "pattern_strategy": engine[1]}
-    enricher = LookupEnricher(spec, {"servers": dim_df}, **kw)
+    enricher = LookupEnricher(
+        spec, {"servers": dim_df}, pattern_strategy=engine
+    )
     got = {
         r["turn_idx"]: (
             None if r["server"] is None else [d.asDict() for d in r["server"]],
@@ -104,8 +100,8 @@ def test_spark_matches_row_at_a_time_oracle(
 
 
 # Widened WHERE surface (round-2 verdict #1): randomized facts/dims
-# against each new shape, on every physical path (inline, map-probe
-# broadcast, map-probe shuffle) — Spark vs the row-at-a-time oracle.
+# against each new shape, on every physical path (map-probe broadcast,
+# map-probe shuffle) — Spark vs the row-at-a-time oracle.
 WIDE_TEMPLATES = [
     "ip = :ip OR name = 'v1'",
     "ip IN (:ip, 'k2')",
@@ -268,10 +264,9 @@ def test_widened_where_matches_row_at_a_time_oracle(
     fact_df = spark.createDataFrame(fact_data, FACT_SCHEMA)
     dim_df = spark.createDataFrame(dims, DIM_SCHEMA)
 
-    kw = {}
-    if engine is not None:
-        kw = {"inline_threshold": engine[0], "pattern_strategy": engine[1]}
-    enricher = LookupEnricher(spec, {"servers": dim_df}, **kw)
+    enricher = LookupEnricher(
+        spec, {"servers": dim_df}, pattern_strategy=engine
+    )
     got = {
         r["turn_idx"]: (
             None if r["server"] is None else sorted(
@@ -497,10 +492,9 @@ def test_order_limit_matches_row_at_a_time_oracle(
     fact_df = spark.createDataFrame(fact_data, FACT_SCHEMA)
     dim_df = spark.createDataFrame(dims, DIM_SCHEMA)
 
-    kw = {}
-    if engine is not None:
-        kw = {"inline_threshold": engine[0], "pattern_strategy": engine[1]}
-    enricher = LookupEnricher(spec, {"servers": dim_df}, **kw)
+    enricher = LookupEnricher(
+        spec, {"servers": dim_df}, pattern_strategy=engine
+    )
     got = {
         r["turn_idx"]: (
             None if r["server"] is None else [d["name"] for d in r["server"]]
@@ -565,10 +559,9 @@ def test_result_shapes_match_row_at_a_time_oracle(
     fact_df = spark.createDataFrame(fact_data, FACT_SCHEMA)
     dim_df = spark.createDataFrame(dims, DIM_SCHEMA)
 
-    kw = {}
-    if engine is not None:
-        kw = {"inline_threshold": engine[0], "pattern_strategy": engine[1]}
-    enricher = LookupEnricher(spec, {"servers": dim_df}, **kw)
+    enricher = LookupEnricher(
+        spec, {"servers": dim_df}, pattern_strategy=engine
+    )
     got = {
         r["turn_idx"]: (
             None if r["server"] is None else [tuple(d) for d in r["server"]]
@@ -902,10 +895,9 @@ def test_setops_and_derived_match_row_at_a_time_oracle(
     fact_df = spark.createDataFrame(fact_data, FACT_SCHEMA)
     dim_df = spark.createDataFrame(dims, DIM_SCHEMA)
 
-    kw = {}
-    if engine is not None:
-        kw = {"inline_threshold": engine[0], "pattern_strategy": engine[1]}
-    enricher = LookupEnricher(spec, {"servers": dim_df}, **kw)
+    enricher = LookupEnricher(
+        spec, {"servers": dim_df}, pattern_strategy=engine
+    )
 
     def norm(payload):
         if payload is None:

@@ -301,26 +301,30 @@ class TestEngineOptions:
 
     def test_defaults_are_none(self):
         spec = PipelineSpec(lookups=self._LOOKUPS)
-        assert spec.inline_threshold is None
         assert spec.pattern_strategy is None
 
     def test_from_json_engine_block(self):
         spec = PipelineSpec.from_json(
             {
                 "local_lookups": self._LOOKUPS,
-                "engine": {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
+                "engine": {"pattern_strategy": "shuffle_map"},
             }
         )
-        assert spec.inline_threshold == 0
         assert spec.pattern_strategy == "shuffle_map"
 
+    def test_removed_inline_threshold_is_unknown(self):
+        with pytest.raises(
+            ValidationError,
+            match=r"Unknown engine option\(s\): \['inline_threshold'\] "
+                  r"\(supported: pattern_strategy\)",
+        ):
+            PipelineSpec(lookups=self._LOOKUPS, engine={"inline_threshold": 0})
+
     def test_bad_values_rejected(self):
-        with pytest.raises(ValidationError, match="inline_threshold"):
-            PipelineSpec(lookups=self._LOOKUPS, engine={"inline_threshold": -1})
-        with pytest.raises(ValidationError, match="inline_threshold"):
-            # bool is an int subclass; a typo'd `true` must not become 1
-            PipelineSpec(lookups=self._LOOKUPS, engine={"inline_threshold": True})
-        with pytest.raises(ValidationError, match="pattern_strategy"):
+        with pytest.raises(
+            ValidationError,
+            match="'broadcast_map', 'shuffle_map', 'auto'",
+        ):
             PipelineSpec(lookups=self._LOOKUPS, engine={"pattern_strategy": "nope"})
         with pytest.raises(ValidationError, match="Unknown engine option"):
             PipelineSpec(lookups=self._LOOKUPS, engine={"warp_speed": True})
@@ -328,7 +332,7 @@ class TestEngineOptions:
             PipelineSpec(lookups=self._LOOKUPS, engine="fast")
 
     def test_every_enricher_construction_inherits_engine(self, spark):
-        """The knobs must reach LookupEnricher from the spec alone — the
+        """The knob must reach LookupEnricher from the spec alone — the
         streaming refresh seam and any direct caller construct enrichers
         without re-plumbing engine kwargs."""
         from logstash_filter_jdbc_static_spark.operators.processor import (
@@ -337,11 +341,10 @@ class TestEngineOptions:
 
         spec = PipelineSpec(
             lookups=self._LOOKUPS,
-            engine={"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
+            engine={"pattern_strategy": "shuffle_map"},
         )
         dim = spark.createDataFrame([("1.1.1.1", "a")], "ip string, name string")
         enr = LookupEnricher(spec, {"servers": dim})
-        assert enr.compiled[0].inline_threshold == 0
         assert enr.compiled[0].pattern_strategy == "shuffle_map"
         # explicit argument still wins over the spec
         enr2 = LookupEnricher(spec, {"servers": dim}, pattern_strategy="broadcast_map")

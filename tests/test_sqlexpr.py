@@ -166,11 +166,7 @@ DIM_ROWS = [
 ]
 DIM_SCHEMA = "id: int, name: string, price: int, qty: int"
 
-ENGINES = [
-    {},
-    {"inline_threshold": 0},
-    {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-]
+ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
 
 
 @pytest.mark.parametrize("kw", ENGINES)
@@ -341,9 +337,7 @@ ndims = st.lists(
     ),
     min_size=0, max_size=8,
 )
-engine_cfg = st.sampled_from(
-    [None, (0, "broadcast_map"), (0, "shuffle_map")]
-)
+engine_cfg = st.sampled_from(["broadcast_map", "shuffle_map"])
 
 
 @pytest.mark.slow
@@ -377,10 +371,9 @@ def test_expression_lookups_match_row_at_a_time_oracle(
     fact_df = spark.createDataFrame(fact_data, FACT_SCHEMA)
     dim_df = spark.createDataFrame(dims, NDIM_SCHEMA)
 
-    kw = {}
-    if engine is not None:
-        kw = {"inline_threshold": engine[0], "pattern_strategy": engine[1]}
-    enricher = LookupEnricher(spec, {"items": dim_df}, **kw)
+    enricher = LookupEnricher(
+        spec, {"items": dim_df}, pattern_strategy=engine
+    )
     got = {
         r["turn_idx"]: (
             None if r["x"] is None else sorted(
@@ -790,11 +783,7 @@ class TestConversionFunctions:
             [("c0", 0, "t1"), ("c1", 1, "t2"), ("c2", 2, "t9")],
             "conv_id string, turn_idx int, tool string",
         )
-        for kw in (
-            {},
-            {"inline_threshold": 0, "pattern_strategy": "broadcast_map"},
-            {"inline_threshold": 0, "pattern_strategy": "shuffle_map"},
-        ):
+        for kw in ENGINES:
             out = LookupEnricher(spec, {"d": dim}, **kw).apply(fact)
             got = {
                 r["turn_idx"]: (

@@ -1,8 +1,10 @@
-"""Third-wave query behavior: conjunctive multi-key lookup stays on the
-no-join inline path, windowed counts partition the event stream exactly,
+"""Third-wave query behavior: conjunctive multi-key lookup shuffles only
+its slim parameter tuple, windowed counts partition the event stream exactly,
 and multimodal feature extraction preserves row identity and typing."""
 
 from __future__ import annotations
+
+import re
 
 from pyspark.sql import functions as F
 
@@ -14,12 +16,21 @@ from logstash_filter_jdbc_static_spark.queries_pipeline3 import (
 
 
 class TestConjunctiveLookup:
-    def test_inline_path_no_join(self, spark, sf_dir):
-        # 8-row dim => inline literal-array filter: the theta lookup must
-        # compile to a pure projection (zero joins, zero shuffles on the
-        # fact side beyond the cached derivation).
+    def test_map_probe_shuffles_only_parameter_tuple(self, spark, sf_dir):
+        # Beyond the cached transcript staging (hash on user_id), the
+        # only shuffle is the distinct() over the slim __mk_* parameter
+        # tuple; the tuple->payload map returns by broadcast, so no fact
+        # column is ever a shuffle key.
         plan = lookup_conjunctive(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        assert "Join" not in plan, plan
+        keys = {
+            k.split("#")[0]
+            for sig in re.findall(
+                r"(?<!Broadcast)Exchange hashpartitioning\(([^)]*)\)", plan
+            )
+            for k in sig.split(", ")[:-1]
+        }
+        assert keys == {"user_id", "__mk_hosts_0", "__mk_hosts_1"}, plan
+        assert "SortMergeJoin" not in plan, plan
 
     def test_conjunction_semantics(self, spark, sf_dir):
         out = lookup_conjunctive(spark, sf_dir)
