@@ -440,7 +440,8 @@ class TestJoinExpressions:
         }
 
     @pytest.mark.parametrize(
-        "kw", [{}, {"pattern_strategy": "shuffle_map"}]
+        "kw", [{}, {"pattern_strategy": "auto"},
+               {"pattern_strategy": "shuffle_map"}]
     )
     def test_expression_projection_and_predicate(self, spark, kw):
         got = self._run(
@@ -521,7 +522,8 @@ class TestJoinExpressions:
         assert got == exp
 
     @pytest.mark.parametrize(
-        "kw", [{}, {"pattern_strategy": "shuffle_map"}]
+        "kw", [{}, {"pattern_strategy": "auto"},
+               {"pattern_strategy": "shuffle_map"}]
     )
     def test_mixed_dim_param_expression_across_relations(self, spark, kw):
         # round-5 latest: a mixed dim+param rhs whose dim columns span
@@ -615,7 +617,8 @@ class TestOnLiterals:
             )
 
     @pytest.mark.parametrize(
-        "kw", [{}, {"pattern_strategy": "shuffle_map"}]
+        "kw", [{}, {"pattern_strategy": "auto"},
+               {"pattern_strategy": "shuffle_map"}]
     )
     def test_left_join_on_literal_keeps_unmatched_rows(self, spark, kw):
         # ON ... AND b.band <> 'low': low-band prices (2) and

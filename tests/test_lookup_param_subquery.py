@@ -25,7 +25,11 @@ PLANS = [
 ]
 SCHEMA = "tool: string, plan: string, price: int, qty: int"
 
-ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
+# One case per pattern_strategy value: broadcast_map (the default),
+# auto (an exact distinct-tuple count picks the map-back), shuffle_map.
+ENGINES = [
+    {}, {"pattern_strategy": "auto"}, {"pattern_strategy": "shuffle_map"}
+]
 
 
 def _dims(spark):

@@ -220,9 +220,12 @@ def _enrich(spark, query, facts, **kw):
     }
 
 
-# Each case on BOTH map-back strategies of the theta map-probe path
-# (equi cases take the broadcast-hash path under either)
-PATH_KWARGS = [{}, {"pattern_strategy": "shuffle_map"}]
+# Each case under every pattern_strategy of the theta map-probe path:
+# broadcast_map (the default), auto, shuffle_map (equi cases take the
+# broadcast-hash path under each)
+PATH_KWARGS = [
+    {}, {"pattern_strategy": "auto"}, {"pattern_strategy": "shuffle_map"}
+]
 
 
 @pytest.mark.parametrize("kw", PATH_KWARGS)

@@ -32,7 +32,11 @@ PLANS = [("t1", "basic", 10), ("t1", "pro", 7), ("t1", None, 4),
          ("t2", "gold", 99), ("t3", "x", None)]
 REF = [("t1", 8), ("t2", 5), ("t3", None)]
 
-ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
+# One case per pattern_strategy value: broadcast_map (the default),
+# auto (an exact distinct-tuple count picks the map-back), shuffle_map.
+ENGINES = [
+    {}, {"pattern_strategy": "auto"}, {"pattern_strategy": "shuffle_map"}
+]
 
 
 class TestParser:

@@ -39,7 +39,11 @@ DIM = "ip string, name string"
 S1 = [("k1", "v1"), ("k2", "k2"), ("k1", "v2")]
 S2 = [("k1", "w1"), ("k3", "v1"), ("k1", "v1")]
 
-ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
+# One case per pattern_strategy value: broadcast_map (the default),
+# auto (an exact distinct-tuple count picks the map-back), shuffle_map.
+ENGINES = [
+    {}, {"pattern_strategy": "auto"}, {"pattern_strategy": "shuffle_map"}
+]
 
 
 class TestSplitter:

@@ -163,16 +163,11 @@ class TestThetaLookupMapProbe:
         # fan-out-regroup artifacts gone
         assert "first(" not in plan
 
-    def test_small_dim_like_apply_runs_no_job(self, spark):
-        """A LIKE lookup over a small dim, built without a row-count
-        hint, compiles and applies (twice, as a micro-batch loop would)
-        without a single Spark job: no eager dim count() or collect()
-        decides its physical path."""
+    @staticmethod
+    def _small_like_case(spark):
+        """A LIKE lookup over a 50-row dim: (spec, dims, fact)."""
         from pyspark.sql import functions as F
 
-        from logstash_filter_jdbc_static_spark.operators.processor import (
-            LookupEnricher,
-        )
         from logstash_filter_jdbc_static_spark.spec import PipelineSpec
 
         dim = spark.range(50).select(
@@ -193,15 +188,44 @@ class TestThetaLookupMapProbe:
             F.col("id").cast("int").alias("turn_idx"),
             F.col("id").cast("string").alias("tool"),
         )
+        return spec, {"servers": dim}, fact
+
+    def test_small_dim_like_apply_runs_no_job(self, spark):
+        """A LIKE lookup over a small dim, built without a row-count
+        hint, compiles and applies (twice, as a micro-batch loop would)
+        without a single Spark job: no eager dim count() or collect()
+        decides its physical path."""
+        from logstash_filter_jdbc_static_spark.operators.processor import (
+            LookupEnricher,
+        )
+
+        spec, dims, fact = self._small_like_case(spark)
         tracker = spark.sparkContext.statusTracker()
         before = tracker.getJobIdsForGroup(None)
-        enr = LookupEnricher(spec, {"servers": dim})
+        enr = LookupEnricher(spec, dims)
         first = enr.apply(fact)  # plan construction only
         second = enr.apply(fact)
         after = tracker.getJobIdsForGroup(None)
         assert len(after) == len(before), "small-dim lookup ran a Spark job"
         _assert_map_probe(_plan(first, "simple"), "server", ("conv_id", "turn_idx"))
         assert sorted(map(str, first.collect())) == sorted(map(str, second.collect()))
+
+    def test_dim_rows_hint_is_accepted_and_ignored(self, spark):
+        """Callers that still pass ``dim_rows=`` get the same lazy
+        map-probe plan and the same rows as callers that do not."""
+        from logstash_filter_jdbc_static_spark.operators.processor import (
+            LookupEnricher,
+        )
+
+        spec, dims, fact = self._small_like_case(spark)
+        tracker = spark.sparkContext.statusTracker()
+        before = tracker.getJobIdsForGroup(None)
+        hinted = LookupEnricher(spec, dims, dim_rows={"servers": 50}).apply(fact)
+        after = tracker.getJobIdsForGroup(None)
+        assert len(after) == len(before), "dim_rows hint ran a Spark job"
+        _assert_map_probe(_plan(hinted, "simple"), "server", ("conv_id", "turn_idx"))
+        plain = LookupEnricher(spec, dims).apply(fact)
+        assert sorted(map(str, hinted.collect())) == sorted(map(str, plain.collect()))
 
     def test_shuffle_map_strategy_still_correct(self, spark):
         out_b = {

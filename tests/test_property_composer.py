@@ -81,7 +81,11 @@ JOINTS = [
 
 TAG_ROWS = [("k0", "hot"), ("k1", "hot"), ("k1", "cold"), ("k3", "x")]
 
-ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
+# One case per pattern_strategy value: broadcast_map (the default),
+# auto (an exact distinct-tuple count picks the map-back), shuffle_map.
+ENGINES = [
+    {}, {"pattern_strategy": "auto"}, {"pattern_strategy": "shuffle_map"}
+]
 
 
 @st.composite

@@ -166,7 +166,11 @@ DIM_ROWS = [
 ]
 DIM_SCHEMA = "id: int, name: string, price: int, qty: int"
 
-ENGINES = [{}, {"pattern_strategy": "shuffle_map"}]
+# One case per pattern_strategy value: broadcast_map (the default),
+# auto (an exact distinct-tuple count picks the map-back), shuffle_map.
+ENGINES = [
+    {}, {"pattern_strategy": "auto"}, {"pattern_strategy": "shuffle_map"}
+]
 
 
 @pytest.mark.parametrize("kw", ENGINES)
@@ -298,7 +302,7 @@ EXPR_TEMPLATES = [
      "WHEN price BETWEEN 2 AND 3 THEN 'mid' "
      "WHEN qty NOT IN (1, 2) THEN 'many' ELSE 'rest' END AS band "
      "FROM items WHERE coalesce(price, 0) = :n", ["band"]),
-    # simple CASE (round 5): NULL scrutinee falls to ELSE on both engines
+    # simple CASE (round 5): NULL scrutinee falls to ELSE under every engine
     ("SELECT CASE name WHEN 'a' THEN 'A' WHEN 'bb' THEN 'B' "
      "ELSE '?' END AS t FROM items WHERE coalesce(qty, 0) = :n", ["t"]),
     # scalar subqueries in the PROJECTION (round 5): correlated ->
@@ -337,7 +341,7 @@ ndims = st.lists(
     ),
     min_size=0, max_size=8,
 )
-engine_cfg = st.sampled_from(["broadcast_map", "shuffle_map"])
+engine_cfg = st.sampled_from(["broadcast_map", "auto", "shuffle_map"])
 
 
 @pytest.mark.slow
