@@ -85,8 +85,6 @@ def build_configured_pipeline(spark: SparkSession, pipeline):
     stage. Loaders fetch through the real JDBC source and snapshots pin
     via DimensionStore (initial load fails fast, reference
     loader.rb:17-19). Returns (enricher, parser, projection_fn)."""
-    import json as _json
-
     from logstash_filter_jdbc_static_spark.operators.parse import GrokParser
     from logstash_filter_jdbc_static_spark.operators.processor import LookupEnricher
     from logstash_filter_jdbc_static_spark.plans.refresh import DimensionStore
@@ -97,7 +95,7 @@ def build_configured_pipeline(spark: SparkSession, pipeline):
         cfg = pipeline
     else:
         with open(pipeline) as f:
-            cfg = _json.load(f)
+            cfg = json.load(f)
     spec = PipelineSpec.from_json(cfg)
     store = DimensionStore(
         spark,
@@ -105,8 +103,6 @@ def build_configured_pipeline(spark: SparkSession, pipeline):
         [(ld, make_fetcher(spark, ld)) for ld in spec.loaders],
     )
     store.initial_load()
-    # the engine knob (spec.pattern_strategy) is inherited by
-    # LookupEnricher from the spec itself
     enricher = LookupEnricher(spec, store.dims())
     parser = GrokParser(
         cfg.get("grok", TRANSCRIPT_GROK),

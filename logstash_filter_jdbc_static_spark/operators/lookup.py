@@ -37,11 +37,9 @@ Spark-first physical design (NOT a port of the Derby execution path):
   |fact| x |dim| — the decisive ratio at 10^12 turns, where parameter
   tuples come from low-cardinality fields (tool/server names).  The BNLJ
   cost stays bounded by ``max_rows`` exactly as the reference's Derby
-  table scan is; ``pattern_strategy="shuffle_map"`` covers the
-  adversarial near-unique-tuple case (map too big to broadcast) by
-  joining the map back on its shuffle keys instead, and ``"auto"``
-  chooses by an exact ``count()`` of the ``localCheckpoint``-ed distinct
-  tuple frame, which the probe then reuses.
+  table scan is.  The map is always broadcast: a lookup whose distinct
+  tuples outgrow the driver's broadcast capacity fails with Spark's
+  broadcast error rather than shuffling the fact.
 - **WHERE surface** (round 3): the reference hands lookup SQL verbatim
   to Derby (lookup.rb:131-147), so ``parse_lookup_query`` accepts the
   full single-table predicate grammar — comparison ops, ``[NOT] LIKE``
@@ -61,6 +59,7 @@ Spark-first physical design (NOT a port of the Derby execution path):
 from __future__ import annotations
 
 import dataclasses
+import logging
 import re
 from dataclasses import dataclass, field
 
@@ -68,7 +67,6 @@ from pyspark.sql import Column, DataFrame, functions as F, types as T
 
 from logstash_filter_jdbc_static_spark.operators import sqlexpr
 from logstash_filter_jdbc_static_spark.spec import (
-    PATTERN_STRATEGIES,
     LookupSpec,
     ValidationError,
     is_sprintf,
@@ -259,7 +257,8 @@ class _Subquery:
     # params (``WHERE price > :lim`` / ``qty = base + :k``). No
     # snapshot groupBy can key such a frame, so the aggregate frame is
     # built AT PROBE TIME from the fact's distinct bound-param tuples
-    # (the same capped distinct-tuple design as the LIKE map-probe):
+    # (the same distinct-tuple design as the LIKE map-probe, with a
+    # shuffle join-back past THETA_TUPLE_BROADCAST_LIMIT tuples):
     # tuples theta-join the dim-sized sub frame, aggregate per tuple,
     # broadcast-join back onto the FACT — Derby re-executes the
     # prepared subquery per event (lookup.rb:131-147); this is the
@@ -1149,6 +1148,15 @@ def _collect_in_values(sq: _Subquery, dims: dict[str, DataFrame]) -> list:
     return [r[0] for r in rows]
 
 
+# Above this many distinct parameter tuples, a theta-parameterized
+# subquery's per-tuple frame is too big to broadcast safely (driver heap
+# + 8 GB broadcast cap), so ``_ThetaParamFrame.build`` joins it back
+# with a shuffle join instead. The frame counts its tuples anyway (it
+# materializes them for the nested builds and the IN-cap guard), so the
+# choice costs no extra pass over the fact.
+THETA_TUPLE_BROADCAST_LIMIT = 1_000_000
+
+
 @dataclass
 class _ThetaParamFrame:
     """Probe-time aggregate frame for a THETA-parameterized subquery
@@ -1156,15 +1164,15 @@ class _ThetaParamFrame:
     equalities (``price > :lim``, OR around a param predicate, mixed
     sub-column+param expressions), so no snapshot groupBy can key the
     frame. Instead, at probe time, the fact's DISTINCT bound-param
-    tuples (slim select + distinct + localCheckpoint — the LIKE
-    map-probe's design, and the same per-apply eagerness contract)
+    tuples (slim select + distinct + localCheckpoint + exact count — one
+    eager pass over the fact per apply, see ``CompiledLookup.apply``)
     theta-join the dim-sized sub frame on the full DNF with params
     substituted to tuple columns, aggregate per tuple, and the result
     broadcast-joins back onto the FACT by the same bound expressions —
     the per-DISTINCT-tuple hoist of Derby re-executing the prepared
     subquery per event (lib/logstash/filters/jdbc/lookup.rb:131-147).
     Cost: |distinct tuples| x |sub table| pair evaluations, constant in
-    fact count; past AUTO_TUPLE_BROADCAST_LIMIT tuples the join-back
+    fact count; past THETA_TUPLE_BROADCAST_LIMIT tuples the join-back
     degrades to a shuffle join instead of overflowing the driver."""
 
     sub_df: DataFrame  # snapshot sub frame, computed columns applied
@@ -1233,8 +1241,7 @@ class _ThetaParamFrame:
     def build(self, fact: DataFrame, params: dict) -> tuple[DataFrame, bool]:
         """Materialize the per-tuple aggregate frame against ``fact``'s
         distinct bound-param tuples. Returns (frame keyed by ``keys``,
-        broadcastable) — eager (localCheckpoint + exact count), like
-        the map-probe's "auto" strategy."""
+        broadcastable) — eager (localCheckpoint + exact count)."""
         key_of = dict(zip(self.pnames, self.keys))
         tuples = fact.select(
             *[
@@ -1243,9 +1250,13 @@ class _ThetaParamFrame:
             ]
         ).distinct().localCheckpoint(eager=True)
         n_tuples = tuples.count()
-        broadcastable = (
-            n_tuples <= CompiledLookup.AUTO_TUPLE_BROADCAST_LIMIT
-        )
+        broadcastable = n_tuples <= THETA_TUPLE_BROADCAST_LIMIT
+        if not broadcastable:
+            logging.getLogger("logstash_filter_jdbc_static_spark").warning(
+                "theta subquery on %r: %d distinct parameter tuples exceed "
+                "the broadcast limit (%d) — joining back with a shuffle",
+                self.table, n_tuples, THETA_TUPLE_BROADCAST_LIMIT,
+            )
         # NESTED parameterized subqueries (round-5 final): join each
         # per-tuple value onto the distinct-tuple frame so the theta
         # condition can read it as a pseudo-param column — a nested
@@ -6063,7 +6074,6 @@ class CompiledLookup:
         self,
         spec: LookupSpec,
         dim_df: DataFrame,
-        pattern_strategy: str = "broadcast_map",
         parsed_query: ParsedQuery | None = None,
     ):
         spec.raise_if_invalid()
@@ -6109,12 +6119,6 @@ class CompiledLookup:
                 dim_df = dim_df.withColumn(cname, sqlexpr.compile_expr(ast))
                 names.add(cname)
         self.dim_df = dim_df
-        if pattern_strategy not in PATTERN_STRATEGIES:
-            raise ValidationError(
-                [f"lookup '{spec.id}': unknown pattern_strategy "
-                 f"{pattern_strategy!r} ({' | '.join(PATTERN_STRATEGIES)})"]
-            )
-        self.pattern_strategy = pattern_strategy
         # Resolve projection against the dim schema.
         dim_fields = {f.name: f.dataType for f in dim_df.schema.fields}
         if self.query.aggregates or self.query.group_by:
@@ -6512,18 +6516,15 @@ class CompiledLookup:
     def apply(self, fact: DataFrame) -> DataFrame:
         """Enrich ``fact`` with this lookup's target + status columns.
 
-        Laziness contract: plan construction is lazy EXCEPT (a)
-        ``pattern_strategy="auto"`` on the map-probe path, which eagerly
-        materializes the slim distinct parameter-tuple frame
-        (localCheckpoint + exact count) to decide broadcast vs shuffle
-        map-back — one extra pass over ``fact``'s lineage per apply().
-        A THETA-parameterized subquery (``_ThetaParamFrame.build``)
-        materializes its per-tuple frame the same way under every
-        strategy. Callers looping apply() over an expensive uncached fact should
-        either cache the fact or pin the strategy explicitly. (b) The
-        first apply of an equi lookup runs the dim grouping's shuffle
-        stage and pins the grouped dim (``_grouped_dim``); later applies
-        of the same compiled lookup run no job."""
+        Laziness contract: plan construction is lazy EXCEPT (a) a
+        THETA-parameterized subquery (``_ThetaParamFrame.build``), which
+        eagerly materializes its slim distinct parameter-tuple frame
+        (localCheckpoint + exact count) — one extra pass over ``fact``'s
+        lineage per apply(); callers looping apply() over an expensive
+        uncached fact should cache the fact. (b) The first apply of an
+        equi lookup runs the dim grouping's shuffle stage and pins the
+        grouped dim (``_grouped_dim``); later applies of the same
+        compiled lookup run no job."""
         params = self._param_cols(fact.schema)
         valid = self._validity(params)
         sid = self.spec.id
@@ -6657,8 +6658,8 @@ class CompiledLookup:
                 # THETA shape (round-5 final): materialize the
                 # per-tuple aggregate frame from THIS fact's distinct
                 # bound-param tuples (eager — localCheckpoint + exact
-                # count, the map-probe "auto" contract); past the
-                # broadcast cap the join-back degrades to a shuffle
+                # count, apply()'s contract (a)); past the broadcast
+                # cap the join-back degrades to a shuffle
                 frame, broadcastable = frame.build(fact, params)
             cond = None
             for k, t in zip(keys, terms):
@@ -7023,20 +7024,11 @@ class CompiledLookup:
            (the map has exactly one row per tuple, including the
            all-null tuple from invalid params).
 
-        ``pattern_strategy="shuffle_map"`` swaps step 4's broadcast for a
-        plain shuffle join — for the adversarial case where tuples are
-        near-unique per row and the map outgrows broadcast. That path
-        DOES shuffle the fact once, hashpartitioned on the tuple keys
-        (both join sides exchange); what it still avoids vs the old
-        regroup is the fan-out (one map row per tuple, so no
-        first()-per-column re-aggregation) and the |fact| x |dim| probe.
-        Only broadcast_map keeps the fact fully shuffle-free.
-
-        ``pattern_strategy="auto"`` resolves between the two at plan
-        build: it ``localCheckpoint``-s the slim distinct tuple frame,
-        takes its exact ``count()`` and probes the checkpointed frame
-        (the cardinality guard for sprintf-over-free-text configs whose
-        near-unique tuples would outgrow the broadcast)."""
+        The plan stays lazy: nothing here runs a Spark job. A map that
+        outgrows the driver's broadcast capacity (near-unique tuples)
+        fails with Spark's broadcast error; a shuffle map-back would
+        hash-partition the whole fact first, even where AQE later
+        converts the join to a broadcast."""
         sid = self.spec.id
         with_keys = fact
         # One staged column per DISTINCT placeholder (ordered by first
@@ -7213,21 +7205,7 @@ class CompiledLookup:
         if fk_names:
             tuples = with_keys.select(
                 *[F.col(f).alias(m) for f, m in zip(fk_names, mk_names)]
-            ).distinct()
-            if self.pattern_strategy == "auto":
-                # "auto" needs the distinct-tuple cardinality BEFORE the
-                # plan commits to a broadcast. Materialize the slim
-                # distinct frame once (localCheckpoint truncates the
-                # upstream fact lineage) and count it exactly; the probe
-                # below reuses the checkpointed frame, so the fact is
-                # scanned once to build the tuples, not twice.
-                # NOTE this makes plan construction eager for "auto":
-                # documented in apply()'s contract.
-                tuples = tuples.localCheckpoint(eager=True)
-                strategy = self._resolve_pattern_strategy(tuples.count())
-            else:
-                strategy = self.pattern_strategy
-            tuples = tuples.select(
+            ).distinct().select(
                 "*",
                 *[
                     _like_regex(raw_pattern(), esc).alias(
@@ -7246,9 +7224,7 @@ class CompiledLookup:
             back = F.lit(True)
             for fn, mn in zip(fk_names, mk_names):
                 back = back & F.col(fn).eqNullSafe(F.col(mn))
-            if strategy == "broadcast_map":
-                key_payload = F.broadcast(key_payload)
-            joined = with_keys.join(key_payload, back, "left")
+            joined = with_keys.join(F.broadcast(key_payload), back, "left")
             return joined.drop(*fk_names, *mk_names)
         # No bound parameters: every fact row shares ONE payload (the dim
         # filtered by the literal predicates) — aggregate it to a single
@@ -7260,30 +7236,6 @@ class CompiledLookup:
                 payload_arr.alias("__raw_payload")
             )
         return with_keys.crossJoin(F.broadcast(single))
-
-    # Above this estimated distinct-tuple count, the tuple->payload map
-    # is too big to broadcast safely (driver heap + 8 GB broadcast cap);
-    # "auto" falls back to the shuffle join.
-    AUTO_TUPLE_BROADCAST_LIMIT = 1_000_000
-
-    def _resolve_pattern_strategy(self, n_tuples: int) -> str:
-        """broadcast_map/shuffle_map pass through; "auto" compares the
-        EXACT distinct-tuple count (from the localCheckpoint'd tuple
-        frame the probe reuses — see _apply_bnlj) against the broadcast
-        cap — the cardinality guard for near-unique parameter tuples."""
-        if self.pattern_strategy != "auto":
-            return self.pattern_strategy
-        n = n_tuples
-        if n > self.AUTO_TUPLE_BROADCAST_LIMIT:
-            import logging
-
-            logging.getLogger("logstash_filter_jdbc_static_spark").warning(
-                "lookup '%s': ~%d distinct parameter tuples exceed the "
-                "broadcast map limit (%d) — using shuffle_map",
-                self.spec.id, n, self.AUTO_TUPLE_BROADCAST_LIMIT,
-            )
-            return "shuffle_map"
-        return "broadcast_map"
 
 
 def _remap_having_aliases(having: tuple, ren: dict[str, str]) -> tuple:
@@ -7353,7 +7305,6 @@ class CompiledUnionLookup:
         self,
         spec: LookupSpec,
         dims: dict[str, DataFrame],
-        pattern_strategy: str = "broadcast_map",
     ):
         spec.raise_if_invalid()
         self.spec = spec
@@ -7476,7 +7427,6 @@ class CompiledUnionLookup:
                 CompiledLookup(
                     spec,
                     dim_df,
-                    pattern_strategy=pattern_strategy,
                     parsed_query=parsed,
                 )
             )

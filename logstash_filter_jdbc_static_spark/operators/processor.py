@@ -11,11 +11,21 @@ default-use tags (lookup.rb:119-129).
 
 from __future__ import annotations
 
+import copy
 import logging
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from logstash_filter_jdbc_static_spark.operators.lookup import CompiledLookup
+from logstash_filter_jdbc_static_spark.operators.lookup import (
+    CompiledLookup,
+    CompiledUnionLookup,
+    build_join_dim,
+    extract_derived_tables,
+    is_setop_query,
+    materialize_derived,
+    parse_lookup_query,
+    resolve_subqueries_with_dim,
+)
 from logstash_filter_jdbc_static_spark.spec import PipelineSpec, ValidationError
 
 MATCHED_COL = "matched"
@@ -71,29 +81,10 @@ class LookupEnricher:
         spec: PipelineSpec,
         dims: dict[str, DataFrame],
         dim_rows: dict[str, int] | None = None,
-        pattern_strategy: str | None = None,
     ):
-        # The engine knob resolves: explicit argument > spec's engine
-        # config > built-in default — so EVERY construction site (batch
-        # job, streaming refresh seam, direct Python callers) inherits a
-        # config's engine block without each caller re-plumbing it.
-        if pattern_strategy is None:
-            pattern_strategy = getattr(spec, "pattern_strategy", None)
-        if pattern_strategy is None:
-            pattern_strategy = "broadcast_map"
         self.spec = spec
         self.compiled: list[CompiledLookup] = []
         for lk in spec.lookups:
-            from logstash_filter_jdbc_static_spark.operators.lookup import (
-                CompiledUnionLookup,
-                build_join_dim,
-                extract_derived_tables,
-                materialize_derived,
-                is_setop_query,
-                parse_lookup_query,
-                resolve_subqueries_with_dim,
-            )
-
             # Derived tables (round-5 late): each FROM/JOIN (SELECT ...)
             # materializes ONCE per snapshot as its own dimension; the
             # outer query then compiles over the synthetic table name
@@ -101,8 +92,6 @@ class LookupEnricher:
             new_q, derived = extract_derived_tables(lk.query)
             lk_dims = dims
             if derived:
-                import copy
-
                 lk = copy.copy(lk)
                 lk.query = new_q
                 lk_dims = dict(dims)
@@ -116,11 +105,7 @@ class LookupEnricher:
                 # precedence): each leaf compiles against its own dim;
                 # the set-op wrapper shares this spec's binding/target/
                 # default machinery across branches
-                self.compiled.append(
-                    CompiledUnionLookup(
-                        lk, lk_dims, pattern_strategy=pattern_strategy
-                    )
-                )
+                self.compiled.append(CompiledUnionLookup(lk, lk_dims))
                 continue
             parsed = parse_lookup_query(lk.query)
             # Scalar subqueries resolve here — the one site with the
@@ -149,12 +134,7 @@ class LookupEnricher:
                     parsed, lk_dims, dim_df
                 )
             self.compiled.append(
-                CompiledLookup(
-                    lk,
-                    dim_df,
-                    pattern_strategy=pattern_strategy,
-                    parsed_query=parsed,
-                )
+                CompiledLookup(lk, dim_df, parsed_query=parsed)
             )
         _check_index_coverage(spec, self.compiled)
 

@@ -30,11 +30,14 @@ from logstash_filter_jdbc_static_spark.spec import LoaderSpec, LocalDbObject
 logger = logging.getLogger("logstash_filter_jdbc_static_spark")
 
 
-def fetch_with_guard(fetch: Callable[[], DataFrame], loader: LoaderSpec,
-                     spark: SparkSession) -> DataFrame:
-    """Loader fetch + row-count guard (loader.rb:23-31): returns an EMPTY
-    frame with the fetched schema when the source has 0 rows or more than
-    max_rows, otherwise the fetched rows PINNED as a snapshot.
+def fetch_with_guard(
+    fetch: Callable[[], DataFrame], loader: LoaderSpec, spark: SparkSession
+) -> tuple[DataFrame, int]:
+    """Loader fetch + row-count guard (loader.rb:23-31): returns
+    ``(frame, rows)`` — an EMPTY frame with the fetched schema and 0 when
+    the source has 0 rows or more than max_rows, otherwise the fetched
+    rows PINNED as a snapshot and their count (the ``rows_loaded``
+    bookkeeping in ``DimensionStore.row_counts``).
 
     One remote query total: the bounded fetch (limit(max_rows+1)) is
     materialized JVM-side via ``localCheckpoint(eager=True)`` — a lazy
@@ -46,14 +49,6 @@ def fetch_with_guard(fetch: Callable[[], DataFrame], loader: LoaderSpec,
     write. On a multi-executor cluster with dynamic allocation, swap
     localCheckpoint for a reliable ``spark.checkpoint`` dir; the
     semantics here are identical."""
-    return fetch_with_guard_counted(fetch, loader, spark)[0]
-
-
-def fetch_with_guard_counted(
-    fetch: Callable[[], DataFrame], loader: LoaderSpec, spark: SparkSession
-) -> tuple[DataFrame, int]:
-    """fetch_with_guard plus the guard's own row count (the
-    ``rows_loaded`` bookkeeping in ``DimensionStore.row_counts``)."""
     pinned = fetch().limit(loader.max_rows + 1).localCheckpoint(eager=True)
     n = pinned.count()
     if n == 0 or n > loader.max_rows:
@@ -154,7 +149,7 @@ class DimensionStore:
         self.last_errors: dict[str, str] = {}
         for loader, fetch in self.loaders:
             try:
-                df, n = fetch_with_guard_counted(fetch, loader, self.spark)
+                df, n = fetch_with_guard(fetch, loader, self.spark)
             except Exception as e:
                 if strict:
                     raise

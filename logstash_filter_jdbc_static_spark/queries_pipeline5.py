@@ -10,9 +10,10 @@ two physical paths. Each query below pins one new shape end-to-end:
 2. ``lookup_or_disjunction``— equality OR pattern-LIKE, map-probe path
 3. ``lookup_between``       — BETWEEN :lo AND :hi + static numeric/null
                               predicates, map-probe path
-4. ``lookup_shuffle_map``   — the shuffle_map map-back strategy under the
-                              driver gate (round-2 verdict #4), with a
-                              conversation-derived high-cardinality tuple
+4. ``lookup_shuffle_map``   — the broadcast tuple->payload map-back
+                              under the driver gate with a
+                              conversation-derived high-cardinality
+                              tuple (1,000 distinct values)
 5. ``conv_minhash_dedup``   — conversation-level NEAR-dup via MinHash+LSH
                               over per-conversation documents (verdict #6)
 6. ``lookup_func_column``   — function-wrapped lookup key
@@ -228,11 +229,11 @@ def lookup_between(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ------------------------------------------------------------------
-# 4. shuffle_map strategy under the driver gate: a conversation-derived
-#    parameter tuple (hundreds of distinct 3-digit suffixes) probed
-#    against the customer dim with the shuffle join map-back — the
-#    adversarial-cardinality path (round-2 verdict #4) now gated, not
-#    just property-tested.
+# 4. high-cardinality map-back under the driver gate: a
+#    conversation-derived parameter tuple (up to 1,000 distinct 3-digit
+#    suffixes) probed against the customer dim, the tuple->payload map
+#    broadcast back onto the fact. The registry id predates the removal
+#    of the shuffle map-back and is kept so the registry is unchanged.
 # ------------------------------------------------------------------
 
 
@@ -274,9 +275,7 @@ def lookup_shuffle_map(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     dim = load_table_split(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    enricher = LookupEnricher(
-        spec, {"customer": dim}, pattern_strategy="shuffle_map"
-    )
+    enricher = LookupEnricher(spec, {"customer": dim})
     out = enricher.apply(t)
     return out.select(
         "conv_id",

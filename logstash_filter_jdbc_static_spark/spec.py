@@ -17,6 +17,7 @@ fails fast at plugin ``register``, jdbc_static.rb:126-145).
 
 from __future__ import annotations
 
+import json
 import re
 from typing import Any
 
@@ -27,9 +28,6 @@ from logstash_filter_jdbc_static_spark.schema import columns_to_struct
 DEFAULT_TAG_ON_FAILURE = ["_jdbcstaticfailure"]
 DEFAULT_TAG_ON_DEFAULT_USE = ["_jdbcstaticdefaultsused"]
 DEFAULT_MAX_ROWS = 1_000_000  # loader.rb:73
-# How a theta lookup's tuple->payload map joins back onto the fact
-# (operators/lookup.py::CompiledLookup._apply_bnlj).
-PATTERN_STRATEGIES = ("broadcast_map", "shuffle_map", "auto")
 
 _SPRINTF_RE = re.compile(r"%\{([^}]+)\}")
 # :named placeholders in lookup SQL (lookup.rb's Sequel named-param style).
@@ -272,7 +270,6 @@ class PipelineSpec:
         tag_on_default_use: list[str] | None = None,
         plugin_jdbc: dict | None = None,
         loader_schedule: str | None = None,
-        engine: dict | None = None,
     ):
         globals_ = {
             "tag_on_failure": tag_on_failure,
@@ -285,30 +282,6 @@ class PipelineSpec:
         # RepeatingLoadRunner for long-running/streaming pipelines, while
         # a one-shot batch run is a SingleLoadRunner by construction
         # (jdbc_static.rb:189-204's runner choice).
-        # Engine tuning surface (Spark-side knobs with no reference
-        # counterpart — the reference's Derby engine has no equivalent
-        # choices): pattern_strategy (broadcast_map | shuffle_map | auto
-        # map-back for theta lookups). Validated here so a bad
-        # --pipeline config fails at register time like everything
-        # else.
-        if engine is not None and not isinstance(engine, dict):
-            errors.append("The 'engine' option must be a Hash")
-            engine = {}
-        engine = dict(engine or {})
-        self.pattern_strategy = engine.pop("pattern_strategy", None)
-        if (
-            self.pattern_strategy is not None
-            and self.pattern_strategy not in PATTERN_STRATEGIES
-        ):
-            errors.append(
-                "The 'engine.pattern_strategy' option must be one of "
-                + ", ".join(f"'{v}'" for v in PATTERN_STRATEGIES)
-            )
-        if engine:
-            errors.append(
-                f"Unknown engine option(s): {sorted(engine)} "
-                "(supported: pattern_strategy)"
-            )
         self.loader_schedule = loader_schedule
         if loader_schedule is not None:
             from logstash_filter_jdbc_static_spark.plans.schedule import (
@@ -346,10 +319,22 @@ class PipelineSpec:
         (add_plugin_configs, jdbc_static.rb:220-239 — the docs' own
         one-remote-DB-many-loaders shape, docs/index.asciidoc:85-131),
         plus the pipeline-level parse keys ``grok`` / ``grok_required``
-        consumed by job.py."""
-        import json as _json
+        consumed by job.py.
 
-        cfg = source if isinstance(source, dict) else _json.load(open(source))
+        A config carrying an ``engine`` block is rejected: the engine
+        has no physical-plan options (every lookup runs one plan, as the
+        reference runs one prepared statement), and dropping the block
+        silently would lose the setting it was written for."""
+        if isinstance(source, dict):
+            cfg = source
+        else:
+            with open(source) as f:
+                cfg = json.load(f)
+        if "engine" in cfg:
+            raise ValidationError(
+                ["The 'engine' option is not supported: lookups take no "
+                 "physical-plan options (remove the 'engine' block)"]
+            )
         return cls(
             lookups=cfg.get("local_lookups", cfg.get("lookups", [])),
             db_objects=cfg.get("local_db_objects"),
@@ -358,7 +343,6 @@ class PipelineSpec:
             tag_on_default_use=cfg.get("tag_on_default_use"),
             plugin_jdbc={k: cfg.get(k) for k in cls.PLUGIN_JDBC_KEYS},
             loader_schedule=cfg.get("loader_schedule"),
-            engine=cfg.get("engine"),
         )
 
     def _validate_lookups(self) -> list[str]:

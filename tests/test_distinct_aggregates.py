@@ -5,7 +5,7 @@ Compile: ``sum_distinct`` -> F.sum_distinct; ``avg(DISTINCT x)`` =
 sum(DISTINCT x)/count(DISTINCT x) (the distinct multiset's mean —
 long/long division is double, matching avg's type for integral
 inputs); MIN/MAX(DISTINCT) parse to plain min/max (a SQL no-op). Every golden
-cross-checks the row oracle under every pattern_strategy."""
+cross-checks the row oracle."""
 
 from __future__ import annotations
 
@@ -26,11 +26,9 @@ PLANS = [
 ]
 SCHEMA = "tool: string, plan: string, price: int, qty: int"
 
-# One case per pattern_strategy value: broadcast_map (the default),
-# auto (an exact distinct-tuple count picks the map-back), shuffle_map.
-ENGINES = [
-    {}, {"pattern_strategy": "auto"}, {"pattern_strategy": "shuffle_map"}
-]
+# Lookup constructor kwargs per case: one case, the default (and only)
+# plan; kept as a parameter so the test ids stay stable.
+ENGINES = [{}]
 
 
 def _dims(spark):

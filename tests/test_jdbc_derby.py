@@ -98,7 +98,8 @@ class TestDerbyLoader:
 
     def test_max_rows_guard_on_real_source(self, spark, derby_servers):
         loader = _loader('SELECT "ip", "name", "location" FROM servers', max_rows=2)
-        guarded = fetch_with_guard(make_fetcher(spark, loader), loader, spark)
+        guarded, n = fetch_with_guard(make_fetcher(spark, loader), loader, spark)
+        assert n == 0
         assert guarded.count() == 0
         assert guarded.columns == ["ip", "name", "location"]
 
@@ -186,7 +187,8 @@ class TestDerbyLargeRecordset:
                 "jdbc_connection_string": url,
             }
         )
-        dim = fetch_with_guard(make_fetcher(spark, loader), loader, spark)
+        dim, n = fetch_with_guard(make_fetcher(spark, loader), loader, spark)
+        assert n == 65536
         assert dim.count() == 65536  # default max_rows=1M admits it
         spec = PipelineSpec(
             lookups=[

@@ -439,10 +439,7 @@ class TestJoinExpressions:
             for r in enr.apply(fact).select("tool", target).collect()
         }
 
-    @pytest.mark.parametrize(
-        "kw", [{}, {"pattern_strategy": "auto"},
-               {"pattern_strategy": "shuffle_map"}]
-    )
+    @pytest.mark.parametrize("kw", [{}])
     def test_expression_projection_and_predicate(self, spark, kw):
         got = self._run(
             spark,
@@ -521,10 +518,7 @@ class TestJoinExpressions:
             )
         assert got == exp
 
-    @pytest.mark.parametrize(
-        "kw", [{}, {"pattern_strategy": "auto"},
-               {"pattern_strategy": "shuffle_map"}]
-    )
+    @pytest.mark.parametrize("kw", [{}])
     def test_mixed_dim_param_expression_across_relations(self, spark, kw):
         # round-5 latest: a mixed dim+param rhs whose dim columns span
         # BOTH joined relations — build_join_dim flat-rewrites the AST's
@@ -616,10 +610,7 @@ class TestOnLiterals:
                 "JOIN price_bands b ON 1 = 1 WHERE p.tool = :tool"
             )
 
-    @pytest.mark.parametrize(
-        "kw", [{}, {"pattern_strategy": "auto"},
-               {"pattern_strategy": "shuffle_map"}]
-    )
+    @pytest.mark.parametrize("kw", [{}])
     def test_left_join_on_literal_keeps_unmatched_rows(self, spark, kw):
         # ON ... AND b.band <> 'low': low-band prices (2) and
         # out-of-band prices (10) keep their row with a NULL band —

@@ -1,7 +1,6 @@
 """Unit tests for the widened lookup-SQL parser (round-2 verdict #1) and
-golden e2e coverage of the new WHERE shapes on all three physical paths,
-plus the docs' two-field Sprintfier template (docs/index.asciidoc:580)
-and the "auto" pattern-strategy cardinality guard."""
+golden e2e coverage of the new WHERE shapes on every physical path,
+plus the docs' two-field Sprintfier template (docs/index.asciidoc:580)."""
 
 from __future__ import annotations
 
@@ -220,12 +219,9 @@ def _enrich(spark, query, facts, **kw):
     }
 
 
-# Each case under every pattern_strategy of the theta map-probe path:
-# broadcast_map (the default), auto, shuffle_map (equi cases take the
-# broadcast-hash path under each)
-PATH_KWARGS = [
-    {}, {"pattern_strategy": "auto"}, {"pattern_strategy": "shuffle_map"}
-]
+# Lookup constructor kwargs per case: one case, the default (and only)
+# plan; kept as a parameter so the test ids stay stable.
+PATH_KWARGS = [{}]
 
 
 @pytest.mark.parametrize("kw", PATH_KWARGS)
@@ -347,51 +343,6 @@ class TestTwoFieldSprintfier:
         assert rows[3]["person"] is None
         assert rows[3]["tags"] == ["_jdbcstaticfailure"]
         assert rows[3]["matched"] is False
-
-
-class TestAutoPatternStrategy:
-    def _facts(self, spark, n):
-        return spark.createDataFrame(
-            [("c", i, f"k{i}", None, None) for i in range(n)], FACT_SCHEMA
-        )
-
-    def test_auto_low_cardinality_broadcasts(self, spark):
-        spec = PipelineSpec(
-            lookups=[
-                {
-                    "id": "hit",
-                    "query": "SELECT name FROM dim WHERE key LIKE :k",
-                    "parameters": {"k": "%{k}%"},
-                }
-            ]
-        )
-        dim = spark.createDataFrame(DIM_ROWS, DIM_SCHEMA)
-        enr = LookupEnricher(spec, {"dim": dim}, pattern_strategy="auto")
-        out = enr.apply(self._facts(spark, 20))
-        assert out.count() == 20  # resolves + runs without error
-
-    def test_auto_falls_back_above_limit(self, spark, monkeypatch):
-        from logstash_filter_jdbc_static_spark.operators import lookup as L
-
-        monkeypatch.setattr(L.CompiledLookup, "AUTO_TUPLE_BROADCAST_LIMIT", 5)
-        spec = PipelineSpec(
-            lookups=[
-                {
-                    "id": "hit",
-                    "query": "SELECT name FROM dim WHERE key LIKE :k",
-                    "parameters": {"k": "%{k}%"},
-                }
-            ]
-        )
-        dim = spark.createDataFrame(DIM_ROWS, DIM_SCHEMA)
-        enr = LookupEnricher(spec, {"dim": dim}, pattern_strategy="auto")
-        cl = enr.compiled[0]
-        # 50 facts carry 50 distinct k values > patched limit of 5
-        assert cl._resolve_pattern_strategy(50) == "shuffle_map"
-        assert cl._resolve_pattern_strategy(5) == "broadcast_map"
-        # and end-to-end results stay correct on the fallback path
-        out = enr.apply(self._facts(spark, 50))
-        assert out.count() == 50
 
 
 class TestFuncWrappedColumns:
@@ -572,7 +523,6 @@ class TestWidenedConfigEndToEnd:
         )
         spec = PipelineSpec.from_json(cfg)
         spec2 = PipelineSpec.from_json(cfg)
-        assert spec.pattern_strategy == "auto"
 
         fact_schema = T.StructType(
             [

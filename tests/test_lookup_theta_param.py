@@ -5,7 +5,7 @@ and expressions mixing SUB columns with params. The reference
 re-executes the prepared subquery per event against Derby
 (lib/logstash/filters/jdbc/lookup.rb:131-147); here the aggregate frame
 is built AT PROBE TIME from the fact's distinct bound-param tuples
-(the LIKE map-probe's capped distinct-tuple design), theta-joined
+(the LIKE map-probe's distinct-tuple design), theta-joined
 against the dim-sized sub frame, aggregated per tuple, and
 broadcast-joined back onto the FACT (_ThetaParamFrame). Every golden
 run cross-checks the row-at-a-time oracle on every event."""
@@ -27,11 +27,9 @@ PLANS = [
 ]
 SCHEMA = "tool: string, plan: string, price: int, qty: int"
 
-# One case per pattern_strategy value: broadcast_map (the default),
-# auto (an exact distinct-tuple count picks the map-back), shuffle_map.
-ENGINES = [
-    {}, {"pattern_strategy": "auto"}, {"pattern_strategy": "shuffle_map"}
-]
+# Lookup constructor kwargs per case: one case, the default (and only)
+# plan; kept as a parameter so the test ids stay stable.
+ENGINES = [{}]
 
 # events carry a numeric threshold and a LIKE pattern alongside the
 # tool key; the NULL-threshold and NULL-tool rows pin SQL's
@@ -589,3 +587,42 @@ class TestThetaPlan:
         assert "Exchange rangepartitioning" not in plan
         # and it actually runs
         assert out.agg(F.count(F.lit(1))).collect()[0][0] == 64
+
+    def test_join_back_shuffles_past_broadcast_limit(
+        self, spark, monkeypatch, caplog
+    ):
+        """Past ``THETA_TUPLE_BROADCAST_LIMIT`` distinct tuples the
+        theta frame joins back onto the fact without a broadcast hint
+        (and says so in a warning); the rows still equal the row
+        oracle's."""
+        import logging
+
+        from logstash_filter_jdbc_static_spark.operators import lookup as L
+
+        monkeypatch.setattr(L, "THETA_TUPLE_BROADCAST_LIMIT", 0)
+        query = (
+            "SELECT plan AS plan, price AS price FROM plans "
+            "WHERE tool = :tool AND price <= "
+            "(SELECT max(price) FROM plans WHERE price < :lim)"
+        )
+        with caplog.at_level(logging.WARNING, "logstash_filter_jdbc_static_spark"):
+            got = _run(spark, query, {}, default={"plan": "dflt", "price": -1})
+        assert got[("t1", 8)] == [(None, 4), ("pro", 7)]
+        assert any(
+            "exceed the broadcast limit (0)" in r.message for r in caplog.records
+        )
+        out = LookupEnricher(
+            PipelineSpec(lookups=[{
+                "id": "u",
+                "query": query,
+                "parameters": {"tool": "tool", "lim": "lim"},
+            }]),
+            _dims(spark),
+        ).apply(spark.createDataFrame(FACTS, FACT_SCHEMA))
+        # the planned (pre-AQE) join of the frame's __psub* keys
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        joins = [
+            ln for ln in plan.splitlines() if "Join [" in ln and "__psub" in ln
+        ]
+        assert joins, plan
+        assert not any("BroadcastHashJoin" in ln for ln in joins), plan

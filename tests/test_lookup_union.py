@@ -39,11 +39,9 @@ DIM = "ip string, name string"
 S1 = [("k1", "v1"), ("k2", "k2"), ("k1", "v2")]
 S2 = [("k1", "w1"), ("k3", "v1"), ("k1", "v1")]
 
-# One case per pattern_strategy value: broadcast_map (the default),
-# auto (an exact distinct-tuple count picks the map-back), shuffle_map.
-ENGINES = [
-    {}, {"pattern_strategy": "auto"}, {"pattern_strategy": "shuffle_map"}
-]
+# Lookup constructor kwargs per case: one case, the default (and only)
+# plan; kept as a parameter so the test ids stay stable.
+ENGINES = [{}]
 
 
 class TestSplitter:

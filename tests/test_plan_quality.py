@@ -118,7 +118,7 @@ class TestThetaLookupMapProbe:
     back via a broadcast hash join. A regroup that shuffles every fact
     column here was the one scale-killer flagged in round 1."""
 
-    def _enriched(self, spark, pattern_strategy="broadcast_map"):
+    def _enriched(self, spark):
         from pyspark.sql import functions as F
 
         from logstash_filter_jdbc_static_spark.operators.processor import (
@@ -152,10 +152,7 @@ class TestThetaLookupMapProbe:
             F.concat(F.lit("10.1."), (F.col("id") % 50).cast("string")).alias("tool"),
             F.current_timestamp().alias("ts"),
         )
-        enr = LookupEnricher(
-            spec, {"servers": dim}, pattern_strategy=pattern_strategy
-        )
-        return enr.apply(fact)
+        return LookupEnricher(spec, {"servers": dim}).apply(fact)
 
     def test_fact_never_shuffles_only_slim_tuple_exchange(self, spark):
         plan = _plan(self._enriched(spark), "simple")
@@ -226,18 +223,6 @@ class TestThetaLookupMapProbe:
         _assert_map_probe(_plan(hinted, "simple"), "server", ("conv_id", "turn_idx"))
         plain = LookupEnricher(spec, dims).apply(fact)
         assert sorted(map(str, hinted.collect())) == sorted(map(str, plain.collect()))
-
-    def test_shuffle_map_strategy_still_correct(self, spark):
-        out_b = {
-            (r["conv_id"], r["turn_idx"]): r["server"]
-            for r in self._enriched(spark, "broadcast_map").collect()
-        }
-        out_s = {
-            (r["conv_id"], r["turn_idx"]): r["server"]
-            for r in self._enriched(spark, "shuffle_map").collect()
-        }
-        assert len(out_b) == 10000
-        assert out_b == out_s
 
 
 class TestRelationalPushdown:

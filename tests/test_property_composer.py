@@ -81,12 +81,6 @@ JOINTS = [
 
 TAG_ROWS = [("k0", "hot"), ("k1", "hot"), ("k1", "cold"), ("k3", "x")]
 
-# One case per pattern_strategy value: broadcast_map (the default),
-# auto (an exact distinct-tuple count picks the map-back), shuffle_map.
-ENGINES = [
-    {}, {"pattern_strategy": "auto"}, {"pattern_strategy": "shuffle_map"}
-]
-
 
 @st.composite
 def where_tree(draw, depth: int = 0):
@@ -245,10 +239,9 @@ dim_rows = st.lists(
     ips=fact_ips,
     rows=dim_rows,
     default=st.booleans(),
-    engine=st.sampled_from(ENGINES),
 )
 def test_composed_queries_match_row_oracle(
-    spark, query, ips, rows, default, engine
+    spark, query, ips, rows, default
 ):
     lookup: dict = {
         "id": "server",
@@ -274,7 +267,7 @@ def test_composed_queries_match_row_oracle(
         "conv_id string, turn_idx int, ip string",
     )
     spec = PipelineSpec(lookups=[dict(lookup)])
-    out = LookupEnricher(spec, dims, **engine).apply(facts)
+    out = LookupEnricher(spec, dims).apply(facts)
     got = {
         r["turn_idx"]: (
             None
@@ -312,10 +305,9 @@ def test_composed_queries_match_row_oracle(
     ips=fact_ips,
     rows=dim_rows,
     default=st.booleans(),
-    engine=st.sampled_from(ENGINES),
 )
 def test_composed_grouped_queries_match_row_oracle(
-    spark, query, ips, rows, default, engine
+    spark, query, ips, rows, default
 ):
     lookup: dict = {
         "id": "g",
@@ -339,7 +331,7 @@ def test_composed_grouped_queries_match_row_oracle(
         "conv_id string, turn_idx int, ip string",
     )
     spec = PipelineSpec(lookups=[dict(lookup)])
-    out = LookupEnricher(spec, dims, **engine).apply(facts)
+    out = LookupEnricher(spec, dims).apply(facts)
     got = {
         r["turn_idx"]: (
             None

@@ -42,9 +42,6 @@ dim_rows = st.lists(
 use_default = st.booleans()
 use_prepared = st.booleans()
 use_like = st.booleans()
-# Every pattern_strategy of the non-equi map-probe path must agree
-# with the oracle.
-engine_cfg = st.sampled_from(["broadcast_map", "auto", "shuffle_map"])
 
 
 @pytest.mark.slow
@@ -54,9 +51,9 @@ engine_cfg = st.sampled_from(["broadcast_map", "auto", "shuffle_map"])
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(facts=fact_rows, dims=dim_rows, default=use_default,
-       prepared=use_prepared, like=use_like, engine=engine_cfg)
+       prepared=use_prepared, like=use_like)
 def test_spark_matches_row_at_a_time_oracle(
-    spark, facts, dims, default, prepared, like, engine
+    spark, facts, dims, default, prepared, like
 ):
     op = "LIKE" if like else "="
     lookup: dict = {"id": "server"}
@@ -75,9 +72,7 @@ def test_spark_matches_row_at_a_time_oracle(
     fact_df = spark.createDataFrame(fact_data, FACT_SCHEMA)
     dim_df = spark.createDataFrame(dims, DIM_SCHEMA)
 
-    enricher = LookupEnricher(
-        spec, {"servers": dim_df}, pattern_strategy=engine
-    )
+    enricher = LookupEnricher(spec, {"servers": dim_df})
     got = {
         r["turn_idx"]: (
             None if r["server"] is None else [d.asDict() for d in r["server"]],
@@ -100,8 +95,7 @@ def test_spark_matches_row_at_a_time_oracle(
 
 
 # Widened WHERE surface (round-2 verdict #1): randomized facts/dims
-# against each new shape, under every pattern_strategy of the map-probe
-# path — Spark vs the row-at-a-time oracle.
+# against each new shape — Spark vs the row-at-a-time oracle.
 WIDE_TEMPLATES = [
     "ip = :ip OR name = 'v1'",
     "ip IN (:ip, 'k2')",
@@ -245,10 +239,9 @@ WIDE_TEMPLATES = [
     dims=dim_rows,
     default=use_default,
     template=st.sampled_from(WIDE_TEMPLATES),
-    engine=engine_cfg,
 )
 def test_widened_where_matches_row_at_a_time_oracle(
-    spark, facts, dims, default, template, engine
+    spark, facts, dims, default, template
 ):
     lookup: dict = {
         "id": "server",
@@ -264,9 +257,7 @@ def test_widened_where_matches_row_at_a_time_oracle(
     fact_df = spark.createDataFrame(fact_data, FACT_SCHEMA)
     dim_df = spark.createDataFrame(dims, DIM_SCHEMA)
 
-    enricher = LookupEnricher(
-        spec, {"servers": dim_df}, pattern_strategy=engine
-    )
+    enricher = LookupEnricher(spec, {"servers": dim_df})
     got = {
         r["turn_idx"]: (
             None if r["server"] is None else sorted(
@@ -471,10 +462,9 @@ ORDER_TEMPLATES = [
     facts=fact_rows,
     dims=dim_rows,
     template=st.sampled_from(ORDER_TEMPLATES),
-    engine=engine_cfg,
 )
 def test_order_limit_matches_row_at_a_time_oracle(
-    spark, facts, dims, template, engine
+    spark, facts, dims, template
 ):
     """ORDER BY / LIMIT result order, compared ORDER-SENSITIVELY (lists,
     not sorted sets) between the Spark enricher and the row-at-a-time
@@ -492,9 +482,7 @@ def test_order_limit_matches_row_at_a_time_oracle(
     fact_df = spark.createDataFrame(fact_data, FACT_SCHEMA)
     dim_df = spark.createDataFrame(dims, DIM_SCHEMA)
 
-    enricher = LookupEnricher(
-        spec, {"servers": dim_df}, pattern_strategy=engine
-    )
+    enricher = LookupEnricher(spec, {"servers": dim_df})
     got = {
         r["turn_idx"]: (
             None if r["server"] is None else [d["name"] for d in r["server"]]
@@ -543,10 +531,9 @@ SHAPE_QUERIES = [
     facts=fact_rows,
     dims=dim_rows,
     query=st.sampled_from(SHAPE_QUERIES),
-    engine=engine_cfg,
 )
 def test_result_shapes_match_row_at_a_time_oracle(
-    spark, facts, dims, query, engine
+    spark, facts, dims, query
 ):
     """DISTINCT / OFFSET / aggregate result shapes, order-sensitively
     compared between the Spark enricher and the row-at-a-time oracle on
@@ -559,9 +546,7 @@ def test_result_shapes_match_row_at_a_time_oracle(
     fact_df = spark.createDataFrame(fact_data, FACT_SCHEMA)
     dim_df = spark.createDataFrame(dims, DIM_SCHEMA)
 
-    enricher = LookupEnricher(
-        spec, {"servers": dim_df}, pattern_strategy=engine
-    )
+    enricher = LookupEnricher(spec, {"servers": dim_df})
     got = {
         r["turn_idx"]: (
             None if r["server"] is None else [tuple(d) for d in r["server"]]
@@ -875,10 +860,9 @@ FULLQ_TEMPLATES = [
     dims=dim_rows,
     default=use_default,
     template=st.sampled_from(FULLQ_TEMPLATES),
-    engine=engine_cfg,
 )
 def test_setops_and_derived_match_row_at_a_time_oracle(
-    spark, facts, dims, default, template, engine
+    spark, facts, dims, default, template
 ):
     template, default_hash = template
     lookup: dict = {
@@ -895,9 +879,7 @@ def test_setops_and_derived_match_row_at_a_time_oracle(
     fact_df = spark.createDataFrame(fact_data, FACT_SCHEMA)
     dim_df = spark.createDataFrame(dims, DIM_SCHEMA)
 
-    enricher = LookupEnricher(
-        spec, {"servers": dim_df}, pattern_strategy=engine
-    )
+    enricher = LookupEnricher(spec, {"servers": dim_df})
 
     def norm(payload):
         if payload is None:

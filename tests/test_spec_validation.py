@@ -288,8 +288,9 @@ class TestLoaderScheduleOption:
 
 
 class TestEngineOptions:
-    """Spark-side tuning knobs (no reference counterpart) exposed through
-    the pipeline config under an ``engine`` key, validated eagerly."""
+    """The engine has no physical-plan options: a config that still
+    carries an ``engine`` block fails at register time instead of
+    silently losing the setting it was written for."""
 
     _LOOKUPS = [
         {
@@ -299,56 +300,33 @@ class TestEngineOptions:
         }
     ]
 
-    def test_defaults_are_none(self):
-        spec = PipelineSpec(lookups=self._LOOKUPS)
-        assert spec.pattern_strategy is None
+    @pytest.mark.parametrize(
+        "engine",
+        [{"pattern_strategy": "shuffle_map"}, {"inline_threshold": 0}, {}, "fast"],
+    )
+    def test_from_json_rejects_engine_block(self, engine):
+        with pytest.raises(ValidationError, match="'engine' option"):
+            PipelineSpec.from_json(
+                {"local_lookups": self._LOOKUPS, "engine": engine}
+            )
 
-    def test_from_json_engine_block(self):
-        spec = PipelineSpec.from_json(
-            {
-                "local_lookups": self._LOOKUPS,
-                "engine": {"pattern_strategy": "shuffle_map"},
-            }
-        )
-        assert spec.pattern_strategy == "shuffle_map"
+    def test_from_json_file_rejects_engine_block(self, tmp_path):
+        import json
 
-    def test_removed_inline_threshold_is_unknown(self):
-        with pytest.raises(
-            ValidationError,
-            match=r"Unknown engine option\(s\): \['inline_threshold'\] "
-                  r"\(supported: pattern_strategy\)",
-        ):
-            PipelineSpec(lookups=self._LOOKUPS, engine={"inline_threshold": 0})
+        cfg = tmp_path / "pipeline.json"
+        cfg.write_text(json.dumps({
+            "local_lookups": self._LOOKUPS,
+            "engine": {"pattern_strategy": "auto"},
+        }))
+        with pytest.raises(ValidationError, match="'engine' option"):
+            PipelineSpec.from_json(str(cfg))
+        cfg.write_text(json.dumps({"local_lookups": self._LOOKUPS}))
+        assert [lk.id for lk in PipelineSpec.from_json(str(cfg)).lookups] == ["l1"]
 
-    def test_bad_values_rejected(self):
-        with pytest.raises(
-            ValidationError,
-            match="'broadcast_map', 'shuffle_map', 'auto'",
-        ):
-            PipelineSpec(lookups=self._LOOKUPS, engine={"pattern_strategy": "nope"})
-        with pytest.raises(ValidationError, match="Unknown engine option"):
-            PipelineSpec(lookups=self._LOOKUPS, engine={"warp_speed": True})
-        with pytest.raises(ValidationError, match="engine.*must be a Hash"):
-            PipelineSpec(lookups=self._LOOKUPS, engine="fast")
-
-    def test_every_enricher_construction_inherits_engine(self, spark):
-        """The knob must reach LookupEnricher from the spec alone — the
-        streaming refresh seam and any direct caller construct enrichers
-        without re-plumbing engine kwargs."""
-        from logstash_filter_jdbc_static_spark.operators.processor import (
-            LookupEnricher,
-        )
-
-        spec = PipelineSpec(
-            lookups=self._LOOKUPS,
-            engine={"pattern_strategy": "shuffle_map"},
-        )
-        dim = spark.createDataFrame([("1.1.1.1", "a")], "ip string, name string")
-        enr = LookupEnricher(spec, {"servers": dim})
-        assert enr.compiled[0].pattern_strategy == "shuffle_map"
-        # explicit argument still wins over the spec
-        enr2 = LookupEnricher(spec, {"servers": dim}, pattern_strategy="broadcast_map")
-        assert enr2.compiled[0].pattern_strategy == "broadcast_map"
+    def test_constructor_takes_no_engine_option(self):
+        with pytest.raises(TypeError):
+            PipelineSpec(lookups=self._LOOKUPS, engine={})
+        assert not hasattr(PipelineSpec(lookups=self._LOOKUPS), "pattern_strategy")
 
 
 class TestIndexColumnWarnings:

@@ -166,11 +166,9 @@ DIM_ROWS = [
 ]
 DIM_SCHEMA = "id: int, name: string, price: int, qty: int"
 
-# One case per pattern_strategy value: broadcast_map (the default),
-# auto (an exact distinct-tuple count picks the map-back), shuffle_map.
-ENGINES = [
-    {}, {"pattern_strategy": "auto"}, {"pattern_strategy": "shuffle_map"}
-]
+# Lookup constructor kwargs per case: one case, the default (and only)
+# plan; kept as a parameter so the test ids stay stable.
+ENGINES = [{}]
 
 
 @pytest.mark.parametrize("kw", ENGINES)
@@ -341,7 +339,6 @@ ndims = st.lists(
     ),
     min_size=0, max_size=8,
 )
-engine_cfg = st.sampled_from(["broadcast_map", "auto", "shuffle_map"])
 
 
 @pytest.mark.slow
@@ -355,10 +352,9 @@ engine_cfg = st.sampled_from(["broadcast_map", "auto", "shuffle_map"])
     dims=ndims,
     template=st.sampled_from(EXPR_TEMPLATES),
     default=st.booleans(),
-    engine=engine_cfg,
 )
 def test_expression_lookups_match_row_at_a_time_oracle(
-    spark, facts, dims, template, default, engine
+    spark, facts, dims, template, default
 ):
     query, fields = template
     lookup: dict = {
@@ -375,9 +371,7 @@ def test_expression_lookups_match_row_at_a_time_oracle(
     fact_df = spark.createDataFrame(fact_data, FACT_SCHEMA)
     dim_df = spark.createDataFrame(dims, NDIM_SCHEMA)
 
-    enricher = LookupEnricher(
-        spec, {"items": dim_df}, pattern_strategy=engine
-    )
+    enricher = LookupEnricher(spec, {"items": dim_df})
     got = {
         r["turn_idx"]: (
             None if r["x"] is None else sorted(
@@ -787,16 +781,15 @@ class TestConversionFunctions:
             [("c0", 0, "t1"), ("c1", 1, "t2"), ("c2", 2, "t9")],
             "conv_id string, turn_idx int, tool string",
         )
-        for kw in ENGINES:
-            out = LookupEnricher(spec, {"d": dim}, **kw).apply(fact)
-            got = {
-                r["turn_idx"]: (
-                    None if r["x"] is None
-                    else sorted(d["p"] for d in r["x"])
-                )
-                for r in out.collect()
-            }
-            assert got == {0: [10], 1: [7], 2: []}, (kw, got)
+        out = LookupEnricher(spec, {"d": dim}).apply(fact)
+        got = {
+            r["turn_idx"]: (
+                None if r["x"] is None
+                else sorted(d["p"] for d in r["x"])
+            )
+            for r in out.collect()
+        }
+        assert got == {0: [10], 1: [7], 2: []}, got
 
     def test_param_inside_conversion(self, spark):
         # cross-feature: a param INSIDE a conversion function is a
