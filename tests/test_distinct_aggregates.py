@@ -15,6 +15,8 @@ from logstash_filter_jdbc_static_spark import oracle
 from logstash_filter_jdbc_static_spark.operators.processor import LookupEnricher
 from logstash_filter_jdbc_static_spark.spec import PipelineSpec, ValidationError
 
+from plan_conditions import PLAN_CONDITIONS
+
 # duplicate prices/qtys so DISTINCT actually bites
 PLANS = [
     ("t1", "basic", 10, 3),
@@ -26,9 +28,9 @@ PLANS = [
 ]
 SCHEMA = "tool: string, plan: string, price: int, qty: int"
 
-# Lookup constructor kwargs per case: one case, the default (and only)
-# plan; kept as a parameter so the test ids stay stable.
-ENGINES = [{}]
+# Lookup constructor kwargs per case (always empty), one case per
+# plan condition (plan_conditions.py).
+ENGINES = PLAN_CONDITIONS
 
 
 def _dims(spark):

@@ -23,6 +23,8 @@ from logstash_filter_jdbc_static_spark.operators.lookup import (
 from logstash_filter_jdbc_static_spark.operators.processor import LookupEnricher
 from logstash_filter_jdbc_static_spark.spec import PipelineSpec, ValidationError
 
+from plan_conditions import PLAN_CONDITIONS
+
 ROWS = [
     ("t1", "basic", 10, 3),
     ("t1", "pro", 7, 2),
@@ -32,9 +34,9 @@ ROWS = [
 ]
 CATS = [("basic", "core"), ("pro", "paid")]
 
-# Lookup constructor kwargs per case: one case, the default (and only)
-# plan; kept as a parameter so the test ids stay stable.
-ENGINES = [{}]
+# Lookup constructor kwargs per case (always empty), one case per
+# plan condition (plan_conditions.py).
+ENGINES = PLAN_CONDITIONS
 
 
 def _dims(spark):

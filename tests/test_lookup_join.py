@@ -17,6 +17,8 @@ from logstash_filter_jdbc_static_spark.operators.lookup import (
 from logstash_filter_jdbc_static_spark.operators.processor import LookupEnricher
 from logstash_filter_jdbc_static_spark.spec import PipelineSpec, ValidationError
 
+from plan_conditions import PLAN_CONDITIONS
+
 _GEO_Q = (
     "SELECT n.n_name AS nation, r.r_name AS region FROM nation n "
     "JOIN region r ON n.n_regionkey = r.r_regionkey "
@@ -439,7 +441,7 @@ class TestJoinExpressions:
             for r in enr.apply(fact).select("tool", target).collect()
         }
 
-    @pytest.mark.parametrize("kw", [{}])
+    @pytest.mark.parametrize("kw", PLAN_CONDITIONS)
     def test_expression_projection_and_predicate(self, spark, kw):
         got = self._run(
             spark,
@@ -518,7 +520,7 @@ class TestJoinExpressions:
             )
         assert got == exp
 
-    @pytest.mark.parametrize("kw", [{}])
+    @pytest.mark.parametrize("kw", PLAN_CONDITIONS)
     def test_mixed_dim_param_expression_across_relations(self, spark, kw):
         # round-5 latest: a mixed dim+param rhs whose dim columns span
         # BOTH joined relations — build_join_dim flat-rewrites the AST's
@@ -610,7 +612,7 @@ class TestOnLiterals:
                 "JOIN price_bands b ON 1 = 1 WHERE p.tool = :tool"
             )
 
-    @pytest.mark.parametrize("kw", [{}])
+    @pytest.mark.parametrize("kw", PLAN_CONDITIONS)
     def test_left_join_on_literal_keeps_unmatched_rows(self, spark, kw):
         # ON ... AND b.band <> 'low': low-band prices (2) and
         # out-of-band prices (10) keep their row with a NULL band —

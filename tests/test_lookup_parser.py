@@ -13,6 +13,8 @@ from logstash_filter_jdbc_static_spark.operators.lookup import (
 from logstash_filter_jdbc_static_spark.operators.processor import LookupEnricher
 from logstash_filter_jdbc_static_spark.spec import PipelineSpec, ValidationError
 
+from plan_conditions import PLAN_CONDITIONS
+
 
 def preds(q, d=0):
     return parse_lookup_query(q).disjuncts[d]
@@ -219,9 +221,9 @@ def _enrich(spark, query, facts, **kw):
     }
 
 
-# Lookup constructor kwargs per case: one case, the default (and only)
-# plan; kept as a parameter so the test ids stay stable.
-PATH_KWARGS = [{}]
+# Lookup constructor kwargs per case (always empty), one case per
+# plan condition (plan_conditions.py).
+PATH_KWARGS = PLAN_CONDITIONS
 
 
 @pytest.mark.parametrize("kw", PATH_KWARGS)

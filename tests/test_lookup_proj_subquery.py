@@ -27,6 +27,8 @@ from logstash_filter_jdbc_static_spark.spec import (
     ValidationError,
 )
 
+from plan_conditions import PLAN_CONDITIONS
+
 FACT = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -49,9 +51,9 @@ PLAN_ROWS = [
     ("t4", "trial", 1),
 ]
 
-# Lookup constructor kwargs per case: one case, the default (and only)
-# plan; kept as a parameter so the test ids stay stable.
-ENGINES = [{}]
+# Lookup constructor kwargs per case (always empty), one case per
+# plan condition (plan_conditions.py).
+ENGINES = PLAN_CONDITIONS
 
 
 class TestParser:

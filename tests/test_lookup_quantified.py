@@ -21,6 +21,8 @@ from logstash_filter_jdbc_static_spark.operators.lookup import (
 from logstash_filter_jdbc_static_spark.operators.processor import LookupEnricher
 from logstash_filter_jdbc_static_spark.spec import PipelineSpec, ValidationError
 
+from plan_conditions import PLAN_CONDITIONS
+
 FACT = T.StructType(
     [
         T.StructField("conv_id", T.StringType(), False),
@@ -32,9 +34,9 @@ PLANS = [("t1", "basic", 10), ("t1", "pro", 7), ("t1", None, 4),
          ("t2", "gold", 99), ("t3", "x", None)]
 REF = [("t1", 8), ("t2", 5), ("t3", None)]
 
-# Lookup constructor kwargs per case: one case, the default (and only)
-# plan; kept as a parameter so the test ids stay stable.
-ENGINES = [{}]
+# Lookup constructor kwargs per case (always empty), one case per
+# plan condition (plan_conditions.py).
+ENGINES = PLAN_CONDITIONS
 
 
 class TestParser:

@@ -18,6 +18,8 @@ from logstash_filter_jdbc_static_spark import oracle
 from logstash_filter_jdbc_static_spark.operators.processor import LookupEnricher
 from logstash_filter_jdbc_static_spark.spec import PipelineSpec, ValidationError
 
+from plan_conditions import PLAN_CONDITIONS
+
 PLANS = [
     ("t1", "basic", 10, 3),
     ("t1", "pro", 7, 2),
@@ -27,9 +29,9 @@ PLANS = [
 ]
 SCHEMA = "tool: string, plan: string, price: int, qty: int"
 
-# Lookup constructor kwargs per case: one case, the default (and only)
-# plan; kept as a parameter so the test ids stay stable.
-ENGINES = [{}]
+# Lookup constructor kwargs per case (always empty), one case per
+# plan condition (plan_conditions.py).
+ENGINES = PLAN_CONDITIONS
 
 # events carry a numeric threshold and a LIKE pattern alongside the
 # tool key; the NULL-threshold and NULL-tool rows pin SQL's
@@ -625,4 +627,43 @@ class TestThetaPlan:
             ln for ln in plan.splitlines() if "Join [" in ln and "__psub" in ln
         ]
         assert joins, plan
+        assert not any("BroadcastHashJoin" in ln for ln in joins), plan
+
+    def test_nested_join_back_follows_broadcast_limit(self, spark, monkeypatch):
+        """A nested theta subquery's frame joins onto the enclosing
+        frame's distinct-tuple frame by its ``__psub0_n0_k*`` keys:
+        broadcast under the default limit, a shuffle join past it. The
+        rows equal the row oracle's either way."""
+        from logstash_filter_jdbc_static_spark.operators import lookup as L
+
+        query = (
+            "SELECT plan AS plan FROM plans WHERE tool = :tool "
+            "AND price >= (SELECT avg(price) FROM plans p2 "
+            "WHERE p2.qty > (SELECT min(qty) FROM plans p3 "
+            "WHERE p3.price < :lim))"
+        )
+
+        def nested_joins():
+            got = _run(spark, query, {})
+            assert got[("t2", 3)] == [("gold",)]
+            out = LookupEnricher(
+                PipelineSpec(lookups=[{
+                    "id": "u",
+                    "query": query,
+                    "parameters": {"tool": "tool", "lim": "lim"},
+                }]),
+                _dims(spark),
+            ).apply(spark.createDataFrame(FACTS, FACT_SCHEMA))
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            joins = [
+                ln for ln in plan.splitlines()
+                if "Join [" in ln and "__psub0_n0_k" in ln
+            ]
+            assert joins, plan
+            return joins, plan
+
+        joins, plan = nested_joins()
+        assert all("BroadcastHashJoin" in ln for ln in joins), plan
+        monkeypatch.setattr(L, "THETA_TUPLE_BROADCAST_LIMIT", 0)
+        joins, plan = nested_joins()
         assert not any("BroadcastHashJoin" in ln for ln in joins), plan

@@ -16,6 +16,8 @@ from logstash_filter_jdbc_static_spark.operators.lookup import (
     parse_setop_tree,
 )
 
+from plan_conditions import PLAN_CONDITIONS
+
 
 def split_top_level_union(text):
     """Leaf-splitting shim for the splitter tests below: (leaf texts,
@@ -39,9 +41,9 @@ DIM = "ip string, name string"
 S1 = [("k1", "v1"), ("k2", "k2"), ("k1", "v2")]
 S2 = [("k1", "w1"), ("k3", "v1"), ("k1", "v1")]
 
-# Lookup constructor kwargs per case: one case, the default (and only)
-# plan; kept as a parameter so the test ids stay stable.
-ENGINES = [{}]
+# Lookup constructor kwargs per case (always empty), one case per
+# plan condition (plan_conditions.py).
+ENGINES = PLAN_CONDITIONS
 
 
 class TestSplitter:

@@ -19,6 +19,8 @@ from logstash_filter_jdbc_static_spark.operators.lookup import (
 from logstash_filter_jdbc_static_spark.operators.processor import LookupEnricher
 from logstash_filter_jdbc_static_spark.spec import PipelineSpec, ValidationError
 
+from plan_conditions import PLAN_CONDITIONS
+
 
 class TestExprParser:
     def test_arithmetic_predicate_lhs_becomes_computed_column(self):
@@ -166,9 +168,9 @@ DIM_ROWS = [
 ]
 DIM_SCHEMA = "id: int, name: string, price: int, qty: int"
 
-# Lookup constructor kwargs per case: one case, the default (and only)
-# plan; kept as a parameter so the test ids stay stable.
-ENGINES = [{}]
+# Lookup constructor kwargs per case (always empty), one case per
+# plan condition (plan_conditions.py).
+ENGINES = PLAN_CONDITIONS
 
 
 @pytest.mark.parametrize("kw", ENGINES)
