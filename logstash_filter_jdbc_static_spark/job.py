@@ -21,9 +21,11 @@ same batch, so per-conversation turn ordering never crosses a resume
 boundary. A run writes every batch still missing from the lineage log
 in ONE pass over the input: one dynamic-partition overwrite fans the
 rows out to their ``batch=<k>/route=<r>`` directories, replacing those
-partitions' files and leaving completed batches untouched; the stats
-pass over the written sinks then logs each written batch to the lineage
-table (the reference's reload counter generalized,
+partitions' files and leaving completed batches untouched. The stats
+step then reads the written sinks back: one aggregate writes
+``sink_counts`` and observes the route totals on that write, and a count
+over the partition column alone gives each written batch's row count for
+the lineage table (the reference's reload counter generalized,
 single_load_runner.rb:13,23). A fresh run and a resume are the same
 path: a resume only filters the input to the pending batches, so it
 reads the input once however many batches it re-runs. The cost of the
@@ -50,7 +52,7 @@ import os
 import sys
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 # Under spark-submit --py-files the zip is on sys.path already and MUST
 # win (the test asserts the package comes from the zip); only when the
@@ -61,9 +63,11 @@ try:
 except ImportError:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from logstash_filter_jdbc_static_spark.operators.aggregate import (  # noqa: E402
-    conv_bucket,
-    sink_counts,
+from logstash_filter_jdbc_static_spark.operators.aggregate import sink_counts  # noqa: E402
+from logstash_filter_jdbc_static_spark.operators.route import (  # noqa: E402
+    ROUTE_HIT,
+    ROUTE_MALFORMED,
+    ROUTE_MISS,
 )
 from logstash_filter_jdbc_static_spark.plans.checkpoint import LineageLog  # noqa: E402
 from logstash_filter_jdbc_static_spark.plans.pipeline import (  # noqa: E402
@@ -296,69 +300,69 @@ def run_job(
     batch_col = F.pmod(F.xxhash64("conv_id"), F.lit(batches)).cast("int")
     routed_path = os.path.join(output, "routed")
     pending = [b for b in range(batches) if f"batch={b}" not in done]
+    # A resume filters to the pending batches before parse/enrich; a
+    # fresh run reads the input unfiltered (a filter passing every row
+    # would only add a hash per row). Built even when nothing is pending:
+    # its schema is the read-back schema below.
+    rows = (
+        transcripts
+        if len(pending) == batches
+        else transcripts.filter(batch_col.isin(pending))
+    )
+    projected = project(enrich_and_route(rows, enricher, parser)).withColumn(
+        "batch", batch_col
+    )
     if pending:
         # ONE pass over the input writes every pending batch at once
         # (dynamic partitioning fans the rows out; completed batches'
-        # partitions are not touched). A resume filters to the pending
-        # batches before parse/enrich; a fresh run reads the input
-        # unfiltered (a filter passing every row would only add a hash per
-        # row). No repartition: a pre-write shuffle of the full
-        # fact table would be the single most expensive operation in the
-        # job at scale.
-        rows = (
-            transcripts
-            if len(pending) == batches
-            else transcripts.filter(batch_col.isin(pending))
-        )
-        routed = enrich_and_route(rows, enricher, parser)
+        # partitions are not touched). No repartition: a pre-write
+        # shuffle of the full fact table would be the single most
+        # expensive operation in the job at scale.
         (
-            project(routed).withColumn("batch", batch_col)
-            .write.mode("overwrite")
+            projected.write.mode("overwrite")
             .partitionBy("batch", "route")
             .format(fmt)
             .save(routed_path)
         )
         write_s = time.time() - t0
 
-    # ONE stats pass over the written sinks covers every downstream
-    # number: per-(batch, route, role, tool, conv_bucket) counts collapse
-    # (bounded cardinality) to per-batch lineage counts, route totals,
-    # the total row count, AND the per-sink aggregate table — previously
-    # four separate jobs over the same data; the numbers still describe
-    # exactly what is on disk.
-    routed_all = spark.read.format(fmt).load(routed_path)
-    # ONE scan of the written sinks feeds every downstream number via a
-    # persisted per-(batch, sink-key) aggregate: the sink_counts table is
-    # written DISTRIBUTED (its cardinality is unbounded in distinct tool
-    # values, so it must never be collected), while only the bounded
-    # summaries — per-batch totals (<= batches rows) and per-route totals
-    # (3 rows) — come to the driver.
-    stats_df = (
-        routed_all.groupBy("batch", "route", "role", "tool", conv_bucket())
-        .agg(F.count(F.lit(1)).alias("n_turns"))
-        .persist()
+    # Every downstream number describes what is on disk. The read-back
+    # takes the written frame's schema: no schema-inference job, and an
+    # output with no rows reads as empty instead of failing. (An iceberg
+    # table carries its own schema and refuses a given one.)
+    reader = spark.read.format(fmt)
+    if fmt == "parquet":
+        reader = reader.schema(projected.schema)
+    routed_all = reader.load(routed_path)
+    # ONE aggregate pass writes the sink_counts table DISTRIBUTED (its
+    # cardinality is unbounded in distinct tool values, so it is never
+    # collected); the three route totals, covering every batch on disk,
+    # are observed on that same write over aggregated rows only. The
+    # observation sits directly under the write, in the result stage,
+    # where Spark applies each task's metrics once even when the task is
+    # retried.
+    obs = Observation("route_totals")
+    (
+        sink_counts(routed_all)
+        .observe(obs, *[
+            F.sum(F.when(F.col("route") == r, F.col("n_turns"))).alias(r)
+            for r in (ROUTE_HIT, ROUTE_MISS, ROUTE_MALFORMED)
+        ])
+        .write.mode("overwrite").format(fmt)
+        .save(os.path.join(output, "sink_counts"))
     )
-    counts = stats_df.groupBy("route", "role", "tool", "conv_bucket").agg(
-        F.sum("n_turns").alias("n_turns")
-    )
-    counts.write.mode("overwrite").format(fmt).save(
-        os.path.join(output, "sink_counts")
-    )
-    # ONE collect of the per-(batch, route) sums (<= batches x 3 rows)
-    # gives both driver-side summaries.
-    by_batch: dict[int, int] = {}
-    route_totals: dict[str, int] = {}
-    for r in (
-        stats_df.groupBy("batch", "route")
-        .agg(F.sum("n_turns").alias("n"))
-        .collect()
-    ):
-        by_batch[r["batch"]] = by_batch.get(r["batch"], 0) + r["n"]
-        route_totals[r["route"]] = route_totals.get(r["route"], 0) + r["n"]
+    route_totals = {r: n for r, n in obs.get.items() if n}
     n_rows = sum(route_totals.values())
-    stats_df.unpersist()
-    # Lineage marks come from this same pass, after the write committed:
-    # each written batch's count is exactly what is on disk for it.
+    # Lineage marks come after the write committed, from a count of the
+    # pending batches that reads only partition values and row-group
+    # counts (<= batches rows): each batch's count is exactly what is on
+    # disk for it, 0 for a batch that received no row.
+    by_batch = {
+        r["batch"]: r["count"]
+        for r in routed_all.select("batch")
+        .where(F.col("batch").isin(pending))
+        .groupBy("batch").count().collect()
+    }
     for b in pending:
         lineage.mark_done(
             f"batch={b}", by_batch.get(b, 0),

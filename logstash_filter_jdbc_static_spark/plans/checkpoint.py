@@ -5,7 +5,8 @@ per-partition lineage table: each completed output partition gets a row
 (partition, run_id, reload_count, n_rows, completed_at). ``job.run_job``
 is its one writer: a run re-processes exactly the batches without a
 ``done`` row, in one idempotent dynamic-partition overwrite, and marks
-them from its stats pass over the written sinks — re-running a partition
+them from a count of the written sinks over the partition column alone
+(``n_rows`` 0 for a batch that received no row) — re-running a partition
 replaces its files instead of duplicating them.
 """
 

@@ -206,3 +206,65 @@ class TestMultiBatchResume:
         assert summary["route_totals"] == {"hit": 650, "miss": 300, "malformed": 50}
         out = spark.read.parquet(routed)
         assert out.count() == out.select("conv_id", "turn_idx").distinct().count() == 1000
+
+
+def _lineage_rows(out_dir: str) -> dict[str, int]:
+    with open(os.path.join(out_dir, "_lineage.jsonl")) as fh:
+        return {
+            rec["partition"]: rec["n_rows"]
+            for rec in map(json.loads, fh.read().splitlines())
+        }
+
+
+class TestStatsPass:
+    # Spark jobs one run_job on sf0.001 with batches=3 starts: 11 with
+    # the sinks counted in one aggregate (14 with the persisted stats
+    # frame it replaced).
+    MAX_JOBS = 11
+
+    def test_job_count(self, spark, sf_dir, tmp_path):
+        """The stats step adds no persisted frame and no extra pass: the
+        whole run stays within its measured Spark job count."""
+        job_py = os.path.join(
+            REPO, "logstash_filter_jdbc_static_spark", "job.py"
+        )
+        with open(job_py) as fh:
+            assert ".persist(" not in fh.read()
+        tracker = spark.sparkContext.statusTracker()
+        before = set(tracker.getJobIdsForGroup(None))
+        summary = run_job(spark, sf_dir, str(tmp_path / "out"), batches=3)
+        started = set(tracker.getJobIdsForGroup(None)) - before
+        assert summary["rows_routed"] == 1000
+        assert len(started) <= self.MAX_JOBS, sorted(started)
+
+    def test_empty_input(self, spark, tmp_path):
+        """A zero-row input writes no data file; the read-back still
+        resolves (it takes the written frame's schema), every batch is
+        logged with 0 rows and sink_counts is an empty table."""
+        from logstash_filter_jdbc_static_spark.schema import TRANSCRIPT_SCHEMA
+
+        src = str(tmp_path / "src")
+        spark.createDataFrame([], TRANSCRIPT_SCHEMA).write.parquet(src)
+        out_dir = str(tmp_path / "out")
+        summary = run_job(spark, src, out_dir, batches=3)
+        assert summary["rows_routed"] == 0
+        assert summary["route_totals"] == {}
+        assert _lineage_rows(out_dir) == {"batch=0": 0, "batch=1": 0, "batch=2": 0}
+        assert spark.read.parquet(os.path.join(out_dir, "sink_counts")).count() == 0
+
+    def test_pending_batches_without_rows(self, spark, tmp_path):
+        """Two conversations over eight batches: most pending batches get
+        no row, so the partition-column count returns nothing for them;
+        each is still logged, with its on-disk count (0 for the empty)."""
+        out_dir = str(tmp_path / "out")
+        summary = run_job(spark, "synth:400", out_dir, batches=8)
+        routed = spark.read.parquet(os.path.join(out_dir, "routed"))
+        on_disk = {
+            r["batch"]: r["count"]
+            for r in routed.groupBy("batch").count().collect()
+        }
+        assert 0 < len(on_disk) < 8
+        assert _lineage_rows(out_dir) == {
+            f"batch={b}": on_disk.get(b, 0) for b in range(8)
+        }
+        assert summary["rows_routed"] == sum(on_disk.values()) == 400
