@@ -59,7 +59,6 @@ Spark-first physical design (NOT a port of the Derby execution path):
 from __future__ import annotations
 
 import dataclasses
-import logging
 import re
 from dataclasses import dataclass, field
 
@@ -257,8 +256,7 @@ class _Subquery:
     # params (``WHERE price > :lim`` / ``qty = base + :k``). No
     # snapshot groupBy can key such a frame, so the aggregate frame is
     # built AT PROBE TIME from the fact's distinct bound-param tuples
-    # (the same distinct-tuple design as the LIKE map-probe, with a
-    # shuffle join-back past THETA_TUPLE_BROADCAST_LIMIT tuples):
+    # (the same lazy distinct-tuple design as the LIKE map-probe):
     # tuples theta-join the dim-sized sub frame, aggregate per tuple,
     # broadcast-join back onto the FACT — Derby re-executes the
     # prepared subquery per event (lookup.rb:131-147); this is the
@@ -504,7 +502,7 @@ def _static_operand(p: _Predicate, t: _Term) -> Column:
     if t.kind == "subquery":
         raise ValidationError(
             ["internal: unresolved subquery term reached compile — "
-             "resolve_subqueries must run before CompiledLookup"]
+             "resolve_subqueries_with_dim must run before CompiledLookup"]
         )
     base = F.col(t.value) if t.kind == "column" else F.lit(t.value)
     return _like_regex(base, p.like_escape) if p.op in _LIKE_OPS else base
@@ -987,14 +985,7 @@ def _sub_filtered_df(
                 F.max(F.col(f"__s_{inner.col}").isNull()).alias(names3[1]),
                 F.count(F.lit(1)).alias(names3[2]),
             )
-            biggest = grouped.agg(F.max(F.size(names3[0]))).collect()[0][0]
-            if biggest is not None and biggest > _IN_SUBQUERY_CAP:
-                raise ValidationError(
-                    [f"lookup IN-subquery on {inner.table!r}: a "
-                     f"correlation group exceeds {_IN_SUBQUERY_CAP} "
-                     f"distinct values — pre-shape the dim with a "
-                     f"loader query instead"]
-                )
+            _check_in_group_cap(grouped, names3[0], inner.table, "correlation")
             d2 = d2.join(F.broadcast(grouped), rid, "left").drop(rid)
             nested_state["df"] = d2
             names.update(names3)
@@ -1007,13 +998,7 @@ def _sub_filtered_df(
             F.max(F.col(inner.col).isNull()).alias(names3[1]),
             F.count(F.lit(1)).alias(names3[2]),
         )
-        biggest = grouped.agg(F.max(F.size(names3[0]))).collect()[0][0]
-        if biggest is not None and biggest > _IN_SUBQUERY_CAP:
-            raise ValidationError(
-                [f"lookup IN-subquery on {inner.table!r}: a correlation "
-                 f"group exceeds {_IN_SUBQUERY_CAP} distinct values — "
-                 f"pre-shape the dim with a loader query instead"]
-            )
+        _check_in_group_cap(grouped, names3[0], inner.table, "correlation")
         cond = None
         for (_, oc), k in zip(inner.corr, keys):
             piece = d2[oc] == grouped[k]
@@ -1148,13 +1133,19 @@ def _collect_in_values(sq: _Subquery, dims: dict[str, DataFrame]) -> list:
     return [r[0] for r in rows]
 
 
-# Above this many distinct parameter tuples, a theta-parameterized
-# subquery's per-tuple frame is too big to broadcast safely (driver heap
-# + 8 GB broadcast cap), so ``_ThetaParamFrame.build`` joins it back
-# with a shuffle join instead. The frame counts its tuples anyway (it
-# materializes them for the nested builds and the IN-cap guard), so the
-# choice costs no extra pass over the fact.
-THETA_TUPLE_BROADCAST_LIMIT = 1_000_000
+def _check_in_group_cap(
+    grouped: DataFrame, set_col: str, table: str, group: str
+) -> None:
+    """Fail loud when the largest per-group value set in ``grouped``'s
+    ``set_col`` exceeds _IN_SUBQUERY_CAP; ``group`` names the grouping
+    ("correlation" / "parameter") in the message. Collects one value."""
+    biggest = grouped.agg(F.max(F.size(set_col))).collect()[0][0]
+    if biggest is not None and biggest > _IN_SUBQUERY_CAP:
+        raise ValidationError(
+            [f"lookup IN-subquery on {table!r}: a {group} group exceeds "
+             f"{_IN_SUBQUERY_CAP} distinct values — pre-shape the dim "
+             f"with a loader query instead"]
+        )
 
 
 @dataclass
@@ -1164,16 +1155,16 @@ class _ThetaParamFrame:
     equalities (``price > :lim``, OR around a param predicate, mixed
     sub-column+param expressions), so no snapshot groupBy can key the
     frame. Instead, at probe time, the fact's DISTINCT bound-param
-    tuples (slim select + distinct + localCheckpoint + exact count — one
-    eager pass over the fact per apply, see ``CompiledLookup.apply``)
-    theta-join the dim-sized sub frame on the full DNF with params
-    substituted to tuple columns, aggregate per tuple, and the result
-    broadcast-joins back onto the FACT by the same bound expressions —
-    the per-DISTINCT-tuple hoist of Derby re-executing the prepared
-    subquery per event (lib/logstash/filters/jdbc/lookup.rb:131-147).
-    Cost: |distinct tuples| x |sub table| pair evaluations, constant in
-    fact count; past THETA_TUPLE_BROADCAST_LIMIT tuples the join-back
-    degrades to a shuffle join instead of overflowing the driver."""
+    tuples (a lazy slim select + distinct) theta-join the dim-sized sub
+    frame on the full DNF with params substituted to tuple columns,
+    aggregate per tuple, and the result broadcast-joins back onto the
+    FACT by the same bound expressions — the per-DISTINCT-tuple hoist
+    of Derby re-executing the prepared subquery per event
+    (lib/logstash/filters/jdbc/lookup.rb:131-147). Cost: |distinct
+    tuples| x |sub table| pair evaluations, constant in fact count. As
+    with the map-probe's map-back (``CompiledLookup._apply_bnlj``), a
+    frame too large for the driver fails with Spark's broadcast error
+    rather than shuffling the fact."""
 
     sub_df: DataFrame  # snapshot sub frame, computed columns applied
     where: tuple  # param_theta DNF
@@ -1238,37 +1229,28 @@ class _ThetaParamFrame:
             out = out | c
         return out
 
-    def build(self, fact: DataFrame, params: dict) -> tuple[DataFrame, bool]:
-        """Materialize the per-tuple aggregate frame against ``fact``'s
-        distinct bound-param tuples. Returns (frame keyed by ``keys``,
-        broadcastable) — eager (localCheckpoint + exact count)."""
+    def build(self, fact: DataFrame, params: dict) -> DataFrame:
+        """The per-tuple aggregate frame, keyed by ``keys``, over
+        ``fact``'s distinct bound-param tuples. Lazy, except the
+        ``__values`` shape's IN-cap guard, which collects one value."""
         key_of = dict(zip(self.pnames, self.keys))
         tuples = fact.select(
             *[
                 params[n].value.alias(k)
                 for n, k in zip(self.pnames, self.keys)
             ]
-        ).distinct().localCheckpoint(eager=True)
-        n_tuples = tuples.count()
-        broadcastable = n_tuples <= THETA_TUPLE_BROADCAST_LIMIT
-        if not broadcastable:
-            logging.getLogger("logstash_filter_jdbc_static_spark").warning(
-                "theta subquery on %r: %d distinct parameter tuples exceed "
-                "the broadcast limit (%d) — joining back with a shuffle",
-                self.table, n_tuples, THETA_TUPLE_BROADCAST_LIMIT,
-            )
+        ).distinct()
         # NESTED parameterized subqueries (round-5 final): join each
         # per-tuple value onto the distinct-tuple frame so the theta
         # condition can read it as a pseudo-param column — a nested
         # THETA builder recurses with THIS tuple frame as its fact
         for names, keys, terms, frame, funcs in self.nested:
-            bcast = True
             if isinstance(frame, _ThetaParamFrame):
                 inner_params = {
                     n: BoundParam(n, F.col(key_of[n]), F.lit(True))
                     for n in frame.pnames
                 }
-                frame, bcast = frame.build(tuples, inner_params)
+                frame = frame.build(tuples, inner_params)
             cond = None
             for k, t in zip(keys, terms):
                 if t.kind == "param":
@@ -1281,9 +1263,7 @@ class _ThetaParamFrame:
                     )
                 piece = frame[k] == fexpr
                 cond = piece if cond is None else cond & piece
-            tuples = tuples.join(
-                F.broadcast(frame) if bcast else frame, cond, "left"
-            ).drop(*keys)
+            tuples = tuples.join(F.broadcast(frame), cond, "left").drop(*keys)
             for name, func in zip(names, funcs):
                 if func in ("count", "count_distinct"):
                     # SQL: a count over an empty/missing group is 0
@@ -1327,15 +1307,8 @@ class _ThetaParamFrame:
                 F.when(F.col(c_name) > 0, F.col(n_name)).alias(n_name),
                 F.when(F.col(c_name) > 0, F.col(c_name)).alias(c_name),
             )
-            biggest = frame.agg(F.max(F.size(s_name))).collect()[0][0]
-            if biggest is not None and biggest > _IN_SUBQUERY_CAP:
-                raise ValidationError(
-                    [f"lookup IN-subquery on {self.table!r}: a "
-                     f"parameter group exceeds {_IN_SUBQUERY_CAP} "
-                     f"distinct values — pre-shape the dim with a "
-                     f"loader query instead"]
-                )
-            return frame, broadcastable
+            _check_in_group_cap(frame, s_name, self.table, "parameter")
+            return frame
         name = self.names[0]
         if self.func == "count" and self.col is None:
             agg = F.count(F.col("__s__m"))  # never counts join-miss rows
@@ -1345,7 +1318,7 @@ class _ThetaParamFrame:
             agg = F.count_distinct(sub_col(self.col))
         else:
             agg = _native_agg(self.func, sub_col(self.col))
-        return g.agg(agg.alias(name)), broadcastable
+        return g.agg(agg.alias(name))
 
 
 def _theta_frame_of(
@@ -1478,20 +1451,6 @@ def _theta_frame_of(
     )
 
 
-def resolve_subqueries(
-    parsed: ParsedQuery, dims: dict[str, DataFrame]
-) -> ParsedQuery:
-    """Replace every UNCORRELATED scalar-subquery term with its literal
-    value, evaluated against the current dim snapshot (dim-sized work,
-    once per refresh — reload recomputes it, matching the reference's
-    re-execute-on-reload semantics). No-op when the query has none;
-    correlated subqueries need the probed dim frame in scope — use
-    :func:`resolve_subqueries_with_dim` (the single-table compile path
-    does)."""
-    parsed, dim_df = resolve_subqueries_with_dim(parsed, dims, None)
-    return parsed
-
-
 def resolve_subqueries_with_dim(
     parsed: ParsedQuery,
     dims: dict[str, DataFrame],
@@ -1578,13 +1537,7 @@ def resolve_subqueries_with_dim(
             F.max(F.col(sq.col).isNull()).alias(names[1]),
             F.count(F.lit(1)).alias(names[2]),
         )
-        biggest = grouped.agg(F.max(F.size(names[0]))).collect()[0][0]
-        if biggest is not None and biggest > _IN_SUBQUERY_CAP:
-            raise ValidationError(
-                [f"lookup IN-subquery on {sq.table!r}: a parameter "
-                 f"group exceeds {_IN_SUBQUERY_CAP} distinct values — "
-                 f"pre-shape the dim with a loader query instead"]
-            )
+        _check_in_group_cap(grouped, names[0], sq.table, "parameter")
         param_subs.append(
             (names, keys, tuple(t for _, t in sq.param_corr), grouped,
              (None, None, None), sq)
@@ -2024,13 +1977,7 @@ def resolve_subqueries_with_dim(
                 F.max(F.col(f"__s_{sq.col}").isNull()).alias(names[1]),
                 F.count(F.lit(1)).alias(names[2]),
             )
-            biggest = grouped.agg(F.max(F.size(names[0]))).collect()[0][0]
-            if biggest is not None and biggest > _IN_SUBQUERY_CAP:
-                raise ValidationError(
-                    [f"lookup IN-subquery on {sq.table!r}: a correlation "
-                     f"group exceeds {_IN_SUBQUERY_CAP} distinct values — "
-                     f"pre-shape the dim with a loader query instead"]
-                )
+            _check_in_group_cap(grouped, names[0], sq.table, "correlation")
             holder["dim"] = dim.join(
                 F.broadcast(grouped), rid, "left"
             ).drop(rid)
@@ -2044,13 +1991,7 @@ def resolve_subqueries_with_dim(
             F.max(F.col(sq.col).isNull()).alias(names[1]),
             F.count(F.lit(1)).alias(names[2]),
         )
-        biggest = grouped.agg(F.max(F.size(names[0]))).collect()[0][0]
-        if biggest is not None and biggest > _IN_SUBQUERY_CAP:
-            raise ValidationError(
-                [f"lookup IN-subquery on {sq.table!r}: a correlation "
-                 f"group exceeds {_IN_SUBQUERY_CAP} distinct values — "
-                 f"pre-shape the dim with a loader query instead"]
-            )
+        _check_in_group_cap(grouped, names[0], sq.table, "correlation")
         cond = None
         for (_, oc), k in zip(sq.corr, keys):
             piece = dim[oc] == grouped[k]
@@ -6517,9 +6458,9 @@ class CompiledLookup:
         """Enrich ``fact`` with this lookup's target + status columns.
 
         Laziness contract: plan construction is lazy EXCEPT (a) a
-        THETA-parameterized subquery (``_ThetaParamFrame.build``), which
-        eagerly materializes its slim distinct parameter-tuple frame
-        (localCheckpoint + exact count) — one extra pass over ``fact``'s
+        THETA-parameterized [NOT] IN / quantified subquery
+        (``_ThetaParamFrame.build``), whose IN-cap guard collects the
+        largest per-tuple value set — one extra pass over ``fact``'s
         lineage per apply(); callers looping apply() over an expensive
         uncached fact should cache the fact. (b) The first apply of an
         equi lookup runs the dim grouping's shuffle stage and pins the
@@ -6640,8 +6581,9 @@ class CompiledLookup:
         self, fact: DataFrame, params: dict[str, BoundParam]
     ) -> tuple[DataFrame, dict[str, BoundParam], list[str]]:
         """PARAMETERIZED subqueries (round-5 latest): broadcast-join
-        each snapshot-built per-group aggregate frame onto the FACT by
-        the bound event params, then expose the joined value as a
+        each per-group aggregate frame (snapshot-built, or per distinct
+        param tuple for a theta shape) onto the FACT by the bound event
+        params, then expose the joined value as a
         synthetic BoundParam so the subquery term compiles as an
         ordinary param on every physical path — the set-at-a-time
         hoist of Derby re-executing the prepared subquery per event
@@ -6653,14 +6595,12 @@ class CompiledLookup:
         params = dict(params)
         drops: list[str] = []
         for names, keys, terms, frame, funcs in self.query.param_subs:
-            broadcastable = True
             if isinstance(frame, _ThetaParamFrame):
-                # THETA shape (round-5 final): materialize the
-                # per-tuple aggregate frame from THIS fact's distinct
-                # bound-param tuples (eager — localCheckpoint + exact
-                # count, apply()'s contract (a)); past the broadcast
-                # cap the join-back degrades to a shuffle
-                frame, broadcastable = frame.build(fact, params)
+                # THETA shape (round-5 final): the per-tuple aggregate
+                # frame over THIS fact's distinct bound-param tuples,
+                # built lazily (apply()'s contract (a) covers the
+                # set shape's IN-cap guard)
+                frame = frame.build(fact, params)
             cond = None
             for k, t in zip(keys, terms):
                 if t.kind == "param":
@@ -6673,10 +6613,7 @@ class CompiledLookup:
                     )
                 piece = frame[k] == fexpr
                 cond = piece if cond is None else cond & piece
-            fact = fact.join(
-                F.broadcast(frame) if broadcastable else frame,
-                cond, "left",
-            ).drop(*keys)
+            fact = fact.join(F.broadcast(frame), cond, "left").drop(*keys)
             for name, func in zip(names, funcs):
                 val = F.col(name)
                 if func in ("count", "count_distinct"):

@@ -3828,12 +3828,11 @@ def lookup_theta_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract (it re-binds and re-executes the prepared subquery per
     event, lookup.rb:131-147). Spark-first compile
     (operators/lookup.py::_ThetaParamFrame): the fact's DISTINCT bound
-    param tuples (slim select + distinct + localCheckpoint, the LIKE
-    map-probe design) theta-join the dim-sized sub frame on the full
-    DNF — params substitute to tuple columns — aggregate per tuple,
-    and broadcast-join back onto the fact; cost is |tuples| x |sub|,
-    constant in fact count, with a shuffle fallback past the broadcast
-    cap.
+    param tuples (a lazy slim select + distinct, the LIKE map-probe
+    design) theta-join the dim-sized sub frame on the full DNF —
+    params substitute to tuple columns — aggregate per tuple, and
+    broadcast-join back onto the fact; cost is |tuples| x |sub|,
+    constant in fact count.
 
     ``th``: scalar avg with an OR mixing a param inequality and a
     param comparison (``qty > :ti OR price <= :ti``). ``ts``: NOT IN

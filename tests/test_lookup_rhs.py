@@ -19,7 +19,7 @@ from logstash_filter_jdbc_static_spark.operators.lookup import (
     CompiledLookup,
     has_subqueries,
     parse_lookup_query,
-    resolve_subqueries,
+    resolve_subqueries_with_dim,
 )
 from logstash_filter_jdbc_static_spark.operators.processor import LookupEnricher
 from logstash_filter_jdbc_static_spark.spec import (
@@ -347,7 +347,8 @@ class TestSnapshotSemantics:
 
     def test_resolve_subqueries_is_noop_without_subqueries(self):
         q = parse_lookup_query("SELECT tool FROM plans WHERE price = qty")
-        assert resolve_subqueries(q, {}) is q
+        out, dim = resolve_subqueries_with_dim(q, {}, None)
+        assert out is q and dim is None
 
 
 class TestTailExpressions:

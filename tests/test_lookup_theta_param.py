@@ -5,10 +5,11 @@ and expressions mixing SUB columns with params. The reference
 re-executes the prepared subquery per event against Derby
 (lib/logstash/filters/jdbc/lookup.rb:131-147); here the aggregate frame
 is built AT PROBE TIME from the fact's distinct bound-param tuples
-(the LIKE map-probe's distinct-tuple design), theta-joined
-against the dim-sized sub frame, aggregated per tuple, and
-broadcast-joined back onto the FACT (_ThetaParamFrame). Every golden
-run cross-checks the row-at-a-time oracle on every event."""
+(the LIKE map-probe's lazy distinct-tuple design), theta-joined
+against the dim-sized sub frame, aggregated per tuple, and always
+broadcast-joined back onto the FACT (_ThetaParamFrame); a scalar
+shape's apply() runs no Spark job. Every golden run cross-checks the
+row-at-a-time oracle on every event."""
 
 from __future__ import annotations
 
@@ -377,6 +378,28 @@ class TestThetaRejections:
             "(SELECT max(qty) FROM plans p3 WHERE p3.price > :lim))",
         )
 
+    def test_theta_set_parameter_group_cap(self, spark, monkeypatch):
+        """A theta [NOT] IN subquery's per-tuple value set honors
+        _IN_SUBQUERY_CAP: apply() fails on the largest group (lim 8
+        keeps prices {10, 99})."""
+        from logstash_filter_jdbc_static_spark.operators import lookup as L
+
+        monkeypatch.setattr(L, "_IN_SUBQUERY_CAP", 1)
+        enr = LookupEnricher(
+            PipelineSpec(lookups=[{
+                "id": "u",
+                "query": (
+                    "SELECT plan AS plan FROM plans WHERE tool = :tool "
+                    "AND price NOT IN "
+                    "(SELECT price FROM plans WHERE price > :lim)"
+                ),
+                "parameters": {"tool": "tool", "lim": "lim"},
+            }]),
+            _dims(spark),
+        )
+        with pytest.raises(ValidationError, match="parameter group"):
+            enr.apply(spark.createDataFrame(FACTS, FACT_SCHEMA))
+
 
 class TestThetaNested:
     """Round-5 final: PARAMETERIZED subqueries NESTED inside another
@@ -554,10 +577,10 @@ class TestThetaPlan:
     def test_fact_side_stays_exchange_free(self, spark):
         """The theta frame rides a broadcast hash join onto the fact —
         the FACT lineage must stay shuffle-free (the 100 TB contract).
-        The allowed exchanges are the per-TUPLE aggregation that builds
-        the frame (over the localCheckpoint'd distinct-tuple frame, so
-        they key on the synthetic ``__psub*_k*`` columns, never a fact
-        column). Fact columns are named distinctively so the
+        The allowed exchanges are the distinct over the fact's
+        parameter tuples and the per-TUPLE aggregation that builds the
+        frame, which key on the synthetic ``__psub*_k*`` columns, never
+        a fact column. Fact columns are named distinctively so the
         exchange-signature check cannot be fooled."""
         import re
 
@@ -590,29 +613,41 @@ class TestThetaPlan:
         # and it actually runs
         assert out.agg(F.count(F.lit(1))).collect()[0][0] == 64
 
-    def test_join_back_shuffles_past_broadcast_limit(
-        self, spark, monkeypatch, caplog
-    ):
-        """Past ``THETA_TUPLE_BROADCAST_LIMIT`` distinct tuples the
-        theta frame joins back onto the fact without a broadcast hint
-        (and says so in a warning); the rows still equal the row
-        oracle's."""
-        import logging
+    def test_scalar_apply_runs_no_job(self, spark):
+        """apply() of a scalar theta-parameterized lookup only builds
+        the plan: the distinct-tuple frame stays lazy, so no Spark job
+        runs until the result is read."""
+        enr = LookupEnricher(
+            PipelineSpec(lookups=[{
+                "id": "u",
+                "query": (
+                    "SELECT plan AS plan FROM plans "
+                    "WHERE tool = :tool AND price <= "
+                    "(SELECT max(price) FROM plans WHERE price < :lim)"
+                ),
+                "parameters": {"tool": "tool", "lim": "lim"},
+            }]),
+            _dims(spark),
+        )
+        facts = spark.createDataFrame(FACTS, FACT_SCHEMA)
+        tracker = spark.sparkContext.statusTracker()
+        before = tracker.getJobIdsForGroup(None)
+        enr.apply(facts)
+        after = tracker.getJobIdsForGroup(None)
+        assert len(after) == len(before), "theta apply() ran a Spark job"
 
-        from logstash_filter_jdbc_static_spark.operators import lookup as L
-
-        monkeypatch.setattr(L, "THETA_TUPLE_BROADCAST_LIMIT", 0)
+    def test_nested_join_back_broadcasts(self, spark):
+        """A nested theta subquery's frame joins onto the enclosing
+        frame's distinct-tuple frame by its ``__psub0_n0_k*`` keys with
+        a broadcast hash join; the rows equal the row oracle's."""
         query = (
-            "SELECT plan AS plan, price AS price FROM plans "
-            "WHERE tool = :tool AND price <= "
-            "(SELECT max(price) FROM plans WHERE price < :lim)"
+            "SELECT plan AS plan FROM plans WHERE tool = :tool "
+            "AND price >= (SELECT avg(price) FROM plans p2 "
+            "WHERE p2.qty > (SELECT min(qty) FROM plans p3 "
+            "WHERE p3.price < :lim))"
         )
-        with caplog.at_level(logging.WARNING, "logstash_filter_jdbc_static_spark"):
-            got = _run(spark, query, {}, default={"plan": "dflt", "price": -1})
-        assert got[("t1", 8)] == [(None, 4), ("pro", 7)]
-        assert any(
-            "exceed the broadcast limit (0)" in r.message for r in caplog.records
-        )
+        got = _run(spark, query, {})
+        assert got[("t2", 3)] == [("gold",)]
         out = LookupEnricher(
             PipelineSpec(lookups=[{
                 "id": "u",
@@ -621,49 +656,10 @@ class TestThetaPlan:
             }]),
             _dims(spark),
         ).apply(spark.createDataFrame(FACTS, FACT_SCHEMA))
-        # the planned (pre-AQE) join of the frame's __psub* keys
         plan = out._jdf.queryExecution().executedPlan().toString()
         joins = [
-            ln for ln in plan.splitlines() if "Join [" in ln and "__psub" in ln
+            ln for ln in plan.splitlines()
+            if "Join [" in ln and "__psub0_n0_k" in ln
         ]
         assert joins, plan
-        assert not any("BroadcastHashJoin" in ln for ln in joins), plan
-
-    def test_nested_join_back_follows_broadcast_limit(self, spark, monkeypatch):
-        """A nested theta subquery's frame joins onto the enclosing
-        frame's distinct-tuple frame by its ``__psub0_n0_k*`` keys:
-        broadcast under the default limit, a shuffle join past it. The
-        rows equal the row oracle's either way."""
-        from logstash_filter_jdbc_static_spark.operators import lookup as L
-
-        query = (
-            "SELECT plan AS plan FROM plans WHERE tool = :tool "
-            "AND price >= (SELECT avg(price) FROM plans p2 "
-            "WHERE p2.qty > (SELECT min(qty) FROM plans p3 "
-            "WHERE p3.price < :lim))"
-        )
-
-        def nested_joins():
-            got = _run(spark, query, {})
-            assert got[("t2", 3)] == [("gold",)]
-            out = LookupEnricher(
-                PipelineSpec(lookups=[{
-                    "id": "u",
-                    "query": query,
-                    "parameters": {"tool": "tool", "lim": "lim"},
-                }]),
-                _dims(spark),
-            ).apply(spark.createDataFrame(FACTS, FACT_SCHEMA))
-            plan = out._jdf.queryExecution().executedPlan().toString()
-            joins = [
-                ln for ln in plan.splitlines()
-                if "Join [" in ln and "__psub0_n0_k" in ln
-            ]
-            assert joins, plan
-            return joins, plan
-
-        joins, plan = nested_joins()
         assert all("BroadcastHashJoin" in ln for ln in joins), plan
-        monkeypatch.setattr(L, "THETA_TUPLE_BROADCAST_LIMIT", 0)
-        joins, plan = nested_joins()
-        assert not any("BroadcastHashJoin" in ln for ln in joins), plan
