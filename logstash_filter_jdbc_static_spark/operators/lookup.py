@@ -229,8 +229,9 @@ class _Subquery:
     # to the per-group max/min extremum compared against the outer
     # column (one row satisfies ``sub_col > x`` iff ``max(sub_col) >
     # x``); SEVERAL (round-5 latest — no single extremum can witness
-    # two inequalities) and all scalar-aggregate cases decorrelate via
-    # the snapshot-time rid THETA JOIN (dim-sized work, like a
+    # two inequalities), all scalar-aggregate and all set cases
+    # aggregate per distinct outer correlation tuple through a
+    # _ThetaParamFrame (_join_outer_theta; dim-sized work, like a
     # non-equi ON).
     ineq: tuple = ()  # tuple[(sub_col, op, outer_col), ...]
     # OUTER-side correlation expressions (round-5 latest):
@@ -534,10 +535,11 @@ def _extract_correlation(
     (``allow_ineq`` — scalar and EXISTS subqueries) plain
     ``sub_col <op> outer.col`` inequalities: ONE on an EXISTS
     decorrelates to the group's max/min extremum; several (round-5
-    latest), and scalar aggregates, take the snapshot-time rid theta
-    join. Anything MIXING scopes inside one expression, or OR branches
-    around a correlation, raises: those would need per-row nested
-    execution, which no broadcast plan can stage."""
+    latest), scalar aggregates and set subqueries aggregate per
+    distinct outer correlation tuple (_join_outer_theta). Anything
+    MIXING scopes inside one expression, or OR branches around a
+    correlation, raises: those would need per-row nested execution,
+    which no broadcast plan can stage."""
     def is_outer(name: str) -> bool:
         return isinstance(name, str) and name.startswith(_OUTER_MARK)
 
@@ -791,49 +793,6 @@ def _sub_filtered_df(
     # over the depth bound
     nested_state = {"df": df, "n": 0}
 
-    def _nested_theta_pairs(inner: _Subquery, in_df, d2, name: str):
-        """Nested INEQUALITY correlations (round-5 latest): the nested
-        twin of the top-level rid THETA JOIN — pin each ENCLOSING sub
-        frame row with a row id (monotonically_increasing_id is
-        plan-dependent and the id is read on both sides of the rejoin,
-        hence the localCheckpoint), pair it with its matching inner
-        rows (Spark hash-joins any equality keys and post-filters the
-        inequalities; without eq keys it is a dim-sized nested loop,
-        once per refresh snapshot), and return (pinned d2, rid, pairs)
-        for the caller's per-rid aggregate + broadcast join-back."""
-        rid = f"__nrid_{name}"
-        d2 = d2.withColumn(
-            rid, F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
-        need = [sc for sc, _ in inner.corr] + [
-            isc for isc, _, _ in inner.ineq
-        ]
-        if inner.col is not None:
-            need.append(inner.col)
-        need = list(dict.fromkeys(need))
-        sub_r = in_df.select(
-            *[F.col(c).alias(f"__s_{c}") for c in need]
-        )
-        cond = None
-        for sc, oc in inner.corr:
-            piece = F.col(f"__s_{sc}") == F.col(oc)
-            cond = piece if cond is None else (cond & piece)
-        for isc, iop, ioc in inner.ineq:
-            left, right = F.col(f"__s_{isc}"), F.col(ioc)
-            ipiece = {
-                "<": left < right, "<=": left <= right,
-                ">": left > right, ">=": left >= right,
-            }[iop]
-            cond = ipiece if cond is None else (cond & ipiece)
-        outer_cols = list(
-            dict.fromkeys(
-                [oc for _, oc in inner.corr]
-                + [ioc for _, _, ioc in inner.ineq]
-            )
-        )
-        pairs = d2.select(rid, *outer_cols).join(sub_r, cond, "inner")
-        return d2, rid, pairs
-
     def _validate_nested_scope(inner: _Subquery, what: str):
         """Materialize the enclosing frame's outer expressions and
         validate every correlation target (equality AND inequality)
@@ -875,21 +834,10 @@ def _sub_filtered_df(
         nested_state["n"] += 1
         if inner.ineq:
             # nested scalar aggregate over a per-ROW moving range
-            # (round-5 latest): rid theta join + per-rid aggregate,
-            # the nested twin of corr_col_of's inequality path
-            d2, rid, pairs = _nested_theta_pairs(inner, in_df, d2, name)
-            if inner.func == "count" and inner.col is None:
-                agg2 = F.count(F.lit(1))
-            elif inner.func == "count_distinct":
-                agg2 = F.count_distinct(F.col(f"__s_{inner.col}"))
-            else:
-                agg2 = _native_agg(inner.func, F.col(f"__s_{inner.col}"))
-            agg_df = pairs.groupBy(rid).agg(agg2.alias(name))
-            d2 = d2.join(F.broadcast(agg_df), rid, "left").drop(rid)
-            if inner.func in ("count", "count_distinct"):
-                d2 = d2.withColumn(
-                    name, F.coalesce(F.col(name), F.lit(0))
-                )
+            # (round-5 latest): one value per distinct correlation
+            # tuple of the ENCLOSING frame, the nested twin of
+            # corr_col_of's inequality path
+            d2 = _join_outer_theta(d2, inner, in_df, name, (name,), inner.func)
             nested_state["df"] = d2
             names.add(name)
             return _Term("column", name)
@@ -928,16 +876,11 @@ def _sub_filtered_df(
         name = f"__nsqx{nested_state['n']}"
         nested_state["n"] += 1
         if inner.ineq:
-            # inequality-correlated nested EXISTS (round-5 latest):
-            # rid theta join, flag the enclosing rows with at least
-            # one witness — misses coalesce FALSE (two-valued)
-            d2, rid, pairs = _nested_theta_pairs(inner, in_df, d2, name)
-            flags = pairs.groupBy(rid).agg(F.lit(True).alias(name))
-            d2 = (
-                d2.join(F.broadcast(flags), rid, "left")
-                .drop(rid)
-                .withColumn(name, F.coalesce(F.col(name), F.lit(False)))
-            )
+            # inequality-correlated nested EXISTS (round-5 latest): a
+            # per-tuple witness count; an empty or missed tuple counts
+            # 0, so the flag is FALSE (two-valued)
+            d2 = _join_outer_theta(d2, inner, in_df, name, (name,), "count")
+            d2 = d2.withColumn(name, F.col(name) > 0)
         elif not inner.corr:
             d2 = d2.withColumn(name, F.lit(bool(in_df.take(1))))
         else:
@@ -975,18 +918,10 @@ def _sub_filtered_df(
         names3 = (f"{base}_set", f"{base}_null", f"{base}_cnt")
         if inner.ineq:
             # inequality-correlated nested set subquery (round-5
-            # latest): the value set is per enclosing ROW, not per
-            # eq-key group — rid theta join, per-rid (set, had-NULL,
-            # count), left-join back; a rid with no matching rows
-            # stays NULL, which the in_set ops read as "empty group"
-            d2, rid, pairs = _nested_theta_pairs(inner, in_df, d2, base)
-            grouped = pairs.groupBy(rid).agg(
-                F.collect_set(F.col(f"__s_{inner.col}")).alias(names3[0]),
-                F.max(F.col(f"__s_{inner.col}").isNull()).alias(names3[1]),
-                F.count(F.lit(1)).alias(names3[2]),
-            )
-            _check_in_group_cap(grouped, names3[0], inner.table, "correlation")
-            d2 = d2.join(F.broadcast(grouped), rid, "left").drop(rid)
+            # latest): the value set is per enclosing correlation
+            # TUPLE, not per eq-key group; an empty tuple stays NULL,
+            # which the in_set ops read as "empty group"
+            d2 = _join_outer_theta(d2, inner, in_df, base, names3, "__values")
             nested_state["df"] = d2
             names.update(names3)
             return names3
@@ -1150,16 +1085,25 @@ def _check_in_group_cap(
 
 @dataclass
 class _ThetaParamFrame:
-    """Probe-time aggregate frame for a THETA-parameterized subquery
-    (round-5 final): the sub-WHERE's parameter predicates are not plain
-    equalities (``price > :lim``, OR around a param predicate, mixed
-    sub-column+param expressions), so no snapshot groupBy can key the
-    frame. Instead, at probe time, the fact's DISTINCT bound-param
-    tuples (a lazy slim select + distinct) theta-join the dim-sized sub
-    frame on the full DNF with params substituted to tuple columns,
-    aggregate per tuple, and the result broadcast-joins back onto the
-    FACT by the same bound expressions — the per-DISTINCT-tuple hoist
-    of Derby re-executing the prepared subquery per event
+    """Per-tuple aggregate frame for a subquery whose WHERE no snapshot
+    groupBy can key. It serves two callers:
+
+    - a THETA-parameterized subquery (round-5 final): the sub-WHERE's
+      parameter predicates are not plain equalities (``price > :lim``,
+      OR around a param predicate, mixed sub-column+param
+      expressions); the tuples are the FACT's distinct bound-param
+      tuples, built at probe time;
+    - an INEQUALITY-correlated subquery (``p2.price < t.price``,
+      ``_join_outer_theta``): the outer frame's correlation columns are
+      the parameters and the tuples are the outer frame's distinct
+      correlation tuples, built at resolution time.
+
+    The tuples (a lazy slim select + distinct) theta-join the dim-sized
+    sub frame on the full DNF with params substituted to tuple columns,
+    aggregate per tuple, and the result broadcast-joins back by the
+    same bound expressions (``_join_per_tuple``) — the
+    per-DISTINCT-tuple hoist of Derby re-executing the prepared
+    subquery per event and a correlated subquery per outer row
     (lib/logstash/filters/jdbc/lookup.rb:131-147). Cost: |distinct
     tuples| x |sub table| pair evaluations, constant in fact count. As
     with the map-probe's map-back (``CompiledLookup._apply_bnlj``), a
@@ -1189,6 +1133,9 @@ class _ThetaParamFrame:
     # ``__..._n{i}`` pseudo-param). A nested THETA builder recurses
     # with the tuple frame as its fact.
     nested: tuple = ()
+    # what one tuple is, for the IN-cap message: "parameter" (event
+    # params) or "correlation" (outer correlation columns)
+    group: str = "parameter"
 
     def dtype_of(self, name: str):
         return self.dtypes[self.names.index(name)]
@@ -1244,32 +1191,11 @@ class _ThetaParamFrame:
         # per-tuple value onto the distinct-tuple frame so the theta
         # condition can read it as a pseudo-param column — a nested
         # THETA builder recurses with THIS tuple frame as its fact
-        for names, keys, terms, frame, funcs in self.nested:
-            if isinstance(frame, _ThetaParamFrame):
-                inner_params = {
-                    n: BoundParam(n, F.col(key_of[n]), F.lit(True))
-                    for n in frame.pnames
-                }
-                frame = frame.build(tuples, inner_params)
-            cond = None
-            for k, t in zip(keys, terms):
-                if t.kind == "param":
-                    fexpr = F.col(key_of[t.value])
-                else:  # param_expr over params + literals only
-                    fexpr = sqlexpr.compile_expr(
-                        sqlexpr.subst_params(
-                            t.value, lambda n: F.col(key_of[n])
-                        )
-                    )
-                piece = frame[k] == fexpr
-                cond = piece if cond is None else cond & piece
-            tuples = tuples.join(F.broadcast(frame), cond, "left").drop(*keys)
-            for name, func in zip(names, funcs):
-                if func in ("count", "count_distinct"):
-                    # SQL: a count over an empty/missing group is 0
-                    tuples = tuples.withColumn(
-                        name, F.coalesce(F.col(name), F.lit(0))
-                    )
+        tuple_params = {
+            n: BoundParam(n, F.col(k), F.lit(True)) for n, k in key_of.items()
+        }
+        for entry in self.nested:
+            tuples = _join_per_tuple(tuples, tuple_params, entry)
 
         def sub_col(name: str) -> Column:
             return F.col(f"__s_{name}")
@@ -1307,7 +1233,7 @@ class _ThetaParamFrame:
                 F.when(F.col(c_name) > 0, F.col(n_name)).alias(n_name),
                 F.when(F.col(c_name) > 0, F.col(c_name)).alias(c_name),
             )
-            _check_in_group_cap(frame, s_name, self.table, "parameter")
+            _check_in_group_cap(frame, s_name, self.table, self.group)
             return frame
         name = self.names[0]
         if self.func == "count" and self.col is None:
@@ -1449,6 +1375,84 @@ def _theta_frame_of(
         dtypes=dtypes,
         nested=tuple(e[:5] for e in nested_entries),
     )
+
+
+def _join_per_tuple(
+    fact: DataFrame, params: dict[str, BoundParam], entry: tuple
+) -> DataFrame:
+    """Broadcast left-join one per-tuple value frame onto ``fact``.
+
+    ``entry`` is ``(names, keys, terms, frame, funcs)``: ``frame`` (a
+    DataFrame, or a _ThetaParamFrame built here over ``fact``) carries
+    key column ``keys[i]`` equal to ``terms[i]`` bound through
+    ``params``, and the value columns ``names``. The keys are dropped
+    after the join. A miss leaves a value NULL, SQL's empty scalar
+    subquery, except count/count(DISTINCT), which read 0. The [NOT] IN
+    / quantified set columns (func None) stay NULL on a miss, which the
+    in_set ops read as the empty group."""
+    names, keys, terms, frame, funcs = entry
+    if isinstance(frame, _ThetaParamFrame):
+        frame = frame.build(fact, params)
+    cond = None
+    for k, t in zip(keys, terms):
+        if t.kind == "param":
+            fexpr = params[t.value].value
+        else:  # param_expr over params + literals only
+            fexpr = sqlexpr.compile_expr(
+                sqlexpr.subst_params(t.value, lambda n: params[n].value)
+            )
+        piece = frame[k] == fexpr
+        cond = piece if cond is None else cond & piece
+    fact = fact.join(F.broadcast(frame), cond, "left").drop(*keys)
+    for name, func in zip(names, funcs):
+        if func in ("count", "count_distinct"):
+            fact = fact.withColumn(name, F.coalesce(F.col(name), F.lit(0)))
+    return fact
+
+
+def _join_outer_theta(
+    outer: DataFrame,
+    sq: _Subquery,
+    sub_df: DataFrame,
+    base: str,
+    names: tuple,
+    func: str,
+) -> DataFrame:
+    """Decorrelate an INEQUALITY-correlated subquery onto ``outer`` (the
+    probed dim, or the enclosing sub frame of a nested subquery) through
+    a _ThetaParamFrame whose parameters are the outer correlation
+    columns: each ``corr`` pair becomes an ``=`` predicate and each
+    ``ineq`` triple a theta predicate over the already-filtered
+    ``sub_df``. The frame aggregates ``func`` per distinct outer
+    correlation tuple and joins back by those tuples. Lazy, except the
+    ``__values`` shape's IN-cap guard. A NULL correlation value matches
+    no sub row and misses the join-back: the empty group either way."""
+    where = tuple(
+        _Predicate(sc, "=", [_Term("param", oc)]) for sc, oc in sq.corr
+    ) + tuple(
+        _Predicate(sc, op, [_Term("param", oc)]) for sc, op, oc in sq.ineq
+    )
+    pnames = tuple(dict.fromkeys(p.terms[0].value for p in where))
+    keys = tuple(f"{base}_k{i}" for i in range(len(pnames)))
+    sub_cols = [p.dim_column for p in where]
+    if sq.col is not None:
+        sub_cols.append(sq.col)
+    frame = _ThetaParamFrame(
+        sub_df=sub_df,
+        where=(where,),
+        func=func,
+        col=sq.col,
+        keys=keys,
+        pnames=pnames,
+        names=names,
+        sub_cols=tuple(dict.fromkeys(sub_cols)),
+        table=sq.table,
+        group="correlation",
+    )
+    params = {n: BoundParam(n, F.col(n), F.lit(True)) for n in pnames}
+    terms = tuple(_Term("param", n) for n in pnames)
+    funcs = (None,) * 3 if func == "__values" else (func,)
+    return _join_per_tuple(outer, params, (names, keys, terms, frame, funcs))
 
 
 def resolve_subqueries_with_dim(
@@ -1614,7 +1618,7 @@ def resolve_subqueries_with_dim(
         if not sq.corr and not sq.ineq:
             return value_term(sq)
         # round-5 latest: INEQUALITY correlations are legal here too —
-        # the rid theta path's per-row values coincide within a group
+        # the per-correlation-tuple values coincide within a group
         # once every outer column (equality or inequality) is a GROUP
         # BY key, so the hidden max carrier stays exact
         bad = sorted(
@@ -1665,90 +1669,21 @@ def resolve_subqueries_with_dim(
             )
 
     def corr_col_of(sq: _Subquery) -> str:
-        if holder["dim"] is None:
-            raise ValidationError(
-                [f"lookup subquery on {sq.table!r}: correlated "
-                 f"subqueries need the probed dimension in scope — "
-                 f"use resolve_subqueries_with_dim"]
-            )
         for k, name in corr_cache:
             if k == sq:
                 return name
         ensure_outer_cols(sq)
-        dim = holder["dim"]
-        missing = sorted(
-            oc for _, oc in sq.corr if oc not in dim.columns
-        )
-        if missing:
-            raise ValidationError(
-                [f"lookup subquery on {sq.table!r}: outer column(s) "
-                 f"{missing} not in table {parsed.table!r}"]
-            )
+        dim = _need_dim(sq, "correlated")
         sub_df, agg = _sub_filtered_df(sq, dims)
         name = f"__sq_corr{len(corr_cache)}"
         if sq.ineq:
             # inequality correlation (round-5 late): no per-group
             # extremum can carry a general aggregate over a moving
-            # range, so decorrelate via a snapshot-time THETA JOIN —
-            # dim-sized work exactly like a non-equi ON join: pair
-            # each dim row (pinned row id; monotonically_increasing_id
-            # is plan-dependent and the id is read on both sides of
-            # the rejoin, hence the localCheckpoint) with its matching
-            # sub rows, aggregate per row id, left-join back. With
-            # equality keys Spark hash-joins and post-filters the
-            # inequality; without any it is a dim-sized nested loop.
-            missing_i = sorted(
-                {ioc for _, _, ioc in sq.ineq} - set(dim.columns)
+            # range, so aggregate per distinct outer correlation tuple
+            # (_join_outer_theta; dim-sized work like a non-equi ON)
+            holder["dim"] = _join_outer_theta(
+                dim, sq, sub_df, name, (name,), sq.func
             )
-            if missing_i:
-                raise ValidationError(
-                    [f"lookup subquery on {sq.table!r}: outer column(s) "
-                     f"{missing_i} not in table {parsed.table!r}"]
-                )
-            rid = f"__rid_{name}"
-            dim = dim.withColumn(
-                rid, F.monotonically_increasing_id()
-            ).localCheckpoint(eager=True)
-            need = [sc for sc, _ in sq.corr] + [
-                isc for isc, _, _ in sq.ineq
-            ]
-            if sq.col is not None:
-                need.append(sq.col)
-            need = list(dict.fromkeys(need))
-            sub_r = sub_df.select(
-                *[F.col(c).alias(f"__s_{c}") for c in need]
-            )
-            if sq.func == "count" and sq.col is None:
-                agg2 = F.count(F.lit(1))
-            elif sq.func == "count_distinct":
-                agg2 = F.count_distinct(F.col(f"__s_{sq.col}"))
-            else:
-                agg2 = _native_agg(sq.func, F.col(f"__s_{sq.col}"))
-            cond = None
-            for sc, oc in sq.corr:
-                piece = F.col(f"__s_{sc}") == F.col(oc)
-                cond = piece if cond is None else (cond & piece)
-            for isc, iop, ioc in sq.ineq:
-                left, right = F.col(f"__s_{isc}"), F.col(ioc)
-                ipiece = {
-                    "<": left < right, "<=": left <= right,
-                    ">": left > right, ">=": left >= right,
-                }[iop]
-                cond = ipiece if cond is None else (cond & ipiece)
-            outer_cols = list(
-                dict.fromkeys(
-                    [oc for _, oc in sq.corr]
-                    + [ioc for _, _, ioc in sq.ineq]
-                )
-            )
-            pairs = dim.select(rid, *outer_cols).join(sub_r, cond, "inner")
-            agg_df = pairs.groupBy(rid).agg(agg2.alias(name))
-            dim = dim.join(F.broadcast(agg_df), rid, "left").drop(rid)
-            if sq.func in ("count", "count_distinct"):
-                dim = dim.withColumn(
-                    name, F.coalesce(F.col(name), F.lit(0))
-                )
-            holder["dim"] = dim
             corr_cache.append((sq, name))
             return name
         keys = [f"__ck{i}_{name}" for i in range(len(sq.corr))]
@@ -1804,9 +1739,10 @@ def resolve_subqueries_with_dim(
         per-group extremum (a row with ``sub_col > x`` exists iff
         ``max(sub_col) > x``; max/min ignore NULL sub values, which
         could never satisfy the inequality anyway — and a NULL outer
-        value compares unknown, coalescing FALSE, exactly SQL);
-        uncorrelated -> one driver-side emptiness probe folds to a
-        constant column."""
+        value compares unknown, coalescing FALSE, exactly SQL); several
+        inequalities count their witnesses per distinct outer
+        correlation tuple (_join_outer_theta); uncorrelated -> one
+        driver-side emptiness probe folds to a constant column."""
         for k, name in exists_cache:
             if k == sq:
                 return name
@@ -1814,51 +1750,15 @@ def resolve_subqueries_with_dim(
         dim = _need_dim(sq, "EXISTS")
         name = f"__sq_exists{len(exists_cache)}"
         sub_df, _ = _sub_filtered_df(sq, dims)
-        cmp_of = {
-            "<": lambda a, b: a < b, "<=": lambda a, b: a <= b,
-            ">": lambda a, b: a > b, ">=": lambda a, b: a >= b,
-        }
         if len(sq.ineq) > 1:
             # SEVERAL inequality correlations (round-5 latest): no
             # single extremum can witness two inequalities at once —
             # a row with the group's max price need not be the row
-            # with its max qty — so the EXISTS flag decorrelates via
-            # the same snapshot-time rid THETA JOIN the scalar
-            # aggregates use: pair each dim row with its matching sub
-            # rows (hash join on the equality keys, post-filtered
-            # inequalities; dim-sized work, once per refresh) and
-            # flag the rows with at least one witness
-            rid = f"__rid_{name}"
-            dim = dim.withColumn(
-                rid, F.monotonically_increasing_id()
-            ).localCheckpoint(eager=True)
-            need = list(dict.fromkeys(
-                [sc for sc, _ in sq.corr] + [isc for isc, _, _ in sq.ineq]
-            ))
-            sub_r = sub_df.select(
-                *[F.col(c).alias(f"__s_{c}") for c in need]
-            )
-            cond = None
-            for sc, oc in sq.corr:
-                piece = F.col(f"__s_{sc}") == F.col(oc)
-                cond = piece if cond is None else (cond & piece)
-            for isc, iop, ioc in sq.ineq:
-                piece = cmp_of[iop](F.col(f"__s_{isc}"), F.col(ioc))
-                cond = piece if cond is None else (cond & piece)
-            outer_cols = list(dict.fromkeys(
-                [oc for _, oc in sq.corr] + [ioc for _, _, ioc in sq.ineq]
-            ))
-            flags = (
-                dim.select(rid, *outer_cols)
-                .join(sub_r, cond, "inner")
-                .groupBy(rid)
-                .agg(F.lit(True).alias(name))
-            )
-            dim = (
-                dim.join(F.broadcast(flags), rid, "left")
-                .drop(rid)
-                .withColumn(name, F.coalesce(F.col(name), F.lit(False)))
-            )
+            # with its max qty — so count the witnesses per distinct
+            # outer correlation tuple (_join_outer_theta, the scalar
+            # aggregates' path); an empty or missed tuple counts 0
+            dim = _join_outer_theta(dim, sq, sub_df, name, (name,), "count")
+            dim = dim.withColumn(name, F.col(name) > 0)
         elif sq.ineq:
             (sub_col, op, outer_col) = sq.ineq[0]
             # one inequality witness per group: > >= need the group max,
@@ -1879,7 +1779,7 @@ def resolve_subqueries_with_dim(
                     .withColumn(
                         name,
                         F.coalesce(
-                            cmp_of[op](F.col(name), dim[outer_col]),
+                            _QUANT_CMP[op](F.col(name), dim[outer_col]),
                             F.lit(False),
                         ),
                     )
@@ -1890,7 +1790,7 @@ def resolve_subqueries_with_dim(
                 dim = dim.withColumn(
                     name,
                     F.coalesce(
-                        cmp_of[op](F.lit(extremum), F.col(outer_col)),
+                        _QUANT_CMP[op](F.lit(extremum), F.col(outer_col)),
                         F.lit(False),
                     ),
                 )
@@ -1936,51 +1836,13 @@ def resolve_subqueries_with_dim(
         sub_df, _ = _sub_filtered_df(sq, dims)
         if sq.ineq:
             # INEQUALITY correlations (round-5 latest): the value set
-            # is per dim ROW, not per correlation-key group, so
-            # decorrelate via the same snapshot-time rid THETA JOIN as
-            # scalar aggregates — pair each pinned dim row with its
-            # matching sub rows (hash join + inequality post-filter
-            # with eq keys; dim-sized nested loop without), collect
-            # the per-rid (set, had-NULL, count) columns, left-join
-            # back. A rid with no matching sub rows stays NULL — the
-            # in_set ops read that as "empty group", exactly like an
-            # eq-key left-join miss.
-            rid = f"__rid_in{i}"
-            dim = dim.withColumn(
-                rid, F.monotonically_increasing_id()
-            ).localCheckpoint(eager=True)
-            need = list(dict.fromkeys(
-                [sc for sc, _ in sq.corr]
-                + [isc for isc, _, _ in sq.ineq]
-                + [sq.col]
-            ))
-            sub_r = sub_df.select(
-                *[F.col(c).alias(f"__s_{c}") for c in need]
+            # is per distinct outer correlation TUPLE, not per
+            # correlation-key group (_join_outer_theta). An empty tuple
+            # stays NULL — the in_set ops read that as "empty group",
+            # exactly like an eq-key left-join miss.
+            holder["dim"] = _join_outer_theta(
+                dim, sq, sub_df, f"__sq_in{i}", names, "__values"
             )
-            cond = None
-            for sc, oc in sq.corr:
-                piece = F.col(f"__s_{sc}") == F.col(oc)
-                cond = piece if cond is None else (cond & piece)
-            for isc, iop, ioc in sq.ineq:
-                left, right = F.col(f"__s_{isc}"), F.col(ioc)
-                ipiece = {
-                    "<": left < right, "<=": left <= right,
-                    ">": left > right, ">=": left >= right,
-                }[iop]
-                cond = ipiece if cond is None else (cond & ipiece)
-            outer_cols = list(dict.fromkeys(
-                [oc for _, oc in sq.corr] + [ioc for _, _, ioc in sq.ineq]
-            ))
-            pairs = dim.select(rid, *outer_cols).join(sub_r, cond, "inner")
-            grouped = pairs.groupBy(rid).agg(
-                F.collect_set(F.col(f"__s_{sq.col}")).alias(names[0]),
-                F.max(F.col(f"__s_{sq.col}").isNull()).alias(names[1]),
-                F.count(F.lit(1)).alias(names[2]),
-            )
-            _check_in_group_cap(grouped, names[0], sq.table, "correlation")
-            holder["dim"] = dim.join(
-                F.broadcast(grouped), rid, "left"
-            ).drop(rid)
             in_group_cache.append((sq, names))
             return names
         keys = [f"__ik{j}_{i}" for j in range(len(sq.corr))]
@@ -2019,8 +1881,8 @@ def resolve_subqueries_with_dim(
         is constant within each group): the per-group (set, had-NULL,
         count) dim columns ride into the payload as hidden max
         carriers the HAVING filter's ``in_set`` / ``{cmp} {quant}_set``
-        ops then read. collect_set order varies per row on the rid
-        theta path, but the ops are membership tests — order-blind."""
+        ops then read. The ops are membership tests, blind to the
+        order of the collected set."""
         outer_cols = {oc for _, oc in sq.corr} | {
             oc for _, _, oc in sq.ineq
         }
@@ -3317,8 +3179,8 @@ class _WhereParser:
             proj_toks, strip_sub_qual, computed, "projection"
         )
         # inequality correlations are legal here since round-5 latest:
-        # the set subquery decorrelates via the same snapshot-time rid
-        # theta join as scalar aggregates (in_group_cols_of)
+        # the set subquery aggregates per distinct outer correlation
+        # tuple, like scalar aggregates (in_group_cols_of)
         where, corr, ineq, oexprs, pcorr, ptheta = self._sub_where(
             table, sub_alias, computed, allow_ineq=True
         )
@@ -6587,43 +6449,18 @@ class CompiledLookup:
         synthetic BoundParam so the subquery term compiles as an
         ordinary param on every physical path — the set-at-a-time
         hoist of Derby re-executing the prepared subquery per event
-        (lookup.rb:131-147). A join miss leaves the value NULL — SQL's
-        empty scalar subquery — except count/count(DISTINCT), which
-        coalesce to 0. The fact side gains one exchange-free broadcast
-        hash join per distinct parameterized subquery; the synthetic
-        columns are dropped after the payload stage."""
+        (lookup.rb:131-147). Miss semantics are _join_per_tuple's. A
+        theta shape's frame builds lazily over THIS fact's distinct
+        bound-param tuples (apply()'s contract (a) covers the set
+        shape's IN-cap guard). The fact side gains one exchange-free
+        broadcast hash join per distinct parameterized subquery; the
+        synthetic columns are dropped after the payload stage."""
         params = dict(params)
         drops: list[str] = []
-        for names, keys, terms, frame, funcs in self.query.param_subs:
-            if isinstance(frame, _ThetaParamFrame):
-                # THETA shape (round-5 final): the per-tuple aggregate
-                # frame over THIS fact's distinct bound-param tuples,
-                # built lazily (apply()'s contract (a) covers the
-                # set shape's IN-cap guard)
-                frame = frame.build(fact, params)
-            cond = None
-            for k, t in zip(keys, terms):
-                if t.kind == "param":
-                    fexpr = params[t.value].value
-                else:  # param_expr over params + literals only
-                    fexpr = sqlexpr.compile_expr(
-                        sqlexpr.subst_params(
-                            t.value, lambda n: params[n].value
-                        )
-                    )
-                piece = frame[k] == fexpr
-                cond = piece if cond is None else cond & piece
-            fact = fact.join(F.broadcast(frame), cond, "left").drop(*keys)
-            for name, func in zip(names, funcs):
-                val = F.col(name)
-                if func in ("count", "count_distinct"):
-                    # SQL: a count over an empty/missing group is 0,
-                    # not NULL. The [NOT] IN / quantified set columns
-                    # (func None) stay NULL on a miss — the in_set ops
-                    # read a NULL count as "empty group", exactly like
-                    # the correlated left-join machinery.
-                    val = F.coalesce(val, F.lit(0))
-                params[name] = BoundParam(name, val, F.lit(True))
+        for entry in self.query.param_subs:
+            fact = _join_per_tuple(fact, params, entry)
+            for name in entry[0]:
+                params[name] = BoundParam(name, F.col(name), F.lit(True))
                 drops.append(name)
         return fact, params, drops
 

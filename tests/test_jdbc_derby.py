@@ -1056,8 +1056,8 @@ class TestDerbyRound5Shapes:
 
     def test_nested_ineq_on_derby_dim(self, spark, derby_servers):
         # round-5 latest: a NESTED inequality correlation against the
-        # Derby-loaded dim — the nested rid theta join pairs each
-        # enclosing sub row with its strictly-lower inner rows
+        # Derby-loaded dim — each distinct correlation tuple of the
+        # enclosing sub frame pairs with its strictly-lower inner rows
         store = self._store(spark)
         spec = PipelineSpec(
             lookups=[
@@ -1085,7 +1085,8 @@ class TestDerbyRound5Shapes:
     def test_ineq_correlated_in_on_derby_dim(self, spark, derby_servers):
         # round-5 latest: an INEQUALITY correlation inside an
         # IN-subquery (standard SQL, Derby runs it natively) — here
-        # the per-row value set comes from the snapshot rid theta join
+        # the value set is aggregated per distinct outer correlation
+        # tuple and broadcast back
         store = self._store(spark)
         spec = PipelineSpec(
             lookups=[
@@ -1548,7 +1549,8 @@ class TestDerbyDerivedTables:
 class TestDerbyIneqSubquery:
     """Inequality-correlated scalar subquery against the Derby-loaded
     dim (round-5 late): Derby nests the subquery per outer row; here
-    it decorrelates to a snapshot-time theta join per pinned row id.
+    it aggregates per distinct outer correlation tuple (the theta
+    distinct-tuple frame) and broadcasts the result back.
     Expectations from the live Derby rows."""
 
     def test_rank_count_on_derby_dim(self, spark, derby_servers):
@@ -2245,7 +2247,8 @@ class TestDerbyGrammarLegality:
     ):
         # round-5 latest: SEVERAL inequality correlations in one
         # EXISTS (pareto dominance) — plain SQL, Derby-legal; our
-        # engine decorrelates it to the snapshot-time rid theta flag
+        # engine counts the witnesses per distinct outer correlation
+        # tuple
         rows = self._fetch(
             spark,
             'SELECT "name" FROM servers WHERE NOT EXISTS '

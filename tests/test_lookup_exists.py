@@ -427,7 +427,7 @@ class TestIneqCorrelation:
     def test_two_inequalities_accepted(self):
         # round-5 latest: SEVERAL inequality correlations are accepted
         # — no single extremum can witness two at once, so the EXISTS
-        # flag decorrelates via the snapshot-time rid theta join
+        # flag counts witnesses per distinct outer correlation tuple
         q = parse_lookup_query(
             "SELECT price FROM t WHERE EXISTS (SELECT 1 FROM t p2 "
             "WHERE p2.price > t.price AND p2.qty < t.qty)"
@@ -451,7 +451,7 @@ class TestIneqCorrelation:
 
     def test_ineq_accepted_in_in_subquery(self):
         # round-5 latest: inequality correlations are ACCEPTED in set
-        # subqueries — per-row value sets via the rid theta join
+        # subqueries — value sets per distinct outer correlation tuple
         # (TestIneqSetGolden)
         q = parse_lookup_query(
             "SELECT price FROM t WHERE price IN (SELECT p2.price "
@@ -518,9 +518,10 @@ class TestIneqGolden:
 
     def test_two_inequalities_dominance(self, spark, kw):
         # round-5 latest: TWO inequality correlations — "a row that
-        # strictly dominates mine on price AND qty exists" (the rid
-        # theta flag; an extremum rewrite cannot express this: the
-        # max-price row need not be the max-qty row). Dominated rows
+        # strictly dominates mine on price AND qty exists" (a witness
+        # count per correlation tuple; an extremum rewrite cannot
+        # express this: the max-price row need not be the max-qty
+        # row). Dominated rows
         # across the whole dim: (5,4)<(8,8), (7,2)<(10,3),
         # (8,1)<(10,3), (1,5)<(8,8).
         got = self._run(
@@ -549,7 +550,7 @@ class TestIneqGolden:
         }
 
     def test_scalar_with_two_inequalities(self, spark, kw):
-        # the scalar rid-theta aggregate takes several inequalities
+        # the per-tuple scalar aggregate takes several inequalities
         # too: count of strict dominators, compared against 0
         got = self._run(
             spark, kw,
@@ -914,12 +915,12 @@ class TestJoinModeRowOracle:
 @pytest.mark.parametrize("kw", ENGINES)
 class TestIneqScalarGolden:
     """Round-5 late: ONE inequality correlation in scalar aggregate
-    subqueries (WHERE comparands and PROJECTION items) — decorrelated
-    via a snapshot-time theta join aggregated per pinned dim row id,
-    left-joined back (dim-sized; with equality keys Spark hash-joins
-    and post-filters the inequality). Hand-verified over PLAN_ROWS
-    (plan groups: basic {10, 2}, pro {7, 8}, trial {1}; NULL plans
-    correlate to nothing)."""
+    subqueries (WHERE comparands and PROJECTION items) — aggregated
+    per distinct outer correlation tuple through the theta
+    distinct-tuple frame, broadcast-joined back (dim-sized; with
+    equality keys Spark hash-joins and post-filters the inequality).
+    Hand-verified over PLAN_ROWS (plan groups: basic {10, 2}, pro
+    {7, 8}, trial {1}; NULL plans correlate to nothing)."""
 
     _run = TestGolden._run
 
@@ -1021,13 +1022,13 @@ class TestIneqScalarGolden:
 class TestIneqSetGolden:
     """Round-5 latest: INEQUALITY correlations in [NOT] IN and
     quantified set subqueries (``plan IN (SELECT p2.plan FROM t p2
-    WHERE p2.price < t.price)``) — the value set is per dim ROW, so
-    in_group_cols_of decorrelates via the same snapshot-time rid theta
-    join as scalar aggregates, collecting per-rid (set, had-NULL,
-    count) columns; the predicate compiles as the unchanged ``in_set``
-    / ``{cmp} {quant}_set`` ops. Hand-verified over PLAN_ROWS (by
-    price: 1 trial, 2 basic, 5 NULL, 7 pro, 8 pro, 8 NULL, 10
-    basic)."""
+    WHERE p2.price < t.price)``) — the value set is per outer
+    correlation TUPLE, so in_group_cols_of decorrelates through the
+    same theta distinct-tuple frame as scalar aggregates, collecting
+    per-tuple (set, had-NULL, count) columns; the predicate compiles
+    as the unchanged ``in_set`` / ``{cmp} {quant}_set`` ops.
+    Hand-verified over PLAN_ROWS (by price: 1 trial, 2 basic, 5 NULL,
+    7 pro, 8 pro, 8 NULL, 10 basic)."""
 
     _run = TestGolden._run
 
@@ -1160,3 +1161,170 @@ class TestIneqSetValidation:
                 "(SELECT p2.plan FROM tool_plans p2 "
                 "WHERE p2.price < tool_plans.price)",
             )
+
+    @pytest.mark.parametrize(
+        "query",
+        [
+            "SELECT price FROM tool_plans WHERE tool = :tool AND "
+            "plan NOT IN (SELECT p2.plan FROM tool_plans p2 "
+            "WHERE p2.price < tool_plans.price)",
+            "SELECT price FROM tool_plans WHERE tool = :tool AND "
+            "price >= ALL (SELECT p2.price FROM tool_plans p2 "
+            "WHERE p2.qty < tool_plans.qty)",
+            "SELECT price FROM tool_plans WHERE tool = :tool AND EXISTS "
+            "(SELECT 1 FROM tool_plans p2 WHERE p2.plan = tool_plans.plan "
+            "AND p2.qty IN (SELECT p3.qty FROM tool_plans p3 "
+            "WHERE p3.price > p2.price))",
+        ],
+        ids=["not_in", "quantified", "nested_in"],
+    )
+    def test_ineq_set_group_cap(self, spark, monkeypatch, query):
+        # the per-correlation-tuple value set honors _IN_SUBQUERY_CAP
+        # like an equality-correlated group (TestValidation), top-level
+        # and nested alike
+        from logstash_filter_jdbc_static_spark.operators import lookup as L
+
+        monkeypatch.setattr(L, "_IN_SUBQUERY_CAP", 1)
+        with pytest.raises(ValidationError, match="correlation group"):
+            self._compile(spark, query)
+
+
+class TestIneqCorrelationLaziness:
+    """Building a lookup whose subqueries correlate to the outer row by
+    inequalities starts no Spark job: the per-correlation-tuple frame
+    is a lazy plan, joined back with a broadcast, and nothing is
+    checkpointed or collected before the first apply()."""
+
+    @pytest.mark.parametrize(
+        "query",
+        [
+            # rank count (TestIneqScalarGolden)
+            "SELECT price AS price, "
+            "(SELECT count(*) FROM tool_plans p2 "
+            "WHERE p2.plan = tool_plans.plan "
+            "AND p2.price < tool_plans.price) AS nc "
+            "FROM tool_plans WHERE tool = :tool",
+            # pareto frontier: two inequalities under NOT EXISTS
+            "SELECT price FROM tool_plans WHERE tool = :tool "
+            "AND NOT EXISTS (SELECT 1 FROM tool_plans p2 "
+            "WHERE p2.price > tool_plans.price "
+            "AND p2.qty > tool_plans.qty)",
+            # nested inequality scalar and EXISTS inside an
+            # equality-correlated scalar (TestNestedIneqCorrelations)
+            "SELECT price FROM tool_plans WHERE tool = :tool AND price <= "
+            "(SELECT sum(p2.price) FROM tool_plans p2 "
+            "WHERE p2.plan = tool_plans.plan "
+            "AND NOT EXISTS (SELECT 1 FROM tool_plans p3 "
+            "WHERE p3.price > p2.price AND p3.qty > p2.qty) "
+            "AND p2.qty > (SELECT min(p4.qty) FROM tool_plans p4 "
+            "WHERE p4.price < p2.price))",
+        ],
+        ids=["rank_count", "pareto_not_exists", "nested_scalar"],
+    )
+    def test_construction_starts_no_job(self, spark, query):
+        spec = PipelineSpec(
+            lookups=[{"id": "x", "query": query,
+                      "parameters": {"tool": "tool"}}]
+        )
+        dims = {"tool_plans": spark.createDataFrame(PLAN_ROWS, PLAN_SCHEMA)}
+        tracker = spark.sparkContext.statusTracker()
+        before = tracker.getJobIdsForGroup(None)
+        LookupEnricher(spec, dims)
+        after = tracker.getJobIdsForGroup(None)
+        assert len(after) == len(before), "lookup construction ran a Spark job"
+
+
+# NULL in the inequality columns: the two "n0" rows share one outer
+# correlation tuple (basic, NULL, NULL), which compares unknown against
+# every sub row and so reads as the EMPTY group.
+NULL_ROWS = [
+    ("n0", None, None, "basic"),
+    ("n0", None, None, "basic"),
+    ("n1", 4, 5, "basic"),
+    ("n1", 9, 1, "basic"),
+    ("n2", 6, 2, "pro"),
+]
+NULL_SCHEMA = T.StructType(
+    [
+        T.StructField("tool", T.StringType(), False),
+        T.StructField("price", T.IntegerType(), True),
+        T.StructField("qty", T.IntegerType(), True),
+        T.StructField("plan", T.StringType(), True),
+    ]
+)
+
+
+@pytest.mark.parametrize("kw", ENGINES)
+class TestIneqNullOuterGolden:
+    """A NULL outer column under an inequality correlation, checked row
+    by row against the oracle: count 0, sum NULL, EXISTS FALSE and
+    NOT IN TRUE for each of the two rows of the shared NULL tuple."""
+
+    def _run(self, spark, kw, query):
+        from logstash_filter_jdbc_static_spark import oracle
+
+        lookup = {"id": "x", "query": query, "parameters": {"tool": "tool"}}
+        tools = ("n0", "n1", "n2")
+        facts = spark.createDataFrame([(t,) for t in tools], "tool: string")
+        out = LookupEnricher(
+            PipelineSpec(lookups=[dict(lookup)]),
+            {"tool_plans": spark.createDataFrame(NULL_ROWS, NULL_SCHEMA)},
+            **kw,
+        ).apply(facts)
+        got = {
+            r["tool"]: sorted(
+                (tuple(d.asDict().values()) for d in r["x"]), key=repr
+            )
+            for r in out.collect()
+        }
+        tables = {
+            "tool_plans": [
+                dict(zip(("tool", "price", "qty", "plan"), r))
+                for r in NULL_ROWS
+            ]
+        }
+        for tool in tools:
+            ev = {"tool": tool}
+            oracle.enhance(
+                ev, PipelineSpec(lookups=[dict(lookup)]), tables
+            )
+            exp = sorted((tuple(d.values()) for d in ev["x"]), key=repr)
+            assert got[tool] == exp, f"{tool}: {got[tool]} != {exp}"
+        return got
+
+    def test_scalar_count_zero_and_sum_null(self, spark, kw):
+        got = self._run(
+            spark, kw,
+            "SELECT price AS price, "
+            "(SELECT count(*) FROM tool_plans p2 "
+            "WHERE p2.plan = tool_plans.plan "
+            "AND p2.price < tool_plans.price) AS nc, "
+            "(SELECT sum(p2.price) FROM tool_plans p2 "
+            "WHERE p2.plan = tool_plans.plan "
+            "AND p2.price < tool_plans.price) AS sm "
+            "FROM tool_plans WHERE tool = :tool",
+        )
+        assert got["n0"] == [(None, 0, None), (None, 0, None)]
+        assert got["n1"] == [(4, 0, None), (9, 1, 4)]
+
+    def test_two_inequality_exists_false(self, spark, kw):
+        q = (
+            "SELECT price AS price FROM tool_plans WHERE tool = :tool "
+            "AND {} (SELECT 1 FROM tool_plans p2 "
+            "WHERE p2.price > tool_plans.price "
+            "AND p2.qty > tool_plans.qty)"
+        )
+        got = self._run(spark, kw, q.format("EXISTS"))
+        assert got["n0"] == []
+        # FALSE, not UNKNOWN: NOT EXISTS keeps both rows
+        got = self._run(spark, kw, q.format("NOT EXISTS"))
+        assert got["n0"] == [(None,), (None,)]
+
+    def test_not_in_empty_set_true(self, spark, kw):
+        got = self._run(
+            spark, kw,
+            "SELECT price AS price FROM tool_plans WHERE tool = :tool "
+            "AND plan NOT IN (SELECT p2.plan FROM tool_plans p2 "
+            "WHERE p2.price < tool_plans.price)",
+        )
+        assert got["n0"] == [(None,), (None,)]

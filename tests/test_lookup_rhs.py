@@ -522,8 +522,8 @@ class TestCorrelatedSubquery:
     def test_non_equi_correlation_accepted(self):
         # round-5 late: plain inequality correlations are accepted in
         # scalar subqueries (theta-join decorrelation); SEVERAL at
-        # once too, since round-5 latest — the rid theta join takes
-        # the whole conjunction
+        # once too, since round-5 latest — the per-tuple theta frame
+        # takes the whole conjunction
         q = parse_lookup_query(
             "SELECT name FROM t WHERE num > "
             "(SELECT avg(num) FROM u WHERE u.cat > t.cat)"
@@ -1507,7 +1507,7 @@ class TestCorrelatedHavingSubquery:
     @pytest.mark.parametrize("kw", ENGINES)
     def test_ineq_correlation_on_group_key_accepted(self, spark, kw):
         # round-5 latest: an inequality correlation whose outer column
-        # IS the group key — per-row rid-theta values coincide within
+        # IS the group key — per-tuple theta values coincide within
         # a group, so the hidden max carrier is exact (Derby-pinned)
         got = self._apply(
             spark,
@@ -1536,8 +1536,9 @@ class TestCorrelatedSetHavingSubquery:
     p2 WHERE p2.plan = t.plan)``) — Derby-legal when every correlated
     column (equality or inequality) is a grouping column (pinned
     natively in test_jdbc_derby.py). Spark-first: the per-group
-    (set, had-NULL, count) dim columns (in_group_cols_of — the rid
-    theta join for inequality correlations) ride into the payload as
+    (set, had-NULL, count) dim columns (in_group_cols_of — the
+    per-tuple theta frame for inequality correlations) ride into the
+    payload as
     hidden ``max(...) AS __hsq{k}`` carriers — exact, since the
     correlation keys are group keys — read by the HAVING filter's
     ``in_set`` / ``{cmp} {quant}_set`` ops and stripped afterward.
@@ -1619,7 +1620,7 @@ class TestCorrelatedSetHavingSubquery:
             "WHERE p2.plan < dim.plan)",
             kw,
         )
-        # INEQUALITY correlation on the group key (rid theta path):
+        # INEQUALITY correlation on the group key (per-tuple theta):
         # basic -> plans < 'basic' = {} -> ANY FALSE; pro -> basic's
         # prices {10,4,20}, 7 >= 4 keeps; t2 pro mx 2 matches none
         assert got[0] == [(("plan", "pro"), ("mx", 7))]
@@ -2083,7 +2084,7 @@ class TestNestedCorrelatedSubqueries:
 
     def test_nested_ineq_correlation_accepted(self, spark):
         # round-5 latest: nested INEQUALITY correlations compile via
-        # the nested rid theta join (TestNestedIneqCorrelations has
+        # the per-tuple theta frame (TestNestedIneqCorrelations has
         # the value-level coverage)
         spec = PipelineSpec(
             lookups=[
@@ -2230,13 +2231,14 @@ class TestNestedIneqCorrelations:
     subqueries — ``p3.qty > p2.qty`` one level down, against the
     ENCLOSING subquery's relation. Derby evaluates the chain per
     outer row (lookup.rb:131-147); Spark-first each flavor
-    decorrelates via the nested rid THETA JOIN (_nested_theta_pairs):
-    pin the enclosing sub frame with a row id, pair it with matching
-    inner rows (hash join on any eq keys, inequality post-filter;
-    dim-sized nested loop without), aggregate per rid — scalar ->
-    per-rid aggregate, EXISTS -> witness flag, IN/quantified ->
-    per-rid (set, had-NULL, count) — then broadcast-join back. All
-    snapshot-time dim-sized work; the per-event plan stays the single
+    decorrelates through the theta distinct-tuple frame
+    (_join_outer_theta): the enclosing sub frame's distinct
+    correlation tuples pair with matching inner rows (hash join on any
+    eq keys, inequality post-filter; dim-sized nested loop without),
+    aggregate per tuple — scalar -> per-tuple aggregate, EXISTS ->
+    witness count > 0, IN/quantified -> per-tuple (set, had-NULL,
+    count) — then broadcast-join back. All dim-sized lazy plans; the
+    per-event plan stays the single
     broadcast-hash probe. Dim: t1 (10,3,basic) (4,9,basic) (7,2,pro)
     (5,4,NULL); t2 (20,1,basic) (2,5,pro)."""
 

@@ -514,7 +514,7 @@ class TestExprLookupPlans:
     def test_nested_ineq_uncorrelated_host_folds_to_literal(self, spark):
         # round-5 latest: a nested INEQUALITY correlation under an
         # UNCORRELATED top subquery still folds the whole chain to a
-        # snapshot literal — the nested rid theta join runs inside the
+        # snapshot literal — the nested per-tuple theta frame runs in the
         # driver-side _eval_subquery, never in the per-event plan
         plan = self._plan_for(
             spark,

@@ -132,7 +132,7 @@ WIDE_TEMPLATES = [
     "ip IN (SELECT ip FROM servers WHERE name = 'v1') OR ip = :ip",
     "ip = :ip AND ip NOT IN (SELECT ip FROM servers WHERE name = 'v9')",
     # round-5 late: INEQUALITY correlations in scalar subqueries —
-    # decorrelated via a snapshot-time theta join per pinned row id
+    # aggregated per distinct outer correlation tuple
     "length(ip) > (SELECT count(*) FROM servers s2 "
     "WHERE s2.ip < servers.ip)",
     "ip = :ip AND length(name) >= (SELECT count(*) FROM servers s2 "
@@ -190,8 +190,8 @@ WIDE_TEMPLATES = [
     "ip BETWEEN substr(name, 2, 1) AND :ip || name",
     "name = CASE WHEN ip = :ip THEN 'v1' ELSE name END AND ip IS NOT NULL",
     # round-5 latest: INEQUALITY correlations in [NOT] IN / quantified
-    # set subqueries — per-row value sets via the snapshot rid theta
-    # join (incl. the empty-set, NULL-in-set and mixed eq+ineq corners)
+    # set subqueries — value sets per distinct outer correlation tuple
+    # (incl. the empty-set, NULL-in-set and mixed eq+ineq corners)
     "ip IN (SELECT s2.ip FROM servers s2 WHERE s2.name < servers.name) "
     "OR ip = :ip",
     "ip = :ip AND name NOT IN (SELECT s2.name FROM servers s2 "
@@ -214,8 +214,8 @@ WIDE_TEMPLATES = [
     "length(name) > (SELECT count(*) FROM servers s2 "
     "WHERE s2.ip >= ALL (SELECT s3.ip FROM servers s3 "
     "WHERE s3.name = s2.name)) OR ip = :ip",
-    # round-5 latest: nested INEQUALITY correlations — the nested rid
-    # theta join (scalar / EXISTS / IN flavors)
+    # round-5 latest: nested INEQUALITY correlations — per enclosing
+    # correlation tuple (scalar / EXISTS / IN flavors)
     "ip = :ip AND ip <= (SELECT max(s2.ip) FROM servers s2 "
     "WHERE s2.ip >= (SELECT min(s3.ip) FROM servers s3 "
     "WHERE s3.ip < s2.ip))",
@@ -772,7 +772,7 @@ FULLQ_TEMPLATES = [
      "(SELECT max(name) FROM servers WHERE ip = :ip)",
      {"name": "dflt"}),
     # round-5 latest: SEVERAL inequality correlations (pareto
-    # dominance via the rid theta flag) in EXISTS and scalar shapes
+    # dominance via a per-tuple witness count) in EXISTS and scalar shapes
     ("SELECT name AS name FROM servers WHERE ip <= :ip AND NOT EXISTS "
      "(SELECT 1 FROM servers s2 WHERE s2.ip > servers.ip "
      "AND s2.name > servers.name)",
